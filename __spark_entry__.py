@@ -3,7 +3,8 @@
 The driver's verify runs ``entry(spark)`` as a smoke check, runs
 each ``queries()[name]`` at sf=0.01 and compares it against the
 matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+order-insensitive value-hash). ``queries()`` and ``oracle_sql()`` list
+the registry in registration order.
 
 Implementation lives in ``reconciliation_hive_data_spark``; every operator
 from SURVEY.md §2 registers itself into the query registry with its DuckDB

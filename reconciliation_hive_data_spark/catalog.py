@@ -98,11 +98,12 @@ _RELATION_CACHE_MAX = 512
 
 
 def _path_sig(path: str) -> tuple:
-    """Stat signature of a fixture path. For directory datasets the
-    per-entry stats ride along (a Spark overwrite rewrites part files in a
-    recreated dir, so either the dir inode or the entry list changes); the
-    entry walk is capped — past the cap we fall back to the dir stat alone,
-    which still catches the recreate-the-dir overwrite pattern."""
+    """Stat signature of a fixture path. For directory datasets it folds
+    the name, size and mtime of EVERY entry into one order-free digest, so
+    a part file rewritten in place (same name, so the dir mtime does not
+    move) changes the signature as surely as a recreated dir does. The
+    digest uses salted str hashes, so it is only comparable within one
+    process — which is all the in-process relation cache needs."""
     try:
         st = os.stat(path)
     except OSError:
@@ -110,14 +111,16 @@ def _path_sig(path: str) -> tuple:
         return ("missing",)
     if not os.path.isdir(path):
         return (st.st_mtime_ns, st.st_size)
-    entries: list[tuple] = []
-    for nm in sorted(os.listdir(path))[:64]:
-        try:
-            est = os.stat(os.path.join(path, nm))
-        except OSError:
-            continue
-        entries.append((nm, est.st_size, est.st_mtime_ns))
-    return (st.st_mtime_ns, tuple(entries))
+    count = digest = 0
+    with os.scandir(path) as it:
+        for entry in it:
+            try:
+                est = entry.stat()
+            except OSError:
+                continue
+            count += 1
+            digest ^= hash((entry.name, est.st_size, est.st_mtime_ns))
+    return (st.st_mtime_ns, count, digest)
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -186,9 +186,14 @@ class ReconPair:
                     ),
                 )
             )
+        # A keys-only pair has no arms; an untyped empty array is
+        # array<void>, whose fields cannot be extracted.
+        diffs = F.array(*arms) if arms else F.array().cast(
+            "array<struct<col_name:string,src_val:string,tgt_val:string>>"
+        )
         exploded = j.select(
             *[F.col(f"s.{k}").alias(k) for k in key],
-            F.explode(F.filter(F.array(*arms), lambda x: x.isNotNull())).alias("d"),
+            F.explode(F.filter(diffs, lambda x: x.isNotNull())).alias("d"),
         )
         return exploded.select(
             *key,

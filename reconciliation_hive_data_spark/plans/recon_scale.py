@@ -631,9 +631,9 @@ def _bh_bad(sd: DataFrame, td: DataFrame) -> DataFrame:
     the report's own join back), and without materialization each site
     re-inlines the whole two-scan digest subtree — recon_bucket_hash's
     physical plan carried 12 parquet scans where the algorithm needs 4
-    (r18 plan audit, plans/r18/recon_bucket_hash_before.txt). The frame is
-    bucket-bounded (≤ _BH_BUCKETS rows) at ANY data size, so the
-    checkpoint is metadata-sized and the digest tier runs exactly once.
+    (r18 plan audit). The frame is bucket-bounded (≤ _BH_BUCKETS rows) at
+    ANY data size, so the checkpoint is metadata-sized and the digest tier
+    runs exactly once.
 
     r19 note: the plain src-vs-tgt digest tier now goes through
     :func:`_bh_digest_both` (one union-tagged aggregate instead of two

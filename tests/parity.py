@@ -2,7 +2,7 @@
 row-count + column names + order-insensitive exact value compare.
 
 Stricter than the driver's value-hash (we compare full-precision cell
-values), so green here should imply green in CORRECTNESS_r{N}.json.
+values), so green here should imply green in the driver's check.
 """
 
 from __future__ import annotations

@@ -96,6 +96,30 @@ def test_bad_config_rejected(spark, sf_dir):
         ReconPair(orders, orders, ["nope"], {"o_totalprice": "double"})
 
 
+def test_keys_only_pair_runs_every_check(spark):
+    """With no compare columns every check still plans and runs; there
+    are no cells to compare, so cell_diff is empty but keeps its schema."""
+    pair = ReconPair(
+        source=spark.createDataFrame([(1,), (2,)], "k long"),
+        target=spark.createDataFrame([(2,), (3,)], "k long"),
+        keys=["k"],
+        compare_cols={},
+    )
+    for check in (
+        pair.row_counts,
+        pair.key_diff,
+        pair.duplicate_keys,
+        pair.row_hash_diff,
+        pair.fingerprints,
+        pair.summary,
+    ):
+        check().collect()
+    assert pair.key_diff().count() == 2
+    cells = pair.cell_diff()
+    assert cells.columns == ["k", "col_name", "src_val", "tgt_val"]
+    assert cells.count() == 0
+
+
 def test_drift_clean_and_faulty(spark, sf_dir, orders_pair):
     """Self-pair drifts exactly zero in every bucket; the faulty pair's
     +1.0 price drift on 0.1% of keys is sub-threshold (PSI stays under

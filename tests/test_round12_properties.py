@@ -417,8 +417,7 @@ def test_watermark_drops_late_rows_across_micro_batches(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# TPC-H differential fuzz — boundary-heavy synthetic tables (zero-slot
-# hardening: the tpch_* oracle rows are r9-stale until the r13 rotation)
+# TPC-H differential fuzz — boundary-heavy synthetic tables
 # ---------------------------------------------------------------------------
 
 from datetime import datetime, timedelta  # noqa: E402

@@ -63,7 +63,7 @@ def test_fn_hash_spark_crc_sha_match_python(spark, sf_dir):
 
 def test_rows_only_driver_counts_pinned(spark):
     """Rows-only-by-design queries are externally gated on row count
-    ALONE, and only every ~4 rounds of the rotation. Pin their sf0.01
+    ALONE. Pin their sf0.01
     counts (the driver's correctness scale) here so a silent row-count
     drift is caught by every pytest run in between: 720 for s_watermark's
     windowed sessions (byte-identical in every driver row since round 2).

@@ -16,7 +16,7 @@ registry.load_all_modules()
 
 
 def _survey_section2_ids() -> set[str]:
-    path = os.path.join(registry.repo_root(), "SURVEY.md")
+    path = os.path.join(os.path.dirname(os.path.dirname(__file__)), "SURVEY.md")
     with open(path) as fh:
         text = fh.read()
     sec2 = text.split("## §2.")[1].split("\n## ")[0]

@@ -4,8 +4,8 @@ shape (Exchange count, join strategies, Python-eval nodes, scan pushdown).
 Usage:
     python tools/plan_audit.py [before|after] [name1,name2,...]
 
-Writes plans/$RHDS_PLAN_ROUND/<name>_<tag>.txt per query (round dir defaults
-to r19) and prints one summary line per query:
+Writes plans/<name>_<tag>.txt per query (git-ignored) and prints one
+summary line per query:
 <name>  ex=<n exchanges>  bhj/smj/shj/bnl counts  py=<python nodes>.
 
 Building a query's DataFrame may itself run eager Spark jobs (several
@@ -59,7 +59,6 @@ def main() -> None:
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans",
-        os.environ.get("RHDS_PLAN_ROUND", "r19"),
     )
     os.makedirs(out_dir, exist_ok=True)
     todo = names or sorted(registry.REGISTRY)
