@@ -2,7 +2,7 @@
 row-count + column names + order-insensitive exact value compare.
 
 Stricter than the driver's value-hash (we compare full-precision cell
-values), so green here should imply green in the driver's check.
+values), so green here implies green under a value-hash compare.
 """
 
 from __future__ import annotations
