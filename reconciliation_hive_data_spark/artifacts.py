@@ -30,12 +30,15 @@ carries:
 
 from __future__ import annotations
 
+import atexit
 import fcntl
+import functools
 import hashlib
 import inspect
 import json
 import os
 import shutil
+import tempfile
 from collections.abc import Callable, Iterable
 
 from pyspark.sql import SparkSession
@@ -77,11 +80,30 @@ def warehouse_root(spark: SparkSession) -> str:
     ).removeprefix("file:")
 
 
+def _dir_key(sf_dir: str) -> str:
+    return hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
+
+
 def artifact_location(spark: SparkSession, sf_dir: str, kind: str) -> str:
     """Stable artifact path keyed by the absolute source dir, never its
     basename."""
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    return os.path.join(warehouse_root(spark), f"rhds_{kind}_{key}")
+    return os.path.join(warehouse_root(spark), f"rhds_{kind}_{_dir_key(sf_dir)}")
+
+
+@functools.cache
+def _sink_root() -> str:
+    root = tempfile.mkdtemp(prefix="rhds_sinks_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
+
+
+def sink_dir(sf_dir: str, name: str) -> str:
+    """Scratch path for a query's write-then-read-back sink (the opposite
+    of an artifact: rewritten on every call, never reused). It lives in
+    one per-process temp directory that is removed at exit, keyed by the
+    absolute source dir, so neither two processes nor two sf_dirs that
+    share a basename write the same path."""
+    return os.path.join(_sink_root(), _dir_key(sf_dir), name)
 
 
 def ensure_artifact(

@@ -26,6 +26,8 @@ round-6 corpus-analysis trio (``x_knn_graph``, ``x_token_pmi``,
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -847,9 +849,8 @@ def x_bpe_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     (crossJoin(broadcast) scalar convention); the top-20 is a
     deterministic total-order limit over a <=(27^2)-row frame. The <=20-row
     result is localCheckpoint-materialized so the cache releases eagerly.
-    At 100 TB the iterated-BPE driver persists the word table once and
-    replays merge rounds over it — each round is _bpe_report minus the
-    corpus scan."""
+    At 100 TB the iterated-BPE loop (x_bpe_rounds_n) persists the word
+    table once and runs one bounded pair histogram over it per round."""
     words = _bpe_words(load(spark, sf_dir, "documents")).persist()
     out = _bpe_report(words).localCheckpoint()
     words.unpersist()
@@ -961,93 +962,60 @@ FROM raw r
 _BPE_N_ORACLE = _bpe_n_oracle()
 
 
-def _bpe_best(pre: DataFrame) -> DataFrame:
-    """Deterministic argmax as a 1-ROW AGGREGATE (cnt DESC, then the
-    marker-space pair text ASC — a total order, since (s1, s2) is the
-    group key): ``min_by`` over (-cnt, s1, s2). The agg form (vs
-    orderBy.limit(1)) is load-bearing for degenerate corpora: a round with
-    NO pairs yields one NULL-fielded row, so the downstream
-    crossJoin-attach stays 1-row and earlier rounds' results survive
-    (a limit(1) empty frame would cascade-empty everything it touches)."""
-    return pre.agg(
-        F.min_by(
-            F.struct("s1", "s2", "cnt"),
-            F.struct((-F.col("cnt")).alias("nc"), F.col("s1"), F.col("s2")),
-        ).alias("b")
-    ).select(
-        F.col("b.s1").alias("s1"),
-        F.col("b.s2").alias("s2"),
-        F.col("b.cnt").alias("cnt"),
+def _bpe_histogram(marked: DataFrame) -> list[tuple[str, str, int]]:
+    """One round's statistic: the adjacent-pair histogram of the
+    marker-form word table, collected to the driver in election order
+    (cnt DESC, then s1, s2 ASC by code point — the oracle's binary
+    collation on this alphabet). The collect is bounded by the alphabet,
+    not the corpus: at most (26 + _BPE_N)² rows."""
+    rows = _bpe_pairs(marked, "word").agg(F.sum("wc").alias("cnt")).collect()
+    return sorted(
+        ((r.s1, r.s2, r.cnt) for r in rows), key=lambda p: (-p[2], p[0], p[1])
     )
 
 
-def _bpe_apply(cur: DataFrame, best: DataFrame, mark: str) -> DataFrame:
-    """Greedy left-to-right merge of the elected pair in marker space —
-    ``replace`` over the 2-char marker-form pair (the §7.6.4 risk note:
-    round ≥ 2 pairs have multi-char EXPANDED sides, but in marker space
-    every symbol is one char, so single-string replace stays exact). A
-    NULL election (no pairs) coalesces to the never-matching sentinel,
-    making the round the identity instead of emptying the vocabulary."""
-    return cur.crossJoin(F.broadcast(best)).select(
-        F.expr(
-            f"replace(word, coalesce(concat(s1, s2), '{_BPE_SENTINEL}'),"
-            f" '{mark}')"
-        ).alias("word"),
-        "wc",
+def _bpe_merge_col(word: F.Column, merges: list) -> F.Column:
+    """Greedy left-to-right application of the elected merges in round
+    order: each 2-char marker-space pair text becomes its round's marker
+    chr(k) (in marker space every symbol is one char, so single-string
+    replace stays exact for merged-symbol sides). An empty election
+    (None) is the identity."""
+    for k, m in enumerate(merges, 1):
+        if m is not None:
+            word = F.replace(word, F.lit(m[0] + m[1]), F.lit(chr(k)))
+    return word
+
+
+def _bpe_marked(words: DataFrame, merges: list) -> DataFrame:
+    """The word table in marker form after ``merges``."""
+    return words.select(
+        _bpe_merge_col(F.col("word"), merges).alias("word"), "wc"
     )
 
 
-def _bpe_learn(
-    words: DataFrame,
-) -> tuple[DataFrame, list[DataFrame], list[DataFrame]]:
+def _bpe_learn(words: DataFrame) -> list:
     """Run the _BPE_N merge rounds over the (already persisted) word
-    table. Returns (final marker-form table — persisted, every caller has
-    at least one downstream consumer pair —, the per-round 1-row election
-    frames, the list of every frame this call persisted so the caller can
-    unpersist after materializing its report)."""
-    cached: list[DataFrame] = []
-    bests: list[DataFrame] = []
-    cur = words
-    for k in range(1, _BPE_N + 1):
-        pre = _bpe_pairs(cur, "word").agg(F.sum("wc").alias("cnt"))
-        best = _bpe_best(pre).persist()
-        bests.append(best)
-        cached.append(best)
-        cur = _bpe_apply(cur, best, chr(k)).persist()
-        cached.append(cur)
-    return cur, bests, cached
+    table. Each round runs one aggregate, the pair histogram of ``words``
+    with the merges so far applied as a literal replace chain, and
+    collects it to the driver (bounded by the alphabet, not the corpus);
+    its head is the election, and the driver plans the next round from
+    it, so no election frame is ever joined back into a plan. Returns the
+    per-round elections, (s1, s2, cnt) in marker space, or None for a
+    round with no pairs."""
+    merges: list = []
+    for _ in range(_BPE_N):
+        hist = _bpe_histogram(_bpe_marked(words, merges))
+        merges.append(hist[0] if hist else None)
+    return merges
 
 
-def _bpe_attach_expansions(df: DataFrame, bests: list[DataFrame]) -> DataFrame:
-    """Broadcast-attach each round's merged-pair text (e1..e{N}) so
-    _bpe_expand_col can rewrite marker chars back to letter text (and
-    bpe_pack_plan's vmap can re-apply the merges forward).
-
-    1-ROW CONTRACT (ADVICE r17): every frame in ``bests`` must be exactly
-    one row — _bpe_best's aggregate form guarantees it (a no-pairs round
-    yields one NULL-fielded row, never an empty frame). The crossJoin
-    attach relies on it: a 0-row election would cascade-empty every
-    consumer silently, and a multi-row one would duplicate them. All
-    election attaches go through THIS helper so the invariant lives in
-    one place; don't swap _bpe_best to a limit(1)-style election."""
-    for k, b in enumerate(bests, 1):
-        df = df.crossJoin(
-            F.broadcast(b.select(F.concat("s1", "s2").alias(f"e{k}")))
-        )
-    return df
-
-
-def _bpe_expand_col(col: str) -> F.Column:
-    """Marker → letter-text expansion (reverse marker order; a NULL
-    election coalesces to the never-matching sentinel)."""
-    x = F.col(col)
-    for k in range(_BPE_N, 0, -1):
-        x = F.replace(
-            x,
-            F.lit(chr(k)),
-            F.coalesce(F.col(f"e{k}"), F.lit(_BPE_SENTINEL)),
-        )
-    return x
+def _bpe_expand(sym: str, merges: list) -> str:
+    """Marker → letter text, in reverse marker order (a later merge's
+    sides may contain earlier markers)."""
+    for k in range(len(merges), 0, -1):
+        if merges[k - 1] is not None:
+            sym = sym.replace(chr(k), merges[k - 1][0] + merges[k - 1][1])
+    return sym
 
 
 @query("x_bpe_rounds_n", oracle=_BPE_N_ORACLE)
@@ -1067,48 +1035,31 @@ def x_bpe_rounds_n(spark: SparkSession, sf_dir: str) -> DataFrame:
     since later merges' definitions reference earlier markers).
 
     Scale shape: the corpus-sized work is ONE explode + word count into
-    the persisted zipf-small vocabulary table (x_bpe_round's contract);
-    each round's marker-form table is persisted because it feeds two
-    consumers (the next election's pair counts and the next merge
-    application), every pair count is a map-side-combinable SUM, each
-    election is a 1-row aggregate broadcast-attached, and the report is
-    a ≤ 23-row frame materialized by localCheckpoint before the caches
-    release. This is the real tokenizer-construction loop at fixed N —
-    at 100 TB the driver replays rounds over the persisted word table
-    and the corpus is never re-read."""
+    the persisted zipf-small vocabulary table (x_bpe_round's contract).
+    Each round is then one map-side-combinable pair-count aggregate over
+    that table, with the earlier merges applied as a literal replace
+    chain, and the driver collects it and elects the winner: the
+    histogram is bounded by the alphabet ((26 + 3)² rows), whatever the
+    corpus size, so the collect is the stage-boundary statistic the next
+    round is planned from. A fourth histogram gives the top-20, and the
+    ≤ 23-row report is built on the driver — 4 aggregates per call, and
+    at 100 TB the corpus is still read once."""
     words = _bpe_words(load(spark, sf_dir, "documents")).persist()
-    cur, bests, cached = _bpe_learn(words)
-    cached.append(words)
-    post = _bpe_pairs(cur, "word").agg(F.sum("wc").alias("cnt"))
-    w = Window.orderBy(
-        F.col("cnt").desc(), F.col("s1").asc(), F.col("s2").asc()
+    merges = _bpe_learn(words)
+    post = _bpe_histogram(_bpe_marked(words, merges))
+    words.unpersist()
+    rows = [
+        ("merge", k, m[0], m[1], m[2])
+        for k, m in enumerate(merges, 1)
+        if m is not None
+    ] + [("pair", rn, *p) for rn, p in enumerate(post[:20], 1)]
+    return spark.createDataFrame(
+        [
+            (kind, rn, _bpe_expand(s1, merges), _bpe_expand(s2, merges), cnt)
+            for kind, rn, s1, s2, cnt in rows
+        ],
+        "kind string, rn bigint, s1 string, s2 string, cnt bigint",
     )
-    pairs20 = (
-        post.withColumn("rn", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rn") <= 20)
-        .select(F.lit("pair").alias("kind"), "rn", "s1", "s2", "cnt")
-    )
-    merges = None
-    for k, b in enumerate(bests, 1):
-        r = b.filter(F.col("s1").isNotNull()).select(
-            F.lit("merge").alias("kind"),
-            F.lit(k).cast("bigint").alias("rn"),
-            "s1",
-            "s2",
-            "cnt",
-        )
-        merges = r if merges is None else merges.unionByName(r)
-    raw = _bpe_attach_expansions(merges.unionByName(pairs20), bests)
-    out = raw.select(
-        "kind",
-        "rn",
-        _bpe_expand_col("s1").alias("s1"),
-        _bpe_expand_col("s2").alias("s2"),
-        F.col("cnt").cast("bigint").alias("cnt"),
-    ).localCheckpoint()
-    for c in cached:
-        c.unpersist()
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -1173,17 +1124,20 @@ def x_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the shingles3 abort class).
 
     Scale shape: the learn loop is x_bpe_rounds_n's (one corpus scan into
-    the persisted word table, vocab-sized rounds); tokenization adds ONE
-    more vocab-sized explode (symbols per marker word) into a
-    map-side-combinable count over a <=29-symbol frame — the corpus is
-    still read once. Both stats are 1-row aggregates over persisted
-    vocab-sized tables; the report is <=22 rows, localCheckpoint-
-    materialized before the caches release."""
+    the persisted word table, one bounded pair histogram per round);
+    tokenization adds ONE more vocab-sized explode (symbols per marker
+    word) into a map-side-combinable count whose result is bounded by the
+    alphabet (<= 26 letters + 3 markers), collected to the driver. The
+    report is built there: both stats follow from that histogram
+    (total_tokens is its sum; total_chars weights each symbol by its
+    expanded length, since expansion restores every word's text), and
+    the <=22 rows go back as a local frame — the corpus is still read
+    once."""
     words = _bpe_words(load(spark, sf_dir, "documents")).persist()
-    cur, bests, cached = _bpe_learn(words)
-    cached.append(words)
+    merges = _bpe_learn(words)
     syms = (
-        cur.select(
+        _bpe_marked(words, merges)
+        .select(
             "wc",
             F.explode(
                 F.expr(
@@ -1194,45 +1148,24 @@ def x_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("sym")
         .agg(F.sum("wc").alias("cnt"))
+        .collect()
     )
-    tokx = (
-        _bpe_attach_expansions(syms, bests)
-        .select(_bpe_expand_col("sym").alias("token"), "cnt")
-        .groupBy("token")
-        .agg(F.sum("cnt").alias("cnt"))
+    words.unpersist()
+    tokens: Counter = Counter()
+    total_chars = 0
+    for r in syms:
+        token = _bpe_expand(r.sym, merges)
+        tokens[token] += r.cnt
+        total_chars += len(token) * r.cnt
+    top = sorted(tokens.items(), key=lambda t: (-t[1], t[0]))[:20]
+    return spark.createDataFrame(
+        [("token", rn, tok, cnt) for rn, (tok, cnt) in enumerate(top, 1)]
+        + [
+            ("stat", 0, "total_tokens", sum(tokens.values())),
+            ("stat", 0, "total_chars", total_chars),
+        ],
+        "kind string, rn bigint, token string, cnt bigint",
     )
-    w = Window.orderBy(F.col("cnt").desc(), F.col("token").asc())
-    top = (
-        tokx.withColumn("rn", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rn") <= 20)
-        .select(
-            F.lit("token").alias("kind"),
-            "rn",
-            "token",
-            F.col("cnt").cast("bigint").alias("cnt"),
-        )
-    )
-
-    def stat(df: DataFrame, label: str) -> DataFrame:
-        return df.agg(
-            F.coalesce(F.sum(F.length("word") * F.col("wc")), F.lit(0))
-            .cast("bigint")
-            .alias("cnt")
-        ).select(
-            F.lit("stat").alias("kind"),
-            F.lit(0).cast("bigint").alias("rn"),
-            F.lit(label).alias("token"),
-            "cnt",
-        )
-
-    out = (
-        top.unionByName(stat(cur, "total_tokens"))
-        .unionByName(stat(words, "total_chars"))
-        .localCheckpoint()
-    )
-    for c in cached:
-        c.unpersist()
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -1298,20 +1231,12 @@ def bpe_pack_plan(docs: DataFrame, cap: int = _BPE_PACK_CAP) -> DataFrame:
     _BPE_N merges over ``docs``, token-count each doc POST-BPE, pack by
     cumulative-sum binning at ``cap`` tokens per sequence."""
     words = _bpe_words(docs).persist()
-    _cur, bests, cached = _bpe_learn(words)
-    cached.append(words)
-    # election frames attach via the shared helper (ADVICE r17): the 1-row
-    # contract documented there is what keeps this vmap from silently
-    # cascade-emptying; the merges then re-apply FORWARD (round order,
-    # pair text -> marker char) to measure each word's post-BPE length
-    vmap = _bpe_attach_expansions(words.select("word"), bests)
-    m = F.col("word")
-    for k in range(1, len(bests) + 1):
-        m = F.replace(
-            m, F.coalesce(F.col(f"e{k}"), F.lit(_BPE_SENTINEL)), F.lit(chr(k))
-        )
-    vmap = vmap.select("word", F.length(m).alias("toklen"))
-    occ = (
+    merges = _bpe_learn(words)
+    words.unpersist()
+    # each occurrence's post-BPE length: the elected merges re-applied
+    # forward as a literal replace chain, the same projection the rounds
+    # ran over the word table
+    dt = (
         docs.select(
             "doc_id",
             F.explode(
@@ -1321,13 +1246,12 @@ def bpe_pack_plan(docs: DataFrame, cap: int = _BPE_PACK_CAP) -> DataFrame:
                 )
             ).alias("word"),
         )
-        .groupBy("doc_id", "word")
-        .agg(F.count("*").alias("oc"))
-    )
-    dt = (
-        occ.join(vmap, "word")
         .groupBy("doc_id")
-        .agg(F.sum(F.col("oc") * F.col("toklen")).alias("n_tok"))
+        .agg(
+            F.sum(F.length(_bpe_merge_col(F.col("word"), merges))).alias(
+                "n_tok"
+            )
+        )
     )
     shard = (
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
@@ -1349,7 +1273,7 @@ def bpe_pack_plan(docs: DataFrame, cap: int = _BPE_PACK_CAP) -> DataFrame:
         .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    out = (
+    return (
         t.withColumn("cum", F.sum("n_tok").over(w))
         .withColumn(
             "seq_id",
@@ -1362,11 +1286,7 @@ def bpe_pack_plan(docs: DataFrame, cap: int = _BPE_PACK_CAP) -> DataFrame:
             F.count("*").alias("n_docs"),
             F.sum("n_tok").cast("bigint").alias("seq_tokens"),
         )
-        .localCheckpoint()
     )
-    for c in cached:
-        c.unpersist()
-    return out
 
 
 @query("x_bpe_pack", oracle=_BPE_PACK_ORACLE)
@@ -1380,30 +1300,30 @@ def x_bpe_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     in model tokens, and merge compression changes which documents share
     a sequence.
 
-    Per-doc token count = per-(doc, word) occurrence counts joined to the
-    vocab-sized word→marker-length map derived from the SAME elections as
-    the learn loop (shared ``_bpe_learn`` frames; the oracle reuses the
-    shared rounds-CTE prefix, so the two engines cannot drift on the
-    merges — the x_bpe_apply precedent). The per-doc tokenizer is
-    ``_bpe_words``' exact extract-then-lower form (the r15 'İ' lesson:
-    lower() of a pure [a-zA-Z]+ token is engine-invariant; pre-lowering
-    is not). Docs with ZERO extractable words (or NULL text) survive via
-    the left join + COALESCE 0 — they consume no capacity but still
-    appear in packing on both engines, and a 0-token doc whose running
-    total sits exactly ON a cap boundary lands in the NEXT sequence
-    (floor(cum/cap); r16 DuckDB probe pin, cum=4 cap=4 → seq 1).
+    Per-doc token count = the sum, over the doc's word occurrences, of
+    each word's marker-form length under the SAME elections as the learn
+    loop (``_bpe_learn``'s merges re-applied as a literal replace chain;
+    the oracle reuses the shared rounds-CTE prefix, so the two engines
+    cannot drift on the merges — the x_bpe_apply precedent). The per-doc
+    tokenizer is ``_bpe_words``' exact extract-then-lower form (the r15
+    'İ' lesson: lower() of a pure [a-zA-Z]+ token is engine-invariant;
+    pre-lowering is not). Docs with ZERO extractable words (or NULL text)
+    survive via the left join + COALESCE 0 — they consume no capacity but
+    still appear in packing on both engines, and a 0-token doc whose
+    running total sits exactly ON a cap boundary lands in the NEXT
+    sequence (floor(cum/cap); r16 DuckDB probe pin, cum=4 cap=4 → seq 1).
 
     Scale shape: the learn loop is x_bpe_rounds_n's (one corpus scan into
-    the persisted zipf-small word table, vocab-sized rounds); this op
-    adds ONE more corpus-sized explode (per-doc word occurrences) into a
-    map-side-combinable count, a word-keyed join against the vocab-sized
-    marker-length map (broadcast under the threshold — AQE decides from
-    runtime sizes, no forced hint per ADVICE r16), and x_pack_sequences'
-    one exchange on the (lang, md5-mod-16 shard) composite window key —
-    the 5-language skew funnel stays defeated, no global sort. Determinism
-    precondition (r16 window-ordering audit, same as x_pack_sequences):
-    doc_id is the table's unique non-null key, so the ROWS-frame cumsum
-    ordering is total. Core lives in :func:`bpe_pack_plan` — tests drive
+    the persisted zipf-small word table, one driver-collected pair
+    histogram per round, bounded by the alphabet); once the merges are
+    elected the rest is one lazy plan: ONE more corpus-sized explode
+    (per-doc word occurrences) into a map-side-combinable per-doc sum of
+    replace-chain lengths — a projection, no join against the vocabulary
+    — and x_pack_sequences' one exchange on the (lang, md5-mod-16 shard)
+    composite window key — the 5-language skew funnel stays defeated, no
+    global sort. Determinism precondition (r16 window-ordering audit, same
+    as x_pack_sequences): doc_id is the table's unique non-null key, so
+    the ROWS-frame cumsum ordering is total. Core lives in :func:`bpe_pack_plan` — tests drive
     it with synthetic corpora for the independent-expectation pins
     (pure-Python BPE + packing replica, boundary zoo)."""
     return bpe_pack_plan(load(spark, sf_dir, "documents"))

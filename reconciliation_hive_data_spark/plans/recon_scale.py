@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..artifacts import sink_dir
 from ..canonical import (
     MONEY_SCALE,
     canonical_row_hash,
@@ -1449,15 +1450,11 @@ def recon_schema_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     fails loudly on conflicting types — pinned in
     tests/test_round15_schema_evolve.py — and auditing a type migration
     needs a cast-on-read plan, a different tool)."""
-    import os
     import shutil
 
     from pyspark.errors import AnalysisException
 
-    root = (
-        f"/tmp/rhds_sinks/{os.path.basename(sf_dir.rstrip('/'))}"
-        "/orders_vintages"
-    )
+    root = sink_dir(sf_dir, "orders_vintages")
     shutil.rmtree(root, ignore_errors=True)
     src = load(spark, sf_dir, "orders")
     even = F.pmod(F.col("o_orderkey"), 2) == 0
@@ -1629,15 +1626,11 @@ def recon_partition_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs on two months-sized frames. Out of scope, documented: years
     outside 1000-9999 (the two engines' year formatting/padding diverges
     there, and 'yyyy-MM' string order stops being chronological)."""
-    import os
     import shutil
 
     from pyspark.errors import AnalysisException
 
-    root = (
-        f"/tmp/rhds_sinks/{os.path.basename(sf_dir.rstrip('/'))}"
-        "/orders_part_layouts"
-    )
+    root = sink_dir(sf_dir, "orders_part_layouts")
     shutil.rmtree(root, ignore_errors=True)
     src = load(spark, sf_dir, "orders")
     even = F.pmod(F.col("o_orderkey"), 2) == 0
@@ -1800,15 +1793,11 @@ def recon_layout_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     month-grain full-outer join runs on two months-sized aggregates. At
     100 TB this is the audit that prices the migration: the v1 column IS
     the scan amplification every month-scoped query pays until cutover."""
-    import os
     import shutil
 
     from pyspark.errors import AnalysisException
 
-    root = (
-        f"/tmp/rhds_sinks/{os.path.basename(sf_dir.rstrip('/'))}"
-        "/orders_layout_compact"
-    )
+    root = sink_dir(sf_dir, "orders_layout_compact")
     shutil.rmtree(root, ignore_errors=True)
     src = load(spark, sf_dir, "orders")
     v1w = src.withColumn("shard", F.pmod("o_orderkey", F.lit(_LC_SHARDS)))
@@ -1973,15 +1962,11 @@ def recon_compact_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined at month grain; n_files_kept is a months×files-sized distinct
     pair intersection. Out of scope (family convention, documented at
     recon_partition_evolve): years outside 1000-9999."""
-    import os
     import shutil
 
     from pyspark.errors import AnalysisException
 
-    root = (
-        f"/tmp/rhds_sinks/{os.path.basename(sf_dir.rstrip('/'))}"
-        "/orders_compact_incremental"
-    )
+    root = sink_dir(sf_dir, "orders_compact_incremental")
     shutil.rmtree(root, ignore_errors=True)
     src = load(spark, sf_dir, "orders")
     month = F.date_format("o_orderdate", "yyyy-MM")
@@ -2084,7 +2069,7 @@ def recon_compact_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise("STABLE")
         .alias("verdict"),
         # months-sized; materialize NOW (ADVICE r17): the result reads the
-        # shared /tmp sink lazily, and a subsequent invocation against the
-        # same sf basename rmtrees/rewrites that sink — an unevaluated
-        # report would otherwise see the later run's files
+        # sink lazily, and a subsequent invocation against the same sf_dir
+        # rmtrees/rewrites that sink — an unevaluated report would
+        # otherwise see the later run's files
     ).localCheckpoint()

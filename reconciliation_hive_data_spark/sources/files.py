@@ -3,8 +3,9 @@
 scan_parquet/scan_pruned are the read path every other operator builds on —
 scan_pruned exists specifically so `.explain` shows PushedFilters +
 ReadSchema pruning (verified in tests/test_plans.py). Sinks write under
-/tmp (unique per sf) and return the read-back DataFrame so the driver's
-rows-only check observes the round trip, not just the write call.
+``artifacts.sink_dir`` (per process and per sf) and return the read-back
+DataFrame so the driver's rows-only check observes the round trip, not
+just the write call.
 """
 
 from __future__ import annotations
@@ -14,16 +15,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..artifacts import ensure_artifact
+from ..artifacts import ensure_artifact, sink_dir
 from ..catalog import load
 from ..registry import query
-
-_TMP = "/tmp/rhds_sinks"
-
-
-def _sink_dir(sf_dir: str, name: str) -> str:
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    return f"{_TMP}/{tag}/{name}"
 
 
 # ---------------------------------------------------------------------------
@@ -89,8 +83,8 @@ def scan_csv_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     null fields are omitted on write and read back as NULL under the
     explicit schema)."""
     n = load(spark, sf_dir, "nation")
-    csv_dir = _sink_dir(sf_dir, "nation_csv")
-    json_dir = _sink_dir(sf_dir, "nation_json")
+    csv_dir = sink_dir(sf_dir, "nation_csv")
+    json_dir = sink_dir(sf_dir, "nation_json")
     # The CSV hop carries sink_csv's hardened option set (r14 JSON-ingest
     # fuzz; supersedes the r13 "defaults fine for [A-Z ]+ names"
     # adjudication): the INGEST operator should round-trip arbitrary
@@ -189,7 +183,7 @@ def sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal the oracle's direct computation (full write/read fidelity)."""
     from ..plans.recon import recon_order_totals
 
-    out = _sink_dir(sf_dir, "order_totals_report")
+    out = sink_dir(sf_dir, "order_totals_report")
     recon_order_totals(spark, sf_dir).write.mode("overwrite").parquet(out)
     return (
         spark.read.parquet(out)
@@ -216,7 +210,7 @@ def sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     reconciliation drill-down unit) and a partition-pruned read-back:
     the filter on the partition column prunes directories, not rows; the
     pruned read-back must equal the direct filtered aggregate (oracle)."""
-    out = _sink_dir(sf_dir, "lineitem_by_flag")
+    out = sink_dir(sf_dir, "lineitem_by_flag")
     li = load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_quantity", "l_returnflag"
     )
@@ -274,7 +268,7 @@ def sink_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark writes shortest round-trip representations; the oracle computes
     directly on the original parquet, so any quoting/precision loss in
     the CSV hop fails the hash."""
-    out = _sink_dir(sf_dir, "events_csv")
+    out = sink_dir(sf_dir, "events_csv")
     ev = load(spark, sf_dir, "events").select(
         "event_id", "event_type", "value", "props"
     )
@@ -347,7 +341,7 @@ def scan_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     read-back set hash-matches the parquet-derived oracle exactly. At
     100 TB the same reader streams line-splittable shards in parallel —
     one task per 128 MB split, no footer required."""
-    path = _sink_dir(sf_dir, "text_docs")
+    path = sink_dir(sf_dir, "text_docs")
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     d.select(
         F.concat_ws("\t", F.col("doc_id").cast("string"), "text").alias("value")
@@ -385,7 +379,7 @@ def scan_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
     the file. At 100 TB: binaryFile gives (path, length, content) per
     file with one task per file — pair it with mapInPandas decoders
     (x_multimodal_binary) for the decode stage."""
-    path = _sink_dir(sf_dir, "binary_docs")
+    path = sink_dir(sf_dir, "binary_docs")
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     d.select(
         F.concat_ws("\t", F.col("doc_id").cast("string"), "text").alias("value")
@@ -495,7 +489,7 @@ def sink_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     bytes-per-file with target 128 MB–1 GB, and the verdict threshold
     gains a min-file-count guard so near-target partitions aren't
     rewritten for a 2-file win."""
-    out = _sink_dir(sf_dir, "lineitem_smallfiles")
+    out = sink_dir(sf_dir, "lineitem_smallfiles")
     li = load(spark, sf_dir, "lineitem").select(
         "l_orderkey",
         "l_quantity",

@@ -15,11 +15,10 @@ becomes foreachBatch → parquet (s_foreachbatch shows that path).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..artifacts import sink_dir
 from ..catalog import load
 from ..registry import query
 
@@ -476,9 +475,8 @@ def s_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-read output must carry every event exactly once (batch oracle)."""
     import shutil
 
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    out = f"/tmp/rhds_stream/{tag}/foreachbatch_out"
-    ckpt = f"/tmp/rhds_stream/{tag}/foreachbatch_ckpt"
+    out = sink_dir(sf_dir, "foreachbatch_out")
+    ckpt = sink_dir(sf_dir, "foreachbatch_ckpt")
     shutil.rmtree(out, ignore_errors=True)
     shutil.rmtree(ckpt, ignore_errors=True)
 
@@ -623,7 +621,7 @@ def s_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     reps sees the same two-step story."""
     import shutil
 
-    base = f"/tmp/rhds_sinks/{os.path.basename(sf_dir.rstrip('/'))}/ckpt_resume"
+    base = sink_dir(sf_dir, "ckpt_resume")
     src, sink, ckpt = f"{base}/src", f"{base}/sink", f"{base}/ckpt"
     shutil.rmtree(base, ignore_errors=True)
 

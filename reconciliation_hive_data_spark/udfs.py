@@ -38,8 +38,10 @@ def udf_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     a JVM↔Python round trip per batch of rows — present for surface
     completeness; everything else in this engine uses builtins."""
 
+    # no type hints: with an explicit return type, hints make PySpark
+    # try (and fail) to infer a pandas/arrow eval type and warn
     @F.udf(StringType())
-    def title_case(s: str) -> str:
+    def title_case(s):
         return s[:1].upper() + s[1:].lower() if s else s
 
     c = load(spark, sf_dir, "customer")

@@ -47,11 +47,19 @@ _READ_OPTS = {
 }
 
 
-def _roundtrip(spark, rows):
+@pytest.fixture(scope="module")
+def rt_root(tmp_path_factory):
+    """One pytest-managed directory per module; each round trip writes a
+    fresh subdirectory of it (the returned frames read lazily, and the
+    hypothesis tests call the helper once per example)."""
+    return tmp_path_factory.mktemp("csv_rt")
+
+
+def _roundtrip(spark, root, rows):
     df = spark.createDataFrame(
         rows, "event_id bigint, event_type string, value double, props string"
     )
-    d = tempfile.mkdtemp(prefix="rhds_csv_rt_") + "/out"
+    d = tempfile.mkdtemp(dir=root) + "/out"
     w = df.coalesce(1).write.mode("overwrite")
     for k, v in _WRITE_OPTS.items():
         w = w.option(k, v)
@@ -80,18 +88,18 @@ _PINNED_ROWS = [
 ]
 
 
-def test_sink_csv_options_roundtrip_hostile_content_exactly(spark):
-    orig, back = _roundtrip(spark, _PINNED_ROWS)
+def test_sink_csv_options_roundtrip_hostile_content_exactly(spark, rt_root):
+    orig, back = _roundtrip(spark, rt_root, _PINNED_ROWS)
     o = {r.event_id: (r.event_type, r.value, r.props) for r in orig.collect()}
     g = {r.event_id: (r.event_type, r.value, r.props) for r in back.collect()}
     assert o == g, {k: (o.get(k), g.get(k)) for k in set(o) | set(g)
                     if o.get(k) != g.get(k)}
 
 
-def test_sink_csv_null_sentinel_residue_is_exactly_the_documented_one(spark):
+def test_sink_csv_null_sentinel_residue_is_exactly_the_documented_one(spark, rt_root):
     """The ONLY infidelity is the documented \\N sentinel collision, and it
     maps to NULL (never to a phantom row or a wrong value)."""
-    orig, back = _roundtrip(spark, [(1, "sentinel", 1.0, "\\N")])
+    orig, back = _roundtrip(spark, rt_root, [(1, "sentinel", 1.0, "\\N")])
     rows = back.collect()
     assert len(rows) == 1 and rows[0].props is None
 
@@ -123,11 +131,11 @@ _ROWS = st.lists(
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(rows=_ROWS)
-def test_sink_csv_options_roundtrip_fuzzed_content(spark, rows):
+def test_sink_csv_options_roundtrip_fuzzed_content(spark, rt_root, rows):
     rows = [r for r in rows if r[3] != "\\N"]  # documented sentinel residue
     if not rows:
         rows = [(0, "click", 0.0, "x")]
-    orig, back = _roundtrip(spark, rows)
+    orig, back = _roundtrip(spark, rt_root, rows)
     o = {r.event_id: (r.event_type, r.value, r.props) for r in orig.collect()}
     g = {r.event_id: (r.event_type, r.value, r.props) for r in back.collect()}
     assert o == g, {k: (o.get(k), g.get(k)) for k in set(o) | set(g)

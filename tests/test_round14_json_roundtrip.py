@@ -31,11 +31,19 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 
-def _roundtrip_json(spark, rows):
+@pytest.fixture(scope="module")
+def rt_root(tmp_path_factory):
+    """One pytest-managed directory per module; each round trip writes a
+    fresh subdirectory of it (the returned frames read lazily, and the
+    hypothesis tests call the helper once per example)."""
+    return tmp_path_factory.mktemp("json_rt")
+
+
+def _roundtrip_json(spark, root, rows):
     """rows: (id, s) through the DEFAULT json write/read hop — exactly the
     options scan_csv_json's JSON half uses (none)."""
     df = spark.createDataFrame(rows, "id bigint, s string")
-    d = tempfile.mkdtemp(prefix="rhds_json_rt_") + "/out"
+    d = tempfile.mkdtemp(dir=root) + "/out"
     df.coalesce(1).write.mode("overwrite").json(d)
     return df, spark.read.schema("id bigint, s string").json(d)
 
@@ -64,8 +72,8 @@ _PINNED_ROWS = [
 ]
 
 
-def test_json_lines_roundtrip_hostile_content_exactly(spark):
-    orig, back = _roundtrip_json(spark, _PINNED_ROWS)
+def test_json_lines_roundtrip_hostile_content_exactly(spark, rt_root):
+    orig, back = _roundtrip_json(spark, rt_root, _PINNED_ROWS)
     o = {r.id: r.s for r in orig.collect()}
     g = {r.id: r.s for r in back.collect()}
     assert o == g, {k: (o.get(k), g.get(k)) for k in set(o) | set(g)
@@ -95,8 +103,8 @@ _ROWS = st.lists(
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(rows=_ROWS)
-def test_json_lines_roundtrip_is_identity_on_fuzzed_content(spark, rows):
-    orig, back = _roundtrip_json(spark, rows)
+def test_json_lines_roundtrip_is_identity_on_fuzzed_content(spark, rt_root, rows):
+    orig, back = _roundtrip_json(spark, rt_root, rows)
     o = {r.id: r.s for r in orig.collect()}
     g = {r.id: r.s for r in back.collect()}
     assert o == g

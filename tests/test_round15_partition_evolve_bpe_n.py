@@ -22,8 +22,8 @@ migration actually produces:
 
 x_bpe_rounds_n iterates x_bpe_round to N=3 with a marker PER merged
 symbol (chr(1..3)); its semantic edges are the no-merge-round identity
-(the 1-row NULL election must NOT cascade-empty earlier rounds' results)
-and marker-pair reformation ('aaaa' → round 2 elects (chr1, chr1), whose
+(an empty election must NOT cascade-empty earlier rounds' results) and
+marker-pair reformation ('aaaa' → round 2 elects (chr1, chr1), whose
 expansion is ('aa','aa')).
 """
 
@@ -199,13 +199,13 @@ def test_bpe_n_marker_pair_reformation(spark, tmp_path):
     assert merges[2] == ("aa", "aa")
 
 
-@pytest.mark.soak
 def test_bpe_n_merge_exhaustion_is_identity(spark, tmp_path):
     """A corpus whose vocabulary collapses before round 3 (every word is a
-    repeated two-letter run): later rounds elect NULL and must pass the
-    earlier rounds' results through — the 1-row-agg election guard (a
-    limit(1) empty frame would cascade-empty the whole report). Also the
-    no-pairs-at-all and empty corpora."""
+    repeated two-letter run): later rounds collect an empty pair
+    histogram, elect nothing, and must leave the word table and the
+    earlier rounds' merges as they are (the oracle's NULL election over
+    the never-matching sentinel). Also the no-pairs-at-all and empty
+    corpora."""
     d = str(tmp_path)
     # vocabulary {ab}: round 1 merges (a,b); marker words are then all
     # single-symbol -> rounds 2 and 3 have no pairs
@@ -251,31 +251,38 @@ def test_bpe_n_tiebreak_prefers_marker_pairs(spark, tmp_path):
     assert merges[2] == ("ab", "c")
 
 
-def test_bpe_n_single_corpus_scan(spark, sf_dir):
-    """Scale contract inherited from x_bpe_round: the corpus is read once
-    into the persisted word table; each round's marker table is cached for
-    its two consumers. Asserted on the lazy composition (the query fn
-    returns an eager localCheckpoint)."""
+def test_bpe_n_single_corpus_scan(spark, sf_dir, monkeypatch):
+    """Scale contract inherited from x_bpe_round: one x_bpe_rounds_n call
+    reads the corpus once, into the persisted word table, and every pair
+    histogram after that reads the cached words (its optimized plan has
+    no leaf but the InMemoryRelation). The driver election keeps fn() plus
+    the noop write at <= 11 Spark jobs: one collected aggregate per round,
+    one for the final top-20, and the write of the local report."""
     from reconciliation_hive_data_spark.catalog import load
-    from reconciliation_hive_data_spark.plans.corpus_ops import (
-        _bpe_apply,
-        _bpe_best,
-        _bpe_pairs,
-        _bpe_words,
-    )
+    from reconciliation_hive_data_spark.plans import corpus_ops
 
-    from .test_plans import plan
+    load(spark, sf_dir, "documents")  # schema inference is not fn()'s job
+    leaves = []
+    pairs = corpus_ops._bpe_pairs
 
-    words = _bpe_words(load(spark, sf_dir, "documents")).persist()
+    def spy(df, word_col):
+        plan = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+        leaves.append({plan.apply(i).nodeName() for i in range(plan.size())})
+        return pairs(df, word_col)
+
+    monkeypatch.setattr(corpus_ops, "_bpe_pairs", spy)
+    sc = spark.sparkContext
+    group = "test_bpe_n_single_corpus_scan"
+    sc.setJobGroup(group, group)
     try:
-        pre = _bpe_pairs(words, "word").agg(F.sum("wc").alias("cnt"))
-        best = _bpe_best(pre)
-        p = plan(_bpe_apply(words, best, "\x01"))
-        # both consumers (election + application) read the cached words
-        assert p.count("InMemoryTableScan") >= 2, p
-        assert "CartesianProduct" not in p
+        corpus_ops.x_bpe_rounds_n(spark, sf_dir).write.format("noop").mode(
+            "overwrite"
+        ).save()
     finally:
-        words.unpersist()
+        sc._jsc.clearJobGroup()
+    assert leaves == [{"InMemoryRelation"}] * (corpus_ops._BPE_N + 1)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 11, jobs
 
 
 # ---------------------------------------------------------------------------
