@@ -91,8 +91,9 @@ def artifact_location(spark: SparkSession, sf_dir: str, kind: str) -> str:
 
 
 @functools.cache
-def _sink_root() -> str:
-    root = tempfile.mkdtemp(prefix="rhds_sinks_")
+def process_tmp_root(prefix: str) -> str:
+    """One temp directory per process and ``prefix``, removed at exit."""
+    root = tempfile.mkdtemp(prefix=prefix)
     atexit.register(shutil.rmtree, root, ignore_errors=True)
     return root
 
@@ -103,7 +104,7 @@ def sink_dir(sf_dir: str, name: str) -> str:
     one per-process temp directory that is removed at exit, keyed by the
     absolute source dir, so neither two processes nor two sf_dirs that
     share a basename write the same path."""
-    return os.path.join(_sink_root(), _dir_key(sf_dir), name)
+    return os.path.join(process_tmp_root("rhds_sinks_"), _dir_key(sf_dir), name)
 
 
 def ensure_artifact(

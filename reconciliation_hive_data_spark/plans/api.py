@@ -4,11 +4,12 @@ The reference's central object is the reconciliation pair config: (source
 table, target table, key columns, compare columns) from which it generates
 every per-check query (SURVEY.md §1.1, genre-defining). This module is that
 config object for the Spark engine: a :class:`ReconPair` describes WHAT to
-reconcile; each method composes the corresponding distributed check from
-operators in :mod:`plans.recon`'s style and returns a report DataFrame.
-
-The named queries in plans/recon.py are fixed instantiations kept for the
-oracle harness; users reconcile their own tables through this API::
+reconcile; each method composes the corresponding distributed check and
+returns a report DataFrame. It is the one implementation of every row-level
+check: the fixed ``recon_*`` queries that run one (row counts, key diff,
+duplicate keys, row hash, sample audit, summary) call it on the standard
+faulty orders pair built by :func:`orders_pair`. Users reconcile their own
+tables the same way::
 
     pair = ReconPair(
         source=spark.read.parquet("s3://prod/orders"),
@@ -27,8 +28,8 @@ oracle harness; users reconcile their own tables through this API::
     pair.drift("o_totalprice", width=50000.0)  # PSI distribution drift
     pair.sample_audit("0")  # row-hash audit on a deterministic 1/16 sample
 
-Every report is algebraic/partially-aggregatable or a key-shuffled
-anti/inner join — the shapes that hold at 100 TB (SURVEY.md §7.3.7).
+Every report is algebraic/partially-aggregatable or a key-shuffled join —
+the shapes that hold at 100 TB (SURVEY.md §7.3.7).
 """
 
 from __future__ import annotations
@@ -47,6 +48,7 @@ from ..canonical import (
 )
 from ..catalog import load
 from ..registry import query
+from .recon import _ORDER_HASH_COLS, ORDERS_TGT_CTE, orders_target
 
 #: compare-column kinds accepted by canonical serialization
 _KINDS = ("int", "double", "string", "ts")
@@ -82,6 +84,16 @@ class ReconPair:
     def _hash_cols(self) -> list[tuple[str, str]]:
         return [(k, "int") for k in self.keys] + list(self.compare_cols.items())
 
+    def _differs(self, kind: str, sc: Column, tc: Column) -> Column:
+        """Null-safe cell inequality; doubles respect ``tolerance``. With
+        tolerance, |s - t| is NULL when either side is null, so the
+        null-mismatch arm stands apart where a NULL compare cannot eat it."""
+        if kind == "double" and self.tolerance > 0:
+            return (sc.isNull() != tc.isNull()) | (
+                ~sc.eqNullSafe(tc) & (F.abs(sc - tc) > F.lit(self.tolerance))
+            )
+        return ~sc.eqNullSafe(tc)
+
     # -- checks -----------------------------------------------------------
 
     def row_counts(self, grain: str | None = None) -> DataFrame:
@@ -104,16 +116,23 @@ class ReconPair:
         )
 
     def key_diff(self) -> DataFrame:
-        """Keys present on exactly one side (sort-merge anti joins)."""
-        sk = self.source.select(*self._key()).distinct()
-        tk = self.target.select(*self._key()).distinct()
-        miss_t = sk.join(tk, self._key(), "left_anti").select(
-            *self._key(), F.lit("MISSING_IN_TARGET").alias("side")
+        """Keys present on exactly one side: one sort-merge full-outer join
+        over the two distinct key sets. Rows are classified by a per-side
+        presence marker, not by key NULL-ness, so a NULL key (which never
+        joins) still reports on its own side."""
+        key = self._key()
+        s = self.source.select(*key).distinct().withColumn("_s", F.lit(1))
+        t = self.target.select(*key).distinct().withColumn("_t", F.lit(1))
+        return (
+            s.join(t, key, "full_outer")
+            .filter(F.col("_s").isNull() | F.col("_t").isNull())
+            .select(
+                *key,
+                F.when(F.col("_t").isNull(), "MISSING_IN_TARGET")
+                .otherwise("MISSING_IN_SOURCE")
+                .alias("side"),
+            )
         )
-        miss_s = tk.join(sk, self._key(), "left_anti").select(
-            *self._key(), F.lit("MISSING_IN_SOURCE").alias("side")
-        )
-        return miss_t.unionByName(miss_s)
 
     def duplicate_keys(self) -> DataFrame:
         """Keys occurring more than once, per side."""
@@ -166,19 +185,9 @@ class ReconPair:
         arms: list[Column] = []
         for col, kind in self.compare_cols.items():
             sc, tc = F.col(f"s.{col}"), F.col(f"t.{col}")
-            if kind == "double" and self.tolerance > 0:
-                # Null-safe even with tolerance: |s - t| is NULL when either
-                # side is null, and TRUE|NULL / ~(FALSE|NULL) semantics would
-                # silently drop null-vs-value diffs. Split the null-mismatch
-                # arm out so it can never be eaten by a NULL comparison.
-                differs = (sc.isNull() != tc.isNull()) | (
-                    ~sc.eqNullSafe(tc) & (F.abs(sc - tc) > F.lit(self.tolerance))
-                )
-            else:
-                differs = ~sc.eqNullSafe(tc)
             arms.append(
                 F.when(
-                    differs,
+                    self._differs(kind, sc, tc),
                     F.struct(
                         F.lit(col).alias("col_name"),
                         sc.cast("string").alias("src_val"),
@@ -268,76 +277,52 @@ class ReconPair:
         every run and cluster size, so consecutive audits are comparable.
         The predicate filters both sides BEFORE the join shuffle, so cost
         tracks the sample fraction (the hourly-tier knob; the nightly full
-        run is :meth:`row_hash_diff`)."""
-        key = self.keys[0]
+        run is :meth:`row_hash_diff`). The sample is taken on the first key
+        column; the join is on every key. Each side is deduplicated on
+        (keys, hash), so exact duplicate rows count once."""
+        key = self._key()
         pred = F.substring(
-            F.md5(F.col(key).cast("string")), 1, len(prefix)
+            F.md5(F.col(key[0]).cast("string")), 1, len(prefix)
         ) == prefix
-        cols = self._hash_cols()
-        src = self.source.filter(pred).select(
-            *self._key(), canonical_row_hash(cols).alias("h")
-        )
-        tgt = self.target.filter(pred).select(
-            *self._key(), canonical_row_hash(cols).alias("h")
-        )
-        s, t = src.alias("s"), tgt.alias("t")
-        sk, tk = F.col(f"s.{key}"), F.col(f"t.{key}")
+        h = canonical_row_hash(self._hash_cols())
+
+        def side(df: DataFrame, name: str) -> DataFrame:
+            return df.filter(pred).select(*key, h.alias(name)).distinct()
+
+        # md5 is never NULL, so a NULL hash marks the side a key is absent from
+        sh, th = F.col("_sh"), F.col("_th")
         status = (
-            F.when(tk.isNull(), "MISSING_IN_TARGET")
-            .when(sk.isNull(), "MISSING_IN_SOURCE")
-            .when(F.col("s.h") == F.col("t.h"), "MATCH")
+            F.when(th.isNull(), "MISSING_IN_TARGET")
+            .when(sh.isNull(), "MISSING_IN_SOURCE")
+            .when(sh == th, "MATCH")
             .otherwise("MISMATCH")
         )
         return (
-            s.join(t, sk == tk, "full_outer")
+            side(self.source, "_sh")
+            .join(side(self.target, "_th"), key, "full_outer")
             .groupBy(status.alias("status"))
             .agg(F.count("*").alias("n_keys"))
         )
 
     def summary(self) -> DataFrame:
         """One row per check with its violation count — the report header a
-        reconciliation run prints first.
-
-        Fused computation (r19, guide §2.4): the six checks' COUNTS are
-        derived from two shared passes instead of six independent check
-        plans (which consumed source and target twelve times behind
-        different shuffle keys — r18's shape, kept only via persist):
+        reconciliation run prints first. Two tiers share the passes:
 
         - **per-key tier** (keys_missing, duplicate_keys, row_hash_diffs,
-          cell_diffs): the target is aggregated once per key — row count,
-          DISTINCT canonical-hash set, and the deterministic min-hash
-          survivor row (``min_by`` over the canonical row hash ==
-          cell_diff's row_number-over-hash dedup; tied rows hash-tie only
-          when their canonical serializations are identical, so the pick
-          is value-invisible) — then ONE full-outer join against the
-          per-row hashed source yields every per-row and per-key count:
-          a source row's hash mismatches = |t hash set| − [h ∈ set]; its
-          cell diffs = per-column null-safe/tolerance compares against the
-          survivor struct; key-level presence/duplicate flags re-aggregate
-          by key (no extra exchange — already key-partitioned). NULL keys
-          keep the joins' never-match semantics via a null-side grouping
-          column (each side's NULL-key group stays its own row, exactly as
-          the distinct+anti-join and per-side groupBys treated them).
-        - **global tier** (count_diff_grains, fingerprint_diffs): one
-          aggregate pass per side (the fingerprints() metric vector, whose
-          row_count metric already carries the count check — integer
-          counts differ by ≥ 1, so the 1e-9 fingerprint tolerance and the
-          exact count comparison agree with the separate spellings).
+          cell_diffs): the target is aggregated once per key (row count,
+          distinct canonical-hash set, and the min-hash survivor row that
+          :meth:`cell_diff` keeps), then one full-outer join against the
+          per-row hashed source yields every count. A NULL key never joins,
+          so each side's NULL-key group stays its own row through the
+          ``_ns`` null-side grouping column.
+        - **global tier** (count_diff_grains, fingerprint_diffs): a roll-up
+          of :meth:`fingerprints`, whose row_count metric carries the count
+          check.
 
-        Each check's count is EXACTLY the row count of the corresponding
-        standalone method's frame (pinned against the unfused spelling in
-        tests/test_round19_opt.py and by the fault-census fuzz in
-        tests/test_api_fuzz.py); the methods themselves are unchanged.
-
-        The r18 persist-both-sides lifecycle is GONE with the fan-out that
-        justified it: each side now has exactly two consumers, and the
-        measured cache-population cost exceeded the second scan's price
-        (2.8-2.9 s vs 2.2-2.5 s per report at sf0.1, r19 A/B). At 100 TB
-        the same call holds — two column-pruned passes (the per-key tier
-        reads keys+compare+hash columns, the global tier compare columns
-        only) beat staging the full wide table once. The 6-row report is
-        still materialized eagerly (localCheckpoint) so the driver's
-        count/collect never re-runs the checks."""
+        Each count equals the row count of the standalone method's frame
+        (``row_counts()`` and ``fingerprints()`` counted where status is not
+        MATCH). The 6-row report is materialized (localCheckpoint) so the
+        driver's count/collect never re-runs the checks."""
         from operator import add, or_
 
         key = self._key()
@@ -364,22 +349,15 @@ class ReconPair:
             s_present & t_present,
             F.size("_th") - F.array_contains("_th", F.col("_h")).cast("int"),
         ).otherwise(F.lit(0))
-        cell_arms = []
-        for col, kind in self.compare_cols.items():
-            sc, tc = F.col(col), F.col("_tr").getField(col)
-            if kind == "double" and self.tolerance > 0:
-                differs = (sc.isNull() != tc.isNull()) | (
-                    ~sc.eqNullSafe(tc) & (F.abs(sc - tc) > F.lit(self.tolerance))
-                )
-            else:
-                differs = ~sc.eqNullSafe(tc)
-            cell_arms.append(F.when(differs, 1).otherwise(0))
+        cell_arms = [
+            F.when(self._differs(kind, F.col(col), F.col("_tr").getField(col)), 1)
+            .otherwise(0)
+            for col, kind in self.compare_cols.items()
+        ]
         cells = F.when(
             s_present & t_present,
             reduce(add, cell_arms) if cell_arms else F.lit(0),
         ).otherwise(F.lit(0))
-        # NULL keys never equi-join: each side's NULL-key group must stay
-        # its own row (the _bh_digest_both _nullside pattern)
         nullside = F.when(
             reduce(or_, [F.col(k).isNull() for k in key]),
             F.coalesce(F.col("_sp"), F.lit(0)),
@@ -413,51 +391,16 @@ class ReconPair:
             F.coalesce(F.sum("_cells"), zero).cast("bigint").alias("cell_diffs"),
         )
 
-        # --- global tier: the fingerprint metric vector carries both ----
-        def side_agg(df: DataFrame) -> DataFrame:
-            aggs = [F.count("*").cast("double").alias("row_count")]
-            for col, kind in self.compare_cols.items():
-                aggs.append(
-                    F.sum(F.when(F.col(col).isNull(), 1).otherwise(0))
-                    .cast("double")
-                    .alias(f"nulls__{col}")
-                )
-                aggs.append(
-                    F.countDistinct(col).cast("double").alias(f"distinct__{col}")
-                )
-                if kind in ("int", "double"):
-                    aggs.append(money_sum(col, f"sum__{col}"))
-                    aggs.append(F.min(col).cast("double").alias(f"min__{col}"))
-                    aggs.append(F.max(col).cast("double").alias(f"max__{col}"))
-            return df.agg(*aggs)
-
-        sfp = side_agg(self.source)
-        metrics = sfp.columns
-        stack = ", ".join(f"'{m}', `{m}`" for m in metrics)
-
-        def unpivot(df: DataFrame, val: str) -> DataFrame:
-            return df.selectExpr(f"stack({len(metrics)}, {stack}) as (metric, {val})")
-
-        jfp = unpivot(sfp, "sval").join(
-            unpivot(side_agg(self.target), "tval"), "metric"
-        )
-        fp_match = F.col("sval").eqNullSafe(F.col("tval")) | (
-            F.abs(F.col("sval") - F.col("tval")) < 1e-9
-        )
-        fp_roll = jfp.agg(
+        # --- global tier: a roll-up of the fingerprint report ------------
+        fp_diff = F.col("status") != "MATCH"
+        fp_roll = self.fingerprints().agg(
             F.sum(
-                F.when(
-                    (F.col("metric") == "row_count")
-                    & (F.col("sval") != F.col("tval")),
-                    one,
-                ).otherwise(zero)
+                F.when((F.col("metric") == "row_count") & fp_diff, one).otherwise(zero)
             ).alias("count_diff_grains"),
-            F.sum(F.when(fp_match, zero).otherwise(one)).alias(
-                "fingerprint_diffs"
-            ),
+            F.sum(F.when(fp_diff, one).otherwise(zero)).alias("fingerprint_diffs"),
         )
 
-        report = (
+        return (
             key_roll.crossJoin(fp_roll)
             .selectExpr(
                 "stack(6, "
@@ -475,15 +418,12 @@ class ReconPair:
             )
             .localCheckpoint()
         )
-        return report
 
 
 def _summary_oracle() -> str:
     """SQL twin of ReconPair.summary() on the standard faulty pair: every
     check transliterated honestly (no key-arithmetic shortcuts), so the
     composite API itself is hash-checked end-to-end."""
-    from .recon import ORDERS_TGT_CTE, _ORDER_HASH_COLS
-
     hash_sql = canonical_row_hash_sql(_ORDER_HASH_COLS)
     fp_metrics = """
       SELECT CAST(COUNT(*) AS DOUBLE) AS row_count,
@@ -579,30 +519,28 @@ FROM (
     )
 
 
-@query("recon_api_summary", oracle=_summary_oracle())
-def recon_api_summary(spark, sf_dir: str) -> DataFrame:
-    """The generic ReconPair API run end-to-end on the standard faulty pair:
-    the one-call reconciliation report a user of the reference gets. The
-    oracle transliterates all six checks, so even the composite is
-    hash-verified; exact per-fault-class counts are additionally asserted by
-    tests/test_recon_api.py."""
-    from .recon import orders_target
-
-    orders = load(spark, sf_dir, "orders")
-    pair = ReconPair(
+def orders_pair(orders: DataFrame, target: DataFrame | None = None) -> ReconPair:
+    """The standard faulty orders pair every fixed ``recon_*`` check runs
+    on: ``orders`` against ``target`` (default: :func:`orders_target`'s
+    faulty copy), keyed on o_orderkey, comparing the other
+    ``_ORDER_HASH_COLS`` columns with tolerance 0.5. Its row hash is
+    therefore the oracles' ``_ORDER_HASH_COLS`` hash."""
+    return ReconPair(
         source=orders,
-        target=orders_target(orders, faulty=True),
+        target=orders_target(orders) if target is None else target,
         keys=["o_orderkey"],
-        compare_cols={
-            "o_custkey": "int",
-            "o_orderstatus": "string",
-            "o_totalprice": "double",
-            "o_orderdate": "ts",
-            "o_orderpriority": "string",
-        },
+        compare_cols=dict(_ORDER_HASH_COLS[1:]),
         tolerance=0.5,
     )
-    return pair.summary()
+
+
+@query("recon_api_summary", oracle=_summary_oracle())
+def recon_api_summary(spark, sf_dir: str) -> DataFrame:
+    """The one-call reconciliation report on the standard faulty pair.
+    The oracle transliterates all six checks, so even the composite is
+    hash-verified; exact per-fault-class counts are additionally asserted
+    by tests/test_recon_api.py."""
+    return orders_pair(load(spark, sf_dir, "orders")).summary()
 
 
 @query("recon_crossformat", oracle=_summary_oracle())
@@ -616,16 +554,11 @@ def recon_crossformat(spark, sf_dir: str) -> DataFrame:
     float text, NULL encoding) would surface as a changed violation
     count and fail the hash-check.
 
-    The ORC target is an ``artifacts.ensure_artifact`` build — written
-    once per fingerprint (join_bucketed's ingest-once pattern, replacing
-    a hand-built /tmp path), then every run re-reads it through the full
-    six-check reconciliation. The round trip stays proven: any source
-    change rebuilds the ORC, and — via ``code=[orders_target]`` — so does
-    any edit to the fault-injection transform itself, so the cached
-    target can never be a stale-code build. The read-back side is
-    exercised on every run."""
+    The ORC target is an ``artifacts.ensure_artifact`` build, written once
+    per fingerprint and re-read on every run. Via ``code=[orders_target]``
+    any edit to the fault-injection transform rebuilds it, so the cached
+    target can never be a stale-code build."""
     from ..artifacts import ensure_artifact
-    from .recon import orders_target
 
     orders = load(spark, sf_dir, "orders")
 
@@ -636,17 +569,4 @@ def recon_crossformat(spark, sf_dir: str) -> DataFrame:
         spark, sf_dir, "orders_tgt_orc", ["orders.parquet"], build,
         code=[orders_target],
     )
-    pair = ReconPair(
-        source=orders,
-        target=spark.read.orc(orc_path),
-        keys=["o_orderkey"],
-        compare_cols={
-            "o_custkey": "int",
-            "o_orderstatus": "string",
-            "o_totalprice": "double",
-            "o_orderdate": "ts",
-            "o_orderpriority": "string",
-        },
-        tolerance=0.5,
-    )
-    return pair.summary()
+    return orders_pair(orders, spark.read.orc(orc_path)).summary()

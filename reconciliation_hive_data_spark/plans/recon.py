@@ -7,8 +7,11 @@ Python; here each check IS a single declarative DataFrame expression, so the
 comparison itself runs distributed and the report is itself a DataFrame
 (DuckDB-oracle-checkable). At 100 TB every check below stays algebraic:
 counts/sums/min/max/distinct fingerprints are partially aggregatable
-(map-side combine), key diffs are sort-merge anti joins on the join key, and
-partition drill-down bounds recompute blast radius to one partition.
+(map-side combine), key diffs are one sort-merge join on the join key, and
+partition drill-down bounds recompute blast radius to one partition. The
+row-level checks (row counts, key diff, duplicate keys, row hash) are calls
+on :class:`plans.api.ReconPair` over the standard pair
+(:func:`plans.api.orders_pair`).
 
 Source side = ``orders``; target side = a deterministic in-query perturbation
 of orders (FIXTURES.md §B.2): per o_orderkey % 1000 — 7 → row dropped,
@@ -23,7 +26,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..canonical import (
-    canonical_row_hash,
     canonical_row_hash_sql,
     dround,
     money_sum,
@@ -180,21 +182,13 @@ FROM s FULL OUTER JOIN t ON s.o_orderstatus = t.o_orderstatus
 
 @query("recon_rowcount", oracle=_ROWCOUNT_ORACLE)
 def recon_rowcount(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """THE first recon check: per-partition-grain row counts, both sides."""
-    orders = load(spark, sf_dir, "orders")
-    tgt = orders_target(orders)
-    s = orders.groupBy("o_orderstatus").agg(F.count("*").alias("src_cnt"))
-    t = tgt.groupBy("o_orderstatus").agg(F.count("*").alias("tgt_cnt"))
-    j = s.join(t, "o_orderstatus", "full_outer")
-    src = F.coalesce("src_cnt", F.lit(0))
-    tgtc = F.coalesce("tgt_cnt", F.lit(0))
-    return j.select(
-        F.col("o_orderstatus").alias("grain"),
-        src.alias("src_cnt"),
-        tgtc.alias("tgt_cnt"),
-        (src - tgtc).alias("diff"),
-        F.when(src == tgtc, "MATCH").otherwise("COUNT_DIFF").alias("status"),
-    )
+    """THE first recon check: per-partition-grain row counts, both sides.
+    The grain column is reported as ``grain``."""
+    from .api import orders_pair  # not at module top: api registers after recon
+
+    return orders_pair(load(spark, sf_dir, "orders")).row_counts(
+        "o_orderstatus"
+    ).withColumnRenamed("o_orderstatus", "grain")
 
 
 # ---------------------------------------------------------------------------
@@ -304,28 +298,11 @@ FROM (SELECT DISTINCT o_orderkey FROM orders_tgt
 
 @query("recon_keys_missing", oracle=_KEYS_MISSING_ORACLE)
 def recon_keys_missing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Keys present on one side only — ONE sort-merge FULL OUTER join over
-    the two distinct key sets, null-side classified (broadcast would be
-    wrong at 100 TB: both sides are fact-sized). r18 rewrite (guide §2.4):
-    the original ran two directed ANTI joins, which inlined each side's
-    distinct aggregate twice and paid two merge passes; the full-outer
-    emits the identical multiset from one pass over the same two
-    exchanges."""
-    orders = load(spark, sf_dir, "orders")
-    tgt = orders_target(orders)
-    src_keys = orders.select("o_orderkey").distinct()
-    tgt_keys = tgt.select(F.col("o_orderkey").alias("t_key")).distinct()
-    j = src_keys.join(
-        tgt_keys, F.col("o_orderkey") == F.col("t_key"), "full_outer"
-    )
-    return j.filter(
-        F.col("o_orderkey").isNull() | F.col("t_key").isNull()
-    ).select(
-        F.coalesce("o_orderkey", "t_key").alias("o_orderkey"),
-        F.when(F.col("t_key").isNull(), "MISSING_IN_TARGET")
-        .otherwise("MISSING_IN_SOURCE")
-        .alias("side"),
-    )
+    """Keys present on one side only, from one sort-merge full-outer join.
+    Broadcast would be wrong at 100 TB: both sides are fact-sized."""
+    from .api import orders_pair
+
+    return orders_pair(load(spark, sf_dir, "orders")).key_diff()
 
 
 # ---------------------------------------------------------------------------
@@ -345,21 +322,9 @@ FROM orders GROUP BY o_orderkey HAVING COUNT(*) > 1
 def recon_keys_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keys appearing more than once per side (source is clean by fixture
     design, so only injected target dups appear)."""
-    orders = load(spark, sf_dir, "orders")
-    tgt = orders_target(orders)
-    t = (
-        tgt.groupBy("o_orderkey")
-        .agg(F.count("*").alias("cnt"))
-        .filter("cnt > 1")
-        .select(F.lit("target").alias("side"), "o_orderkey", "cnt")
-    )
-    s = (
-        orders.groupBy("o_orderkey")
-        .agg(F.count("*").alias("cnt"))
-        .filter("cnt > 1")
-        .select(F.lit("source").alias("side"), "o_orderkey", "cnt")
-    )
-    return t.unionAll(s)
+    from .api import orders_pair
+
+    return orders_pair(load(spark, sf_dir, "orders")).duplicate_keys()
 
 
 # ---------------------------------------------------------------------------
@@ -382,16 +347,9 @@ def recon_rowhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     column; emit keys whose hash differs between sides. The hash recipe
     (canonical.py) is the one thing Spark and DuckDB share (md5+text), and at
     scale it reduces a wide-row compare to an 8-byte-ish shuffle key."""
-    orders = load(spark, sf_dir, "orders")
-    tgt = orders_target(orders)
-    sh = orders.select("o_orderkey", canonical_row_hash(_ORDER_HASH_COLS).alias("h"))
-    th = tgt.select("o_orderkey", canonical_row_hash(_ORDER_HASH_COLS).alias("h")).distinct()
-    j = sh.alias("s").join(th.alias("t"), "o_orderkey")
-    return j.filter(F.col("s.h") != F.col("t.h")).select(
-        "o_orderkey",
-        F.col("s.h").alias("src_hash"),
-        F.col("t.h").alias("tgt_hash"),
-    )
+    from .api import orders_pair
+
+    return orders_pair(load(spark, sf_dir, "orders")).row_hash_diff()
 
 
 # ---------------------------------------------------------------------------

@@ -21,7 +21,8 @@ plans/recon.py.
   keys sample on every run and on any cluster size). At 100 TB this is the
   hourly check (1/16 of the shuffle), with the nightly full recon_rowhash
   run catching the rest; the sample predicate is a narrow filter applied
-  BEFORE the join shuffle on both sides.
+  BEFORE the join shuffle on both sides. It runs as
+  ``ReconPair.sample_audit`` on the standard pair.
 
 100 TB notes: CDC joins key-on-key (sort-merge, AQE-sizable) and compares
 only named columns; drift aggregates are two-phase map-side-combinable
@@ -297,37 +298,11 @@ GROUP BY 1
 @query("recon_sample_audit", oracle=_SAMPLE_ORACLE)
 def recon_sample_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full-fidelity row-hash audit on a deterministic 1/16 key sample:
-    keys whose md5 hex starts with '0'. No RNG state — the same keys are
-    sampled on every run, every engine, every cluster size, so consecutive
-    audits are comparable and a flagged key stays flagged until fixed. The
-    sample predicate filters BOTH sides before the join shuffle (plan-test
-    asserted), so audit cost tracks the sample fraction — the knob that
-    turns the nightly full recon_rowhash into an hourly check. Target-side
-    exact-duplicate rows collapse via full-row DISTINCT (value-identical,
-    so the survivor is well-defined)."""
-    pred = F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 1) == "0"
-    src = load(spark, sf_dir, "orders")
-    src_s = src.filter(pred).select(
-        "o_orderkey", canonical_row_hash(_ORDER_HASH_COLS).alias("h")
-    )
-    tgt_s = (
-        orders_target(src)
-        .dropDuplicates()
-        .filter(pred)
-        .select("o_orderkey", canonical_row_hash(_ORDER_HASH_COLS).alias("h"))
-    )
-    s, t = src_s.alias("s"), tgt_s.alias("t")
-    status = (
-        F.when(F.col("t.o_orderkey").isNull(), "MISSING_IN_TARGET")
-        .when(F.col("s.o_orderkey").isNull(), "MISSING_IN_SOURCE")
-        .when(F.col("s.h") == F.col("t.h"), "MATCH")
-        .otherwise("MISMATCH")
-    )
-    return (
-        s.join(t, F.col("s.o_orderkey") == F.col("t.o_orderkey"), "full_outer")
-        .groupBy(status.alias("status"))
-        .agg(F.count("*").alias("n_keys"))
-    )
+    keys whose md5 hex starts with '0', the same keys on every run, engine
+    and cluster size. Target-side exact-duplicate rows count once."""
+    from .api import orders_pair
+
+    return orders_pair(load(spark, sf_dir, "orders")).sample_audit("0")
 
 
 # ---------------------------------------------------------------------------
@@ -587,13 +562,20 @@ def _bh_words(df: DataFrame) -> DataFrame:
     """Narrow per-row projection: (key, md5-derived bucket, two 32-bit hash
     words from the canonical row hash). Everything downstream aggregates or
     joins THESE four columns — the wide row never crosses a shuffle."""
-    h = canonical_row_hash(_ORDER_HASH_COLS)
     return df.select(
         F.col("o_orderkey").alias("k"),
         _bh_bucket().alias("bucket"),
-        F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint").alias("w1"),
-        F.conv(F.substring(h, 9, 8), 16, 10).cast("bigint").alias("w2"),
+        *_bh_hash_words(),
     )
+
+
+def _bh_hash_words() -> list[F.Column]:
+    """The canonical row hash's first two 32-bit words, ``w1`` and ``w2``."""
+    h = canonical_row_hash(_ORDER_HASH_COLS)
+    return [
+        F.conv(F.substring(h, start, 8), 16, 10).cast("bigint").alias(name)
+        for start, name in ((1, "w1"), (9, "w2"))
+    ]
 
 
 def _bh_digest(words: DataFrame, tag: str) -> DataFrame:
@@ -644,6 +626,22 @@ def _bh_bad(sd: DataFrame, td: DataFrame) -> DataFrame:
     return sd.join(td, "bucket", "full_outer").filter(~_bh_same_digest()).localCheckpoint()
 
 
+def _bh_side_cnt(pred: F.Column) -> F.Column:
+    """Row count of one side of a union-tagged group; NULL when that side
+    has no rows, as a full-outer join of per-side counts would give."""
+    c = F.sum(F.when(pred, 1).otherwise(0))
+    return F.when(c > 0, c)
+
+
+def _bh_side_word(pred: F.Column, col: str) -> F.Column:
+    """One side's hash-word digest of a union-tagged group (NULL when the
+    side has no rows: SUM skips the other side's NULL arm)."""
+    return (
+        (F.sum(F.when(pred, F.col(col)).cast("decimal(38,0)")) % F.lit(_BH_MOD))
+        .cast("bigint")
+    )
+
+
 def _bh_digest_both(src: DataFrame, tgt: DataFrame) -> DataFrame:
     """Both sides' per-bucket digests from ONE union-tagged aggregate
     (r19, guide §2.4): row-for-row identical to
@@ -665,29 +663,18 @@ def _bh_digest_both(src: DataFrame, tgt: DataFrame) -> DataFrame:
         .unionByName(_bh_words(tgt).withColumn("_s", F.lit(0)))
     )
     is_src = F.col("_s") == 1
-
-    def side_cnt(pred: F.Column) -> F.Column:
-        c = F.sum(F.when(pred, 1).otherwise(0))
-        return F.when(c > 0, c)
-
-    def side_word(pred: F.Column, col: str) -> F.Column:
-        return (
-            (F.sum(F.when(pred, F.col(col)).cast("decimal(38,0)")) % F.lit(_BH_MOD))
-            .cast("bigint")
-        )
-
     return (
         tagged.groupBy(
             "bucket",
             F.when(F.col("bucket").isNull(), F.col("_s")).alias("_nullside"),
         )
         .agg(
-            side_cnt(is_src).alias("src_cnt"),
-            side_word(is_src, "w1").alias("src_d1"),
-            side_word(is_src, "w2").alias("src_d2"),
-            side_cnt(~is_src).alias("tgt_cnt"),
-            side_word(~is_src, "w1").alias("tgt_d1"),
-            side_word(~is_src, "w2").alias("tgt_d2"),
+            _bh_side_cnt(is_src).alias("src_cnt"),
+            _bh_side_word(is_src, "w1").alias("src_d1"),
+            _bh_side_word(is_src, "w2").alias("src_d2"),
+            _bh_side_cnt(~is_src).alias("tgt_cnt"),
+            _bh_side_word(~is_src, "w1").alias("tgt_d1"),
+            _bh_side_word(~is_src, "w2").alias("tgt_d2"),
         )
         .drop("_nullside")
     )
@@ -716,17 +703,10 @@ def _bh_key_diff(src: DataFrame, tgt: DataFrame, bad: DataFrame) -> DataFrame:
         pruned = (
             side.withColumn("bucket", _bh_bucket()).join(bad_buckets, "bucket")
         )
-        h = canonical_row_hash(_ORDER_HASH_COLS)
-
-        def key_word(start: int, alias: str) -> F.Column:
-            w = F.conv(F.substring(h, start, 8), 16, 10).cast("bigint")
-            return w.alias(alias)
-
         return pruned.select(
             "bucket",
             F.col("o_orderkey").alias("k"),
-            key_word(1, "w1"),
-            key_word(9, "w2"),
+            *_bh_hash_words(),
             F.lit(tag_val).alias("_s"),
         )
 
@@ -738,26 +718,15 @@ def _bh_key_diff(src: DataFrame, tgt: DataFrame, bad: DataFrame) -> DataFrame:
     # and SUM-over-all-NULL arms.
     tagged = pruned_words(src, 1).unionByName(pruned_words(tgt, 0))
     is_src = F.col("_s") == 1
-
-    def side_cnt(pred: F.Column) -> F.Column:
-        c = F.sum(F.when(pred, 1).otherwise(0))
-        return F.when(c > 0, c)
-
-    def side_word(pred: F.Column, col: str) -> F.Column:
-        return (
-            (F.sum(F.when(pred, F.col(col)).cast("decimal(38,0)")) % F.lit(_BH_MOD))
-            .cast("bigint")
-        )
-
     return (
         tagged.groupBy("bucket", "k")
         .agg(
-            side_cnt(is_src).alias("s_c"),
-            side_word(is_src, "w1").alias("s_kw1"),
-            side_word(is_src, "w2").alias("s_kw2"),
-            side_cnt(~is_src).alias("t_c"),
-            side_word(~is_src, "w1").alias("t_kw1"),
-            side_word(~is_src, "w2").alias("t_kw2"),
+            _bh_side_cnt(is_src).alias("s_c"),
+            _bh_side_word(is_src, "w1").alias("s_kw1"),
+            _bh_side_word(is_src, "w2").alias("s_kw2"),
+            _bh_side_cnt(~is_src).alias("t_c"),
+            _bh_side_word(~is_src, "w1").alias("t_kw1"),
+            _bh_side_word(~is_src, "w2").alias("t_kw2"),
         )
         .filter(
             ~(

@@ -18,6 +18,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from .artifacts import process_tmp_root
+
 
 def get_spark(
     app_name: str = "reconciliation-hive-data-spark",
@@ -65,12 +67,13 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     # Spark SQL + Hive integration (the reference's metastore-backed world):
-    # embedded Derby metastore, homed per-process under /tmp so concurrent
-    # sessions don't fight over the Derby lock. Falls back to the in-memory
-    # catalog if Hive classes are unavailable.
+    # embedded Derby metastore, homed in a per-process temp directory
+    # (removed at exit) so concurrent sessions don't fight over the Derby
+    # lock. Falls back to the in-memory catalog if Hive classes are
+    # unavailable.
     builder = builder.config(
         "spark.driver.extraJavaOptions",
-        f"-Dderby.system.home=/tmp/rhds_derby_{os.getpid()}",
+        f"-Dderby.system.home={process_tmp_root('rhds_derby_')}",
     )
     try:
         return builder.enableHiveSupport().getOrCreate()

@@ -18,7 +18,9 @@ schedules them like file splits.
 from __future__ import annotations
 
 import hashlib
+import sys
 
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
@@ -74,7 +76,9 @@ def src_python_ds(spark: SparkSession, sf_dir: str) -> DataFrame:
     read with options, 8 Python-worker partitions stream their rows
     through Arrow. The md5-derived columns make every row a pure function
     of its id, so DuckDB's range()-based twin hash-verifies the whole
-    connector path."""
+    connector path. The module is pickled by value, so the Python workers
+    need not import this package (they may run in any working directory)."""
+    cloudpickle.register_pickle_by_value(sys.modules[__name__])
     spark.dataSource.register(SynthSource)
     return (
         spark.read.format("rhds_synth")

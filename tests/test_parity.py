@@ -44,6 +44,32 @@ def test_entry_contract_is_registration_order():
     assert all(oracles[n] == registry.REGISTRY[n].oracle for n in oracles)
 
 
+def test_python_ds_runs_outside_repo_root(tmp_path):
+    """src_python_ds's reader runs in Python workers, which start in the
+    driver's working directory. A driver whose working directory is not
+    the repo root (this package on ``sys.path`` only) must still read
+    every row, in a plain session like the driver's."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = (
+        f"import sys; sys.path.insert(0, {repo!r})\n"
+        "from pyspark.sql import SparkSession\n"
+        "from reconciliation_hive_data_spark.sources.python_ds import src_python_ds\n"
+        "spark = SparkSession.builder.master('local[2]')"
+        ".config('spark.ui.enabled', 'false').getOrCreate()\n"
+        "print('ROWS', src_python_ds(spark, '').count())\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    r = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert "ROWS 2000" in r.stdout, r.stderr[-3000:]
+
+
 def test_oracles_reference_only_known_tables():
     """Static sanity over every oracle SQL string: any bare FROM/JOIN
     table identifier must be a driver-registered view or a CTE defined in

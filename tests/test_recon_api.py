@@ -7,26 +7,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from reconciliation_hive_data_spark.catalog import load
+from reconciliation_hive_data_spark.plans import api
 from reconciliation_hive_data_spark.plans.api import ReconPair
-from reconciliation_hive_data_spark.plans.recon import orders_target
 
 
 @pytest.fixture(scope="module")
 def orders_pair(spark, sf_dir):
-    orders = load(spark, sf_dir, "orders")
-    return ReconPair(
-        source=orders,
-        target=orders_target(orders, faulty=True),
-        keys=["o_orderkey"],
-        compare_cols={
-            "o_custkey": "int",
-            "o_orderstatus": "string",
-            "o_totalprice": "double",
-            "o_orderdate": "ts",
-            "o_orderpriority": "string",
-        },
-        tolerance=0.5,
-    )
+    return api.orders_pair(load(spark, sf_dir, "orders"))
 
 
 def test_self_pair_summary_all_match(spark, sf_dir):
@@ -98,10 +85,12 @@ def test_bad_config_rejected(spark, sf_dir):
 
 def test_keys_only_pair_runs_every_check(spark):
     """With no compare columns every check still plans and runs; there
-    are no cells to compare, so cell_diff is empty but keeps its schema."""
+    are no cells to compare, so cell_diff is empty but keeps its schema.
+    A NULL key never joins, so key_diff reports each side's NULL key on
+    that side."""
     pair = ReconPair(
-        source=spark.createDataFrame([(1,), (2,)], "k long"),
-        target=spark.createDataFrame([(2,), (3,)], "k long"),
+        source=spark.createDataFrame([(1,), (2,), (None,)], "k long"),
+        target=spark.createDataFrame([(2,), (3,), (None,)], "k long"),
         keys=["k"],
         compare_cols={},
     )
@@ -114,7 +103,14 @@ def test_keys_only_pair_runs_every_check(spark):
         pair.summary,
     ):
         check().collect()
-    assert pair.key_diff().count() == 2
+    assert sorted(
+        (r.k is None, r.k or 0, r.side) for r in pair.key_diff().collect()
+    ) == [
+        (False, 1, "MISSING_IN_TARGET"),
+        (False, 3, "MISSING_IN_SOURCE"),
+        (True, 0, "MISSING_IN_SOURCE"),
+        (True, 0, "MISSING_IN_TARGET"),
+    ]
     cells = pair.cell_diff()
     assert cells.columns == ["k", "col_name", "src_val", "tgt_val"]
     assert cells.count() == 0
@@ -159,3 +155,34 @@ def test_sample_audit_matches_fault_classes(spark, sf_dir, orders_pair):
         "MATCH", "MISMATCH", "MISSING_IN_SOURCE", "MISSING_IN_TARGET"
     }
     assert audited["MATCH"] > sum(v for k, v in audited.items() if k != "MATCH")
+
+
+# 27 and 59 are keys whose md5 hex starts with '0', so sample_audit("0")
+# samples every row below.
+@pytest.mark.parametrize(
+    "src_rows, tgt_rows, keys, want",
+    [
+        # composite-key self-pair: the join must use every key column, or
+        # each (k1) group cross-matches its rows
+        (
+            [(27, 1, "a"), (27, 2, "b"), (59, 1, "c"), (59, 2, "d")],
+            None,
+            ["k1", "k2"],
+            {"MATCH": 4},
+        ),
+        # one exact duplicate target row counts once
+        (
+            [(27, 1, "a"), (59, 1, "b")],
+            [(27, 1, "a"), (27, 1, "a"), (59, 1, "b")],
+            ["k1"],
+            {"MATCH": 2},
+        ),
+    ],
+    ids=["composite_key", "duplicate_target_row"],
+)
+def test_sample_audit_joins_every_key_and_dedups(spark, src_rows, tgt_rows, keys, want):
+    schema = "k1 long, k2 long, v string"
+    src = spark.createDataFrame(src_rows, schema)
+    tgt = src if tgt_rows is None else spark.createDataFrame(tgt_rows, schema)
+    pair = ReconPair(src, tgt, keys, {"v": "string"})
+    assert {r.status: r.n_keys for r in pair.sample_audit("0").collect()} == want
