@@ -41,10 +41,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..canonical import (
+    MONEY_SCALE,
     canonical_row_hash,
     canonical_row_hash_sql,
     dround,
-    money_sum,
 )
 from ..catalog import load
 from ..registry import query
@@ -52,6 +52,11 @@ from .recon import _ORDER_HASH_COLS, ORDERS_TGT_CTE, orders_target
 
 #: compare-column kinds accepted by canonical serialization
 _KINDS = ("int", "double", "string", "ts")
+#: the type a kind's values are fingerprinted in; each cast is injective on
+#: the kind's column types, so distinct counts survive it
+_KIND_TYPE = {"int": "bigint", "double": "double", "string": "string", "ts": "timestamp"}
+#: kinds that also get sum/min/max fingerprints
+_NUMERIC = ("int", "double")
 
 
 @dataclass
@@ -213,38 +218,81 @@ class ReconPair:
 
     def fingerprints(self) -> DataFrame:
         """Per-column algebraic fingerprints for both sides, unpivoted to
-        (metric, src_val, tgt_val, diff, status) rows."""
+        (metric, src_val, tgt_val, diff, status) rows: ``row_count``, then
+        per compare column ``nulls__``, ``distinct__`` and, for numeric
+        kinds, ``sum__`` (exact decimal), ``min__`` and ``max__``.
 
-        def side_agg(df: DataFrame) -> DataFrame:
-            aggs = [F.count("*").cast("double").alias("row_count")]
-            for col, kind in self.compare_cols.items():
-                aggs.append(
-                    F.sum(F.when(F.col(col).isNull(), 1).otherwise(0))
-                    .cast("double")
-                    .alias(f"nulls__{col}")
+        One pipeline computes both sides. Each row, tagged with its side
+        ``_s``, is exploded into slot 0 (the row itself, so ``row_count``
+        holds on a keys-only pair) and one slot ``i`` per compare column,
+        whose value is cast to its kind's type in ``v_<kind>``. Grouping by
+        (``_s``, ``i``, value) gives every distinct value its multiplicity
+        ``n``; one conditional global aggregate derives all metrics of both
+        sides from those groups, and one ``stack`` unpivots them. The
+        per-kind casts are injective (int to bigint, float to double, date
+        to timestamp) and happen on each side before the union, as does
+        the decimal cast of the sum, so each side's metrics are those of
+        its own types. No distinct aggregate is planned, hence no
+        ``Expand`` whose column order varies from one read of the same
+        files to the next: the generated code is identical on every call,
+        and the session's codegen cache serves it."""
+        cols = list(self.compare_cols.items())
+        kinds = [k for k in _KINDS if k in self.compare_cols.values()]
+
+        def slots(df: DataFrame, tag: int) -> DataFrame:
+            def slot(i: int, col: str | None = None, kind: str | None = None) -> Column:
+                vals = [
+                    (F.col(col) if k == kind else F.lit(None)).cast(_KIND_TYPE[k])
+                    .alias(f"v_{k}")
+                    for k in kinds
+                ]
+                money = F.col(col) if kind in _NUMERIC else F.lit(None)
+                return F.struct(
+                    F.lit(i).alias("i"),
+                    *vals,
+                    money.cast(f"decimal(18,{MONEY_SCALE})").alias("m"),
                 )
-                aggs.append(
-                    F.countDistinct(col).cast("double").alias(f"distinct__{col}")
-                )
-                if kind in ("int", "double"):
-                    aggs.append(money_sum(col, f"sum__{col}"))
-                    aggs.append(F.min(col).cast("double").alias(f"min__{col}"))
-                    aggs.append(F.max(col).cast("double").alias(f"max__{col}"))
-            return df.agg(*aggs)
 
-        s, t = side_agg(self.source), side_agg(self.target)
-        metrics = s.columns
-        stack = ", ".join(f"'{m}', `{m}`" for m in metrics)
+            arr = F.array(slot(0), *[slot(i, c, k) for i, (c, k) in enumerate(cols, 1)])
+            return df.select(F.lit(tag).alias("_s"), F.explode(arr).alias("x"))
 
-        def unpivot(df: DataFrame, val: str) -> DataFrame:
-            return df.selectExpr(f"stack({len(metrics)}, {stack}) as (metric, {val})")
+        groups = (
+            slots(self.source, 1)
+            .unionByName(slots(self.target, 0))
+            .select("_s", "x.*")
+            .groupBy("_s", "i", *[f"v_{k}" for k in kinds])
+            .agg(F.count("*").alias("n"), F.sum("m").alias("m"))
+        )
+        n, m = F.col("n"), F.col("m")
 
-        j = unpivot(s, "sval").join(unpivot(t, "tval"), "metric")
-        # Null-safe status (r15, §7.7.2): a metric that is NULL on BOTH
-        # sides (min/max/sum over an empty or all-null side) is equally
-        # absent — MATCH, not the FP_DIFF the bare NULL comparison's
-        # when/otherwise fell into; NULL on exactly one side stays a diff.
-        return j.select(
+        def side_metrics(side: Column) -> list[tuple[str, Column]]:
+            def at(i: int) -> Column:
+                return side & (F.col("i") == i)
+
+            out = [("row_count", F.coalesce(F.sum(F.when(at(0), n)), F.lit(0)))]
+            for i, (col, kind) in enumerate(cols, 1):
+                v = F.col(f"v_{kind}")
+                nulls = F.sum(F.when(at(i), F.when(v.isNull(), n).otherwise(0)))
+                out.append((f"nulls__{col}", nulls))
+                out.append((f"distinct__{col}", F.count(F.when(at(i) & v.isNotNull(), 1))))
+                if kind in _NUMERIC:
+                    out.append((f"sum__{col}", F.sum(F.when(at(i), m))))
+                    out.append((f"min__{col}", F.min(F.when(at(i), v))))
+                    out.append((f"max__{col}", F.max(F.when(at(i), v))))
+            return out
+
+        src = side_metrics(F.col("_s") == 1)
+        tgt = side_metrics(F.col("_s") == 0)
+        fp = groups.agg(
+            *[c.cast("double").alias(f"s{j}") for j, (_, c) in enumerate(src)],
+            *[c.cast("double").alias(f"t{j}") for j, (_, c) in enumerate(tgt)],
+        )
+        stack = ", ".join(f"'{name}', s{j}, t{j}" for j, (name, _) in enumerate(src))
+        rows = fp.selectExpr(f"stack({len(src)}, {stack}) as (metric, sval, tval)")
+        # A metric NULL on both sides (min/max/sum over an empty or all-null
+        # side) is equally absent, so MATCH; NULL on exactly one side is a
+        # diff. A bare comparison would turn either case into NULL.
+        return rows.select(
             "metric",
             dround("sval", 4).alias("src_val"),
             dround("tval", 4).alias("tgt_val"),
@@ -445,9 +493,9 @@ def _summary_oracle() -> str:
              CAST(COUNT(DISTINCT o_orderpriority) AS DOUBLE) AS m16
       FROM {side}
     """
-    # Null-safe terms (r15, §7.7.2): one-side-NULL is a diff (the bare
-    # ABS() comparison NULL-propagated to 0 there), both-NULL is a match —
-    # mirroring the plan's eqNullSafe status exactly.
+    # Null-safe terms, as the plan's eqNullSafe status: NULL on one side
+    # is a diff (a bare ABS() comparison is NULL there, which counts 0);
+    # NULL on both sides is a match.
     diff_terms = " + ".join(
         f"(CASE WHEN (s.{m} IS NULL) <> (t.{m} IS NULL) THEN 1"
         f" WHEN ABS(s.{m} - t.{m}) >= 1e-9 THEN 1 ELSE 0 END)"
@@ -498,9 +546,8 @@ cells AS (
     AS v
   FROM orders s JOIN tgt_dedup t ON s.o_orderkey = t.o_orderkey
 ),
--- COALESCE (r15, §7.7.2): the SUM over a zero-row join is NULL, which the
--- status CASE read as 'DIFF' — empty == empty must report MATCH, as the
--- plan's count(*) = 0 correctly does
+-- the SUM over a zero-row join is NULL; COALESCE makes it 0, so an empty
+-- join reports MATCH, as the plan's count does
 cells0 AS (SELECT COALESCE(v, 0) AS v FROM cells),
 sfp AS ({fp_metrics.format(side='orders')}),
 tfp AS ({fp_metrics.format(side='orders_tgt')}),

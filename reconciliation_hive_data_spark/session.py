@@ -10,6 +10,17 @@ builder is for our own tests and bench runs. Conf choices (SURVEY.md §4/§6):
   real cluster this is AQE-managed from ``initialPartitionNum``.
 - UTC session timezone so timestamp semantics match the DuckDB oracle.
 - Arrow enabled for any pandas-UDF path.
+- Generated code is reused across calls. The codegen class cache holds
+  1000 entries (``spark.sql.codegen.cache.maxEntries``; Spark's default
+  is 100), and class names carry no whole-stage codegen id
+  (``spark.sql.codegen.useIdInClassName`` off). The cache is keyed by
+  source text, and AQE numbers codegen stages in the order its query
+  stages get planned, which varies between runs of one plan; with the id
+  in the name, an unchanged plan could miss the cache. One pass of the
+  benchmark's ``recon_dirty`` workload (ReconPair summary, key_diff,
+  cell_diff and the bucket hash report on a 10k-row pair) needs 97
+  classes. At 100 entries that working set evicts itself, and every pass
+  recompiled about 80 classes; at 1000 a steady pass compiles none.
 """
 
 from __future__ import annotations
@@ -29,27 +40,23 @@ def get_spark(
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", "32"))
-    # Scan-parallelism FLOOR, derived from session width (r19, guide §6 /
-    # §2 "make partitioning scale-adaptive"): a single small parquet file
-    # is one 128MB-rule split, so every post-scan projection — including
-    # CPU-bound interpreted folds like the cosine families — ran on ONE
-    # core at bench scale (and a broadcast join keeps that partitioning).
-    # The floor splits small inputs across the session's cores; at
-    # production scale splits >> cores and the floor is a no-op. Env
-    # override, defaults to the session width.
+    # Scan-parallelism floor, derived from the session width: a single
+    # small parquet file is one split, so every projection after the scan,
+    # CPU-bound interpreted folds included, would run on one core (and a
+    # broadcast join keeps that partitioning). The floor splits small
+    # inputs across the session's cores; at production scale splits far
+    # outnumber cores and the floor does nothing. Env override, defaults
+    # to the session width.
     scan_min = os.environ.get(
         "SPARK_SCAN_MIN_PARTITIONS",
         cpus if cpus != "*" else str(os.cpu_count() or 1),
     )
-    # NOTE (r19 probe): the floor only bites when the per-file open cost
-    # doesn't dominate it — maxSplitBytes = min(maxPartitionBytes,
-    # max(openCostInBytes, (totalBytes + nFiles*openCost) /
-    # minPartitionNum)) — so at the default 4 MB open cost only the
-    # ≥4 MB fixture tables actually split. Lowering openCostInBytes to
-    # 64 KB/256 KB to spread the sub-4 MB tables measured at the noise
-    # floor over an 18-query slice (26.5 / 28.4 / 27.5 s for 64 K /
-    # 256 K / 4 M) — the same verdict r18 reached for this knob — so the
-    # engine default stays.
+    # The floor only splits a file when the per-file open cost does not
+    # dominate it: maxSplitBytes = min(maxPartitionBytes, max(
+    # openCostInBytes, (totalBytes + nFiles * openCost) / minPartitionNum)),
+    # so at the default 4 MB open cost only tables of 4 MB or more split.
+    # A lower openCostInBytes (64 KB, 256 KB) did not measurably speed up
+    # the fixture queries, so the engine default stays.
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
@@ -63,6 +70,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

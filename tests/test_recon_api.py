@@ -3,12 +3,18 @@ metamorphic properties, on two different tables, through the public API."""
 
 from __future__ import annotations
 
+import datetime as dt
+
 import pytest
 from pyspark.sql import functions as F
 
+from reconciliation_hive_data_spark.canonical import dround, money_sum
 from reconciliation_hive_data_spark.catalog import load
 from reconciliation_hive_data_spark.plans import api
 from reconciliation_hive_data_spark.plans.api import ReconPair
+from reconciliation_hive_data_spark.plans.recon import orders_target
+
+from .conftest import SF_CORRECT
 
 
 @pytest.fixture(scope="module")
@@ -85,24 +91,29 @@ def test_bad_config_rejected(spark, sf_dir):
 
 def test_keys_only_pair_runs_every_check(spark):
     """With no compare columns every check still plans and runs; there
-    are no cells to compare, so cell_diff is empty but keeps its schema.
-    A NULL key never joins, so key_diff reports each side's NULL key on
-    that side."""
+    are no cells to compare, so cell_diff is empty but keeps its schema,
+    and fingerprints() reports row_count alone. A NULL key never joins,
+    so key_diff reports each side's NULL key on that side, and summary()
+    counts 4 missing keys."""
     pair = ReconPair(
         source=spark.createDataFrame([(1,), (2,), (None,)], "k long"),
         target=spark.createDataFrame([(2,), (3,), (None,)], "k long"),
         keys=["k"],
         compare_cols={},
     )
-    for check in (
-        pair.row_counts,
-        pair.key_diff,
-        pair.duplicate_keys,
-        pair.row_hash_diff,
-        pair.fingerprints,
-        pair.summary,
-    ):
+    for check in (pair.row_counts, pair.duplicate_keys, pair.row_hash_diff):
         check().collect()
+    assert [tuple(r) for r in pair.fingerprints().collect()] == [
+        ("row_count", 3.0, 3.0, 0.0, "MATCH")
+    ]
+    assert {r.check: r.violations for r in pair.summary().collect()} == {
+        "count_diff_grains": 0,
+        "keys_missing": 4,
+        "duplicate_keys": 0,
+        "row_hash_diffs": 0,
+        "cell_diffs": 0,
+        "fingerprint_diffs": 0,
+    }
     assert sorted(
         (r.k is None, r.k or 0, r.side) for r in pair.key_diff().collect()
     ) == [
@@ -186,3 +197,141 @@ def test_sample_audit_joins_every_key_and_dedups(spark, src_rows, tgt_rows, keys
     tgt = src if tgt_rows is None else spark.createDataFrame(tgt_rows, schema)
     pair = ReconPair(src, tgt, keys, {"v": "string"})
     assert {r.status: r.n_keys for r in pair.sample_audit("0").collect()} == want
+
+
+def _fingerprints_reference(pair: ReconPair):
+    """``ReconPair.fingerprints()`` in its previous spelling: one aggregate
+    per side with a ``countDistinct`` per column, each side unpivoted and
+    the two joined on the metric name."""
+
+    def side_agg(df):
+        aggs = [F.count("*").cast("double").alias("row_count")]
+        for col, kind in pair.compare_cols.items():
+            aggs.append(
+                F.sum(F.when(F.col(col).isNull(), 1).otherwise(0))
+                .cast("double")
+                .alias(f"nulls__{col}")
+            )
+            aggs.append(F.countDistinct(col).cast("double").alias(f"distinct__{col}"))
+            if kind in ("int", "double"):
+                aggs.append(money_sum(col, f"sum__{col}"))
+                aggs.append(F.min(col).cast("double").alias(f"min__{col}"))
+                aggs.append(F.max(col).cast("double").alias(f"max__{col}"))
+        return df.agg(*aggs)
+
+    s, t = side_agg(pair.source), side_agg(pair.target)
+    metrics = s.columns
+    stack = ", ".join(f"'{m}', `{m}`" for m in metrics)
+
+    def unpivot(df, val):
+        return df.selectExpr(f"stack({len(metrics)}, {stack}) as (metric, {val})")
+
+    j = unpivot(s, "sval").join(unpivot(t, "tval"), "metric")
+    return j.select(
+        "metric",
+        dround("sval", 4).alias("src_val"),
+        dround("tval", 4).alias("tgt_val"),
+        dround(F.col("sval") - F.col("tval"), 4).alias("diff"),
+        F.when(
+            F.col("sval").eqNullSafe(F.col("tval"))
+            | (F.abs(F.col("sval") - F.col("tval")) < 1e-9),
+            "MATCH",
+        )
+        .otherwise("FP_DIFF")
+        .alias("status"),
+    )
+
+
+def _orders_sf001(spark):
+    return load(spark, SF_CORRECT, "orders")
+
+
+def _doubles_pair(spark, src_vals, tgt_vals):
+    schema = "k long, d double, s string"
+    return ReconPair(
+        spark.createDataFrame([(i, v, None) for i, v in enumerate(src_vals)], schema),
+        spark.createDataFrame([(i, v, "x") for i, v in enumerate(tgt_vals)], schema),
+        ["k"],
+        {"d": "double", "s": "string"},
+    )
+
+
+def _mixed_types_pair(spark):
+    """Each compare column has a different type on each side."""
+    d, ts = dt.date, dt.datetime
+    src = spark.createDataFrame(
+        [(1, 5, 1.5, d(2020, 1, 1)), (2, None, 0.1, d(2020, 1, 2)),
+         (3, 7, -0.0, None), (4, 2**31 - 1, 3.25, d(2020, 1, 2))],
+        "k long, i int, f float, t date",
+    )
+    tgt = spark.createDataFrame(
+        [(1, 5, 1.5, ts(2020, 1, 1)), (2, 3, 0.1, ts(2020, 1, 2, 0, 0, 1)),
+         (3, 7, 0.0, None), (4, 2**35, 3.25, ts(2020, 1, 2))],
+        "k long, i bigint, f double, t timestamp",
+    )
+    return ReconPair(src, tgt, ["k"], {"i": "int", "f": "double", "t": "ts"})
+
+
+_FP_PAIRS = {
+    "orders_sf001": lambda spark: api.orders_pair(_orders_sf001(spark)),
+    "empty_target": lambda spark: api.orders_pair(
+        _orders_sf001(spark), _orders_sf001(spark).filter("false")
+    ),
+    "both_empty": lambda spark: api.orders_pair(
+        _orders_sf001(spark).filter("false"), _orders_sf001(spark).filter("false")
+    ),
+    "all_null_column": lambda spark: _doubles_pair(spark, [None, None], [1.0, None]),
+    "signed_zero_and_nan": lambda spark: _doubles_pair(
+        spark, [-0.0, 0.0, float("nan"), 2.5], [0.0, float("nan"), float("nan"), -0.0]
+    ),
+    "mixed_types": _mixed_types_pair,
+}
+
+
+@pytest.mark.parametrize("case", list(_FP_PAIRS))
+def test_fingerprints_match_count_distinct_reference(spark, case):
+    """The single-pipeline fingerprints equal the previous countDistinct
+    spelling row for row, with the same schema, on empty sides, all-NULL
+    columns, signed zeros and NaN, and sides of different types."""
+    pair = _FP_PAIRS[case](spark)
+    got, want = pair.fingerprints(), _fingerprints_reference(pair)
+    assert got.schema == want.schema
+
+    def rows(df):
+        return sorted(df.collect(), key=lambda r: [(v is None, str(v)) for v in r])
+
+    assert rows(got) == rows(want)
+
+
+def test_summary_repeats_without_codegen_or_expand(spark, sf_dir, tmp_path):
+    """Two reads of the same files plan the same generated code: once the
+    first summary() has run, the second compiles no class, and it runs at
+    most 9 jobs. fingerprints() plans no distinct-aggregate Expand, whose
+    column order varied from one read to the next."""
+    orders = load(spark, sf_dir, "orders")
+    orders.write.parquet(str(tmp_path / "src"))
+    orders_target(orders).write.parquet(str(tmp_path / "tgt"))
+
+    def read_pair():
+        return api.orders_pair(
+            spark.read.parquet(str(tmp_path / "src")),
+            spark.read.parquet(str(tmp_path / "tgt")),
+        )
+
+    first = {r.check: r.violations for r in read_pair().summary().collect()}
+    sc = spark.sparkContext
+    compiles = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    pair = read_pair()
+    before = compiles.METRIC_COMPILATION_TIME().getCount()
+    group = "test_summary_repeats_without_codegen_or_expand"
+    sc.setJobGroup(group, group)
+    try:
+        second = {r.check: r.violations for r in pair.summary().collect()}
+    finally:
+        sc._jsc.clearJobGroup()
+    assert compiles.METRIC_COMPILATION_TIME().getCount() - before == 0
+    assert second == first
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 9, jobs
+    plan = pair.fingerprints()._jdf.queryExecution().executedPlan().toString()
+    assert "Expand" not in plan
