@@ -69,7 +69,8 @@ def cmd_recon(args: argparse.Namespace) -> int:
         tolerance=args.tolerance,
     )
     if args.check == "summary":
-        report = pair.summary()
+        # read twice: shown or written, then counted for the exit status
+        report = pair.summary().localCheckpoint()
     else:
         report = getattr(pair, args.check)()
     if args.report:

@@ -12,12 +12,15 @@ Cross-engine hazards handled here (probed empirically, see canonical.py):
 
 from __future__ import annotations
 
+from zlib import crc32
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..canonical import canonical_row_hash, canonical_row_hash_sql
 from ..catalog import load
 from ..registry import query
+from .hashref import murmur3, xxhash64
 
 # ---------------------------------------------------------------------------
 # fn_string — core string surface
@@ -260,16 +263,16 @@ def fn_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _hash_spark_oracle() -> str:
-    """Full DuckDB oracle for the Spark-native hash family (r8 upgrade from
-    rows-only). xxhash64/crc32/Murmur3 have no DuckDB twin, so their
-    Spark-computed values ride along as a pinned VALUES table (generated
-    once by tools/gen_fn_hash_expected.py — the three are SPECIFIED
-    algorithms, stable across Spark versions, so the constants are known
-    answers); sha256 is recomputed natively by DuckDB over the same
-    literal domain, a genuine cross-engine hash check."""
-    from ._hash_expected import EXPECTED
-
-    values = ",\n".join(f"({n}, {xx}, {crc}, {mm})" for n, xx, crc, mm in EXPECTED)
+    """Full DuckDB oracle for the Spark-native hash family. xxhash64, crc32
+    and Murmur3 have no DuckDB twin, so the oracle carries them as a VALUES
+    table whose rows are the output of ``hashref`` (a Python reference
+    that does not use Spark) and ``zlib.crc32`` over the literal domain;
+    sha256 is recomputed natively by DuckDB."""
+    rows = []
+    for n in range(1, _HASH_DOMAIN_N + 1):
+        raw = str(n).encode()
+        rows.append(f"({n}, {xxhash64(raw)}, {crc32(raw)}, {murmur3(raw)})")
+    values = ",\n".join(rows)
     return f"""
 WITH dom AS (
   SELECT CAST(r AS BIGINT) AS n, CAST(r AS VARCHAR) AS s
@@ -294,11 +297,11 @@ _HASH_DOMAIN_N = 2000
 def fn_hash_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark-native hash family (xxhash64 / crc32 / sha2 / murmur3) over
     the stringified literal domain 1..2000 — deterministic at every sf, so
-    the Spark-only hashes are fully hash-checkable against the pinned
-    known-answer table in the oracle (SURVEY.md §2h, upgraded from
-    rows-only in r8); sha256 is DuckDB-recomputed natively. xxhash64 is
-    the scale choice for shuffle-key fingerprints: 8-byte output, ~10× md5
-    throughput, codegen-friendly."""
+    the Spark-only hashes are checked cell by cell against the oracle's
+    table from the Python reference (SURVEY.md §2h); sha256 is
+    DuckDB-recomputed natively. xxhash64 is the scale choice for
+    shuffle-key fingerprints: 8-byte output, ~10× md5 throughput,
+    codegen-friendly."""
     d = spark.range(1, _HASH_DOMAIN_N + 1).select(
         F.col("id").alias("n"), F.col("id").cast("string").alias("s")
     )

@@ -369,8 +369,7 @@ class ReconPair:
 
         Each count equals the row count of the standalone method's frame
         (``row_counts()`` and ``fingerprints()`` counted where status is not
-        MATCH). The 6-row report is materialized (localCheckpoint) so the
-        driver's count/collect never re-runs the checks."""
+        MATCH)."""
         from operator import add, or_
 
         key = self._key()
@@ -464,7 +463,6 @@ class ReconPair:
                 "status",
                 F.when(F.col("violations") == 0, "MATCH").otherwise("DIFF"),
             )
-            .localCheckpoint()
         )
 
 

@@ -35,6 +35,16 @@ def fault_plan(draw):
 )
 @given(plan=fault_plan())
 def test_injected_faults_recovered_exactly(spark, sf_dir, plan):
+    _assert_faults_recovered(spark, sf_dir, plan)
+
+
+def test_fixed_fault_plan_recovered_exactly(spark, sf_dir):
+    """One fixed (drop, dup, drift, null) plan of the fuzz above, run by
+    default."""
+    _assert_faults_recovered(spark, sf_dir, (3, 17, 42, 71))
+
+
+def _assert_faults_recovered(spark, sf_dir, plan):
     drop, dup, drift, null = plan
     orders = load(spark, sf_dir, "orders")
     key = F.col("o_orderkey")
@@ -65,10 +75,12 @@ def test_injected_faults_recovered_exactly(spark, sf_dir, plan):
     )
 
     def keys_with_residue(r: int) -> set[int]:
-        return {
+        keys = {
             row.o_orderkey
             for row in orders.filter(key % MOD == r).select("o_orderkey").collect()
         }
+        assert keys, f"fixture must contain keys at residue {r}"
+        return keys
 
     missing = {
         r.o_orderkey

@@ -306,7 +306,7 @@ def test_fingerprints_match_count_distinct_reference(spark, case):
 def test_summary_repeats_without_codegen_or_expand(spark, sf_dir, tmp_path):
     """Two reads of the same files plan the same generated code: once the
     first summary() has run, the second compiles no class, and it runs at
-    most 9 jobs. fingerprints() plans no distinct-aggregate Expand, whose
+    most 8 jobs. fingerprints() plans no distinct-aggregate Expand, whose
     column order varied from one read to the next."""
     orders = load(spark, sf_dir, "orders")
     orders.write.parquet(str(tmp_path / "src"))
@@ -332,6 +332,6 @@ def test_summary_repeats_without_codegen_or_expand(spark, sf_dir, tmp_path):
     assert compiles.METRIC_COMPILATION_TIME().getCount() - before == 0
     assert second == first
     jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert 0 < len(jobs) <= 9, jobs
+    assert 0 < len(jobs) <= 8, jobs
     plan = pair.fingerprints()._jdf.queryExecution().executedPlan().toString()
     assert "Expand" not in plan

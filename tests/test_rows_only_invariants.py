@@ -1,14 +1,12 @@
-"""Exactness backstops for the rows-only registry entries (and the
-independent recompute behind fn_hash_spark's pinned oracle).
+"""Exactness backstops for the rows-only registry entries and for the
+Python hash reference behind fn_hash_spark's oracle.
 
-``fn_hash_spark`` gained a full DuckDB oracle in r8 (Spark-computed known
-answers carried as a generated VALUES table); the tests here stay as the
-INDEPENDENT leg — per-row comparison against Python ``zlib``/``hashlib``
-(no Spark, no DuckDB) over the same literal domain, plus pinned
-known-answer literals for the Spark-only hashes (xxhash64 seed-42 and
-Murmur3 are specified by Spark and stable across versions — a change is a
-correctness event, not noise). Without this leg the oracle would only
-prove Spark equals its own generated table.
+``fn_hash_spark``'s oracle carries xxhash64, crc32 and Murmur3 as a VALUES
+table computed by ``functions/hashref.py`` (a reference that does not use
+Spark) and ``zlib.crc32``. The tests here pin that reference against
+Spark on the byte lengths the 1..2000 domain never reaches (xxhash64's 8-
+and 32-byte lanes, tails of every length, non-ASCII and NUL), and check
+crc32/sha256 per row against Python ``zlib``/``hashlib``.
 
 ``x_multimodal_binary`` (binary + Python UDF) keeps its byte-exact
 pyarrow recompute. ``s_watermark`` stays uncovered by design: its
@@ -20,21 +18,50 @@ from __future__ import annotations
 
 import hashlib
 import os
+import random
 import zlib
 
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
+from reconciliation_hive_data_spark.functions import hashref
 from reconciliation_hive_data_spark.functions.scalars import fn_hash_spark
 from reconciliation_hive_data_spark.plans.llm import x_multimodal_binary
 
-# Known-answer rows computed once from Spark's specified hash functions
-# (xxhash64 with default seed 42; Murmur3 via F.hash).
+# Known answers of Spark's specified hashes (xxhash64 with default seed 42;
+# Murmur3 via F.hash).
 _XX64_RECON_HIVE = 6725705221551110458
 _MURMUR3_RECON = 836002276
 
+# Byte-length buckets of xxhash64's code paths: tail only, 4-byte word,
+# 8-byte lanes, 32-byte stripes.
+_LENGTH_BUCKETS = ((0, 4), (4, 8), (8, 32), (32, 140))
+
+
+def _seeded_strings(n: int = 320, seed: int = 7) -> list[str]:
+    """``n`` strings spread evenly over ``_LENGTH_BUCKETS`` (by UTF-8 byte
+    length), drawn from ASCII, 2-, 3- and 4-byte characters and NUL."""
+    rng = random.Random(seed)
+    alphabet = "abcXYZ019 -\x00éß€中😀"
+    out = []
+    for i in range(n):
+        lo, hi = _LENGTH_BUCKETS[i % len(_LENGTH_BUCKETS)]
+        target = rng.randrange(lo, hi)
+        s = ""
+        while len(s.encode()) < target:
+            s += rng.choice(alphabet)
+        if len(s.encode()) >= hi:  # a multi-byte char overshot the bucket
+            s = s[:-1]
+        out.append(s)
+    return out
+
 
 def test_fn_hash_spark_known_answers(spark):
+    """The Python reference equals Spark's xxhash64 (one and two columns)
+    and Murmur3 on every lane, and both give the pinned literals."""
+    xx_recon = hashref.xxhash64(b"reconciliation")
+    assert hashref.xxhash64(b"hive", xx_recon) == _XX64_RECON_HIVE
+    assert hashref.murmur3(b"reconciliation") == _MURMUR3_RECON
     row = (
         spark.range(1)
         .select(
@@ -46,13 +73,40 @@ def test_fn_hash_spark_known_answers(spark):
     assert row.xx == _XX64_RECON_HIVE
     assert row.mm == _MURMUR3_RECON
 
+    strs = _seeded_strings()
+    sizes = [len(s.encode()) for s in strs]
+    for lo, hi in _LENGTH_BUCKETS:
+        assert sum(lo <= b < hi for b in sizes) == len(strs) // len(_LENGTH_BUCKETS)
+    assert any("\x00" in s for s in strs)
+    assert any(b > len(s) for s, b in zip(strs, sizes))
+    pairs = list(zip(strs, strs[1:] + strs[:1]))
+    got = (
+        spark.createDataFrame(
+            list(enumerate(pairs)), "i int, p struct<s: string, t: string>"
+        )
+        .select(
+            "i",
+            F.xxhash64("p.s").alias("xx"),
+            F.xxhash64("p.s", "p.t").alias("xx2"),
+            F.hash("p.s").alias("mm"),
+        )
+        .collect()
+    )
+    assert len(got) == len(pairs)
+    for r in got:
+        s, t = (x.encode() for x in pairs[r.i])
+        assert (r.xx, r.xx2, r.mm) == (
+            hashref.xxhash64(s),
+            hashref.xxhash64(t, hashref.xxhash64(s)),
+            hashref.murmur3(s),
+        ), pairs[r.i]
+
 
 def test_fn_hash_spark_crc_sha_match_python(spark, sf_dir):
-    """crc32 and sha256 have independent Python implementations: every row
-    of the query must match them byte-for-byte over the literal domain (a
-    third engine alongside Spark and the pinned oracle — this is what
-    keeps the generated VALUES table honest for crc, and sha256 honest
-    beyond the DuckDB recompute)."""
+    """crc32 and sha256 have Python implementations in the standard
+    library: every row of the query must match them byte for byte over the
+    literal domain, which checks sha256 against a third engine besides
+    Spark and DuckDB."""
     got = {r.n: r for r in fn_hash_spark(spark, sf_dir).collect()}
     assert len(got) == 2000
     for n, r in got.items():
@@ -67,8 +121,8 @@ def test_rows_only_driver_counts_pinned(spark):
     counts (the driver's correctness scale) here so a silent row-count
     drift is caught by every pytest run in between: 720 for s_watermark's
     windowed sessions (byte-identical in every driver row since round 2).
-    fn_hash_spark left this cohort in r8 (full oracle) but keeps its 2000
-    literal-domain rows — pinned for driver row-count continuity."""
+    fn_hash_spark has a full oracle but keeps its 2000 literal-domain rows
+    pinned here too."""
     from reconciliation_hive_data_spark.streaming.stream_ops import s_watermark
 
     sf001 = "/root/testdata/sf0.01"
