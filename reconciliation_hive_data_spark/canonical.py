@@ -126,20 +126,23 @@ def dround_sql(expr: str, k: int = 2) -> str:
 # canonical row serialization + hashing
 # ---------------------------------------------------------------------------
 
+def canonical_value(c: Column, kind: str) -> Column:
+    """The canonical text of one value of ``kind``, NULL for NULL: ints and
+    strings as themselves, doubles as DECIMAL(28,6) text (hazard #2 above;
+    ``+ 0.0`` folds -0.0 into 0.0) and timestamps at second precision
+    (hazard #3). Row hashes serialize each column through it, and
+    ``ReconPair.cell_diff`` reports cells in it."""
+    if kind in ("int", "string"):
+        return c.cast("string")
+    if kind == "double":
+        return (c.cast("double") + 0.0).cast(f"decimal(28,{MONEY_SCALE})").cast("string")
+    if kind == "ts":
+        return F.date_format(c, "yyyy-MM-dd HH:mm:ss")
+    raise ValueError(f"unknown canonical kind {kind!r}")
+
+
 def _canon_col(name: str, kind: str) -> Column:
-    c = F.col(name)
-    if kind == "int":
-        s = c.cast("string")
-    elif kind == "double":
-        # decimal-routed, NOT printf: see module docstring hazard #2
-        s = (c.cast("double") + 0.0).cast(f"decimal(28,{MONEY_SCALE})").cast("string")
-    elif kind == "ts":
-        s = F.date_format(c, "yyyy-MM-dd HH:mm:ss")
-    elif kind == "string":
-        s = c
-    else:
-        raise ValueError(f"unknown canonical kind {kind!r}")
-    return F.coalesce(s, F.lit(NULL))
+    return F.coalesce(canonical_value(F.col(name), kind), F.lit(NULL))
 
 
 def _canon_sql(name: str, kind: str) -> str:

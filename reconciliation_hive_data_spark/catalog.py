@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import functools
 import os
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -84,16 +85,18 @@ def _ts_is_nanos_probe(path: str, size: int, mtime_ns: int) -> bool:
     )
 
 
-#: Session-scoped RELATION cache for :func:`load` (r19, guide §1.2 /
-#: VERDICT r18 item 4): ``spark.read.parquet`` costs 50-90 ms per call on
-#: this box (py4j round trips + footer/schema inference) and the bench
-#: makes 1000+ such calls per run — pure per-query fixed overhead. The
-#: cache stores the LAZY DataFrame (an unexecuted plan: schema + file
-#: listing — metadata, never data or results; every action still scans the
-#: parquet), keyed on the owning session identity AND the file's stat
-#: signature, so a fixture regenerated in place re-probes instead of
-#: serving a stale schema — the events_ts_is_nanos memoization contract.
-_RELATION_CACHE: dict[tuple, DataFrame] = {}
+#: Session-scoped RELATION cache for :func:`load`: ``spark.read.parquet``
+#: costs tens of ms per call (py4j round trips + footer/schema inference),
+#: and a registry pass makes 1000+ such calls — pure per-query fixed
+#: overhead. The cache stores the LAZY DataFrame (an unexecuted plan:
+#: schema + file listing — metadata, never data or results; every action
+#: still scans the parquet), keyed on the owning session identity AND the
+#: file's stat signature, so a fixture regenerated in place re-probes
+#: instead of serving a stale schema — the events_ts_is_nanos memoization
+#: contract. Least-recently-used entries are evicted past
+#: ``_RELATION_CACHE_MAX``, so a long run over many sf_dirs keeps its hot
+#: tables.
+_RELATION_CACHE: OrderedDict[tuple, DataFrame] = OrderedDict()
 _RELATION_CACHE_MAX = 512
 
 
@@ -146,11 +149,12 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     )
     cached = _RELATION_CACHE.get(key)
     if cached is not None:
+        _RELATION_CACHE.move_to_end(key)
         return cached
     df = _load_uncached(spark, sf_dir, name)
-    if len(_RELATION_CACHE) >= _RELATION_CACHE_MAX:
-        _RELATION_CACHE.clear()
     _RELATION_CACHE[key] = df
+    if len(_RELATION_CACHE) > _RELATION_CACHE_MAX:
+        _RELATION_CACHE.popitem(last=False)
     return df
 
 

@@ -6,10 +6,13 @@ every per-check query (SURVEY.md §1.1, genre-defining). This module is that
 config object for the Spark engine: a :class:`ReconPair` describes WHAT to
 reconcile; each method composes the corresponding distributed check and
 returns a report DataFrame. It is the one implementation of every row-level
-check: the fixed ``recon_*`` queries that run one (row counts, key diff,
-duplicate keys, row hash, sample audit, summary) call it on the standard
-faulty orders pair built by :func:`orders_pair`. Users reconcile their own
-tables the same way::
+check: the fixed ``recon_*`` queries that run one (row counts, column
+fingerprints, key diff, duplicate keys, row hash, cell diff, tolerance,
+sample audit, summary) call it on the standard faulty orders pair built by
+:func:`orders_pair`, and keep only their fixed names and casts in a final
+select. The per-key checks share one target survivor per key, elected by
+the aggregate in ``ReconPair._per_key``. Users reconcile their own tables
+the same way::
 
     pair = ReconPair(
         source=spark.read.parquet("s3://prod/orders"),
@@ -44,6 +47,7 @@ from ..canonical import (
     MONEY_SCALE,
     canonical_row_hash,
     canonical_row_hash_sql,
+    canonical_value,
     dround,
 )
 from ..catalog import load
@@ -98,6 +102,30 @@ class ReconPair:
                 ~sc.eqNullSafe(tc) & (F.abs(sc - tc) > F.lit(self.tolerance))
             )
         return ~sc.eqNullSafe(tc)
+
+    def _per_key(self) -> tuple[DataFrame, DataFrame]:
+        """The per-key tier's two inputs. The source rows carry their
+        canonical row hash ``_h`` and the presence marker ``_sp``; the
+        target is aggregated once per key into its row count ``_tc``, its
+        set of canonical hashes ``_th`` and its survivor ``_tr``, the
+        compare columns of the row with the smallest hash. Hash ties are
+        rows with identical canonical text, so the survivor's values do
+        not depend on partitioning. This aggregate is the one place a
+        survivor is elected; a caller that does not read ``_th`` has its
+        set pruned from the plan."""
+        key, cols = self._key(), list(self.compare_cols)
+        h = canonical_row_hash(self._hash_cols())
+        s_rows = self.source.select(*key, *cols, h.alias("_h"), F.lit(1).alias("_sp"))
+        t_agg = (
+            self.target.select(*key, *cols, h.alias("_h"))
+            .groupBy(*key)
+            .agg(
+                F.count("*").alias("_tc"),
+                F.collect_set("_h").alias("_th"),
+                F.min_by(F.struct(*cols), F.col("_h")).alias("_tr"),
+            )
+        )
+        return s_rows, t_agg
 
     # -- checks -----------------------------------------------------------
 
@@ -165,38 +193,28 @@ class ReconPair:
         )
 
     def cell_diff(self) -> DataFrame:
-        """One row per (key, differing column): src vs tgt canonical values.
-        Doubles respect ``tolerance``; every comparison (tolerance or not)
-        is null-safe — a null on exactly one side always reports a diff.
+        """One row per (key, differing column) of each key-matched source
+        row: ``col_name`` and both cells as canonical text
+        (:func:`canonical.canonical_value`: doubles as DECIMAL(28,6) text,
+        timestamps at second precision), so every column kind shares one
+        string schema. Doubles respect ``tolerance``; every comparison is
+        null-safe, so a NULL on exactly one side always reports a diff.
 
-        Duplicate target keys are deduped DETERMINISTICALLY: the survivor is
-        the row with the smallest canonical row hash (total order within a
-        key group), not whatever partition ``dropDuplicates`` happens to see
-        first — so the reported src/tgt values are stable run-to-run and
-        reproducible in the SQL oracle."""
-        from pyspark.sql.window import Window
-
+        The target side is each key's survivor from :meth:`_per_key`, the
+        row with the smallest canonical row hash, so duplicate target keys
+        report the same values on every run and cluster size."""
         key = self._key()
-        s = self.source.alias("s")
-        w = Window.partitionBy(*key).orderBy(canonical_row_hash(self._hash_cols()))
-        t = (
-            self.target.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-            .alias("t")
-        )
-        j = s.join(t, [F.col(f"s.{k}") == F.col(f"t.{k}") for k in key])
-
+        s_rows, t_agg = self._per_key()
         arms: list[Column] = []
         for col, kind in self.compare_cols.items():
-            sc, tc = F.col(f"s.{col}"), F.col(f"t.{col}")
+            sc, tc = F.col(col), F.col("_tr").getField(col)
             arms.append(
                 F.when(
                     self._differs(kind, sc, tc),
                     F.struct(
                         F.lit(col).alias("col_name"),
-                        sc.cast("string").alias("src_val"),
-                        tc.cast("string").alias("tgt_val"),
+                        canonical_value(sc, kind).alias("src_val"),
+                        canonical_value(tc, kind).alias("tgt_val"),
                     ),
                 )
             )
@@ -205,15 +223,8 @@ class ReconPair:
         diffs = F.array(*arms) if arms else F.array().cast(
             "array<struct<col_name:string,src_val:string,tgt_val:string>>"
         )
-        exploded = j.select(
-            *[F.col(f"s.{k}").alias(k) for k in key],
-            F.explode(F.filter(diffs, lambda x: x.isNotNull())).alias("d"),
-        )
-        return exploded.select(
-            *key,
-            F.col("d.col_name").alias("col_name"),
-            F.col("d.src_val").alias("src_val"),
-            F.col("d.tgt_val").alias("tgt_val"),
+        return s_rows.join(t_agg, key).select(
+            *key, F.inline(F.filter(diffs, lambda x: x.isNotNull()))
         )
 
     def fingerprints(self) -> DataFrame:
@@ -357,10 +368,10 @@ class ReconPair:
         reconciliation run prints first. Two tiers share the passes:
 
         - **per-key tier** (keys_missing, duplicate_keys, row_hash_diffs,
-          cell_diffs): the target is aggregated once per key (row count,
-          distinct canonical-hash set, and the min-hash survivor row that
-          :meth:`cell_diff` keeps), then one full-outer join against the
-          per-row hashed source yields every count. A NULL key never joins,
+          cell_diffs): one full-outer join of :meth:`_per_key`'s hashed
+          source rows and per-key target aggregate yields every count; the
+          cell count compares each source row with the survivor, as
+          :meth:`cell_diff` does. A NULL key never joins,
           so each side's NULL-key group stays its own row through the
           ``_ns`` null-side grouping column.
         - **global tier** (count_diff_grains, fingerprint_diffs): a roll-up
@@ -373,22 +384,9 @@ class ReconPair:
         from operator import add, or_
 
         key = self._key()
-        cols = list(self.compare_cols)
-        h = canonical_row_hash(self._hash_cols())
 
         # --- per-key tier: checks 2-5 from one exchange pair + join ----
-        s_rows = self.source.select(
-            *key, *cols, h.alias("_h"), F.lit(1).alias("_sp")
-        )
-        t_agg = (
-            self.target.select(*key, *cols, h.alias("_h"))
-            .groupBy(*key)
-            .agg(
-                F.count("*").alias("_tc"),
-                F.collect_set("_h").alias("_th"),
-                F.min_by(F.struct(*cols), F.col("_h")).alias("_tr"),
-            )
-        )
+        s_rows, t_agg = self._per_key()
         j = s_rows.join(t_agg, key, "full_outer")
         s_present = F.col("_sp").isNotNull()
         t_present = F.col("_tc").isNotNull()

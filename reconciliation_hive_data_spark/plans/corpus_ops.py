@@ -664,12 +664,8 @@ def x_chunk_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# x_bpe_round — one deterministic BPE merge round (round 15, SURVEY §7.6.3)
+# x_bpe_round — one deterministic BPE merge round (SURVEY §7.6.3)
 # ---------------------------------------------------------------------------
-
-#: symbol standing in for the freshly merged pair inside re-split words;
-#: unreachable by construction — the token alphabet is [a-z] only
-_BPE_MARK = "\x01"
 
 _BPE_ORACLE = """
 WITH words AS (
@@ -761,62 +757,6 @@ def _bpe_words(docs: DataFrame) -> DataFrame:
     )
 
 
-def _bpe_report(words: DataFrame) -> DataFrame:
-    """Elect the argmax pair, apply the merge, emit top-20 post-merge pair
-    counts. ``words`` is consumed TWICE (pre-merge counts feeding the
-    argmax, and the merge application) — callers persist it so the corpus
-    scan behind it runs once (plan-test pinned)."""
-    pre = _bpe_pairs(words, "word").agg(F.sum("wc").alias("cnt"))
-    best = (
-        pre.orderBy(F.col("cnt").desc(), F.col("s1").asc(), F.col("s2").asc())
-        .limit(1)
-        .select(F.concat("s1", "s2").alias("pair"))
-    )
-    merged = words.crossJoin(F.broadcast(best)).select(
-        F.expr(f"replace(word, pair, '{_BPE_MARK}')").alias("word"),
-        "wc",
-        "pair",
-    )
-
-    def sym(c):
-        return F.when(c == _BPE_MARK, F.col("pair")).otherwise(c)
-
-    post = (
-        merged.filter(F.length("word") >= 2)
-        .select(
-            "wc",
-            "pair",
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, length(word) - 1),"
-                    " i -> struct(substring(word, i, 1) AS c1,"
-                    " substring(word, i + 1, 1) AS c2))"
-                )
-            ).alias("p"),
-        )
-        .groupBy(
-            F.col("pair").alias("merged_pair"),
-            sym(F.col("p.c1")).alias("s1"),
-            sym(F.col("p.c2")).alias("s2"),
-        )
-        .agg(F.sum("wc").alias("cnt"))
-    )
-    w = Window.orderBy(
-        F.col("cnt").desc(), F.col("s1").asc(), F.col("s2").asc()
-    )
-    return (
-        post.withColumn("rn", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rn") <= 20)
-        .select(
-            "merged_pair",
-            "s1",
-            "s2",
-            F.col("cnt").cast("bigint").alias("cnt"),
-            "rn",
-        )
-    )
-
-
 @query("x_bpe_round", oracle=_BPE_ORACLE)
 def x_bpe_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One deterministic BPE merge round over the corpus (SURVEY §7.6.3 —
@@ -825,8 +765,8 @@ def x_bpe_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair (ties broken lexicographically on the pair text, so the merge is
     identical on every engine/cluster/run), apply the merge greedily
     left-to-right in every word, and emit the top-20 post-merge pair
-    counts with the elected pair alongside — the vocabulary delta the
-    next round would consume.
+    counts (cnt DESC, then s1, s2 ASC on the letter text) with the elected
+    pair alongside — the vocabulary delta the next round would consume.
 
     Tokens are [a-zA-Z]+ runs of the RAW text lowercased after
     extraction (engine-invariant — see _bpe_words for the 'İ' case-
@@ -839,22 +779,28 @@ def x_bpe_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     ['aa','a']), exactly BPE's application rule for a round-1 merge of
     two single-char symbols.
 
-    Scale shape: the corpus-sized work is ONE explode + word count; the
-    vocabulary table everything after runs on is zipf-small relative to
-    the corpus and is PERSISTED for the report's duration (it feeds both
-    the pre-merge counts and the merge application — two consumers behind
-    different keys, the x_dedup_near precedent; without the persist each
-    re-scans the corpus). Both pair counts are map-side-combinable SUMs
-    over that table; the argmax is a 1-row sort-limit broadcast-attached
-    (crossJoin(broadcast) scalar convention); the top-20 is a
-    deterministic total-order limit over a <=(27^2)-row frame. The <=20-row
-    result is localCheckpoint-materialized so the cache releases eagerly.
-    At 100 TB the iterated-BPE loop (x_bpe_rounds_n) persists the word
-    table once and runs one bounded pair histogram over it per round."""
+    Scale shape: the corpus-sized work is ONE explode + word count into
+    the persisted zipf-small vocabulary table. Two map-side-combinable
+    pair histograms run over it, before and after the merge (applied as
+    a literal replace), and each is collected to the driver: it is
+    bounded by the alphabet (at most 27² rows), whatever the corpus size.
+    The driver elects the merge from the first and builds the ≤ 20-row
+    report from the second, with the marker expanded back to the pair
+    text, so no election frame is joined back into a plan and no global
+    sort or window runs on the cluster."""
     words = _bpe_words(load(spark, sf_dir, "documents")).persist()
-    out = _bpe_report(words).localCheckpoint()
+    merges = _bpe_histogram(words)[:1]
+    post = _bpe_histogram(_bpe_marked(words, merges))
     words.unpersist()
-    return out
+    pair = merges[0][0] + merges[0][1] if merges else None
+    top = sorted(
+        ((_bpe_expand(s1, merges), _bpe_expand(s2, merges), cnt) for s1, s2, cnt in post),
+        key=lambda p: (-p[2], p[0], p[1]),
+    )[:20]
+    return spark.createDataFrame(
+        [(pair, s1, s2, cnt, rn) for rn, (s1, s2, cnt) in enumerate(top, 1)],
+        "merged_pair string, s1 string, s2 string, cnt bigint, rn bigint",
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -9,9 +9,10 @@ comparison itself runs distributed and the report is itself a DataFrame
 counts/sums/min/max/distinct fingerprints are partially aggregatable
 (map-side combine), key diffs are one sort-merge join on the join key, and
 partition drill-down bounds recompute blast radius to one partition. The
-row-level checks (row counts, key diff, duplicate keys, row hash) are calls
-on :class:`plans.api.ReconPair` over the standard pair
-(:func:`plans.api.orders_pair`).
+row-level checks (row counts, column fingerprints, key diff, duplicate keys,
+row hash, cell diff, tolerance) are calls on :class:`plans.api.ReconPair`
+over the standard pair (:func:`plans.api.orders_pair`); each query keeps
+only its fixed metric names, columns and casts in a final select.
 
 Source side = ``orders``; target side = a deterministic in-query perturbation
 of orders (FIXTURES.md §B.2): per o_orderkey % 1000 — 7 → row dropped,
@@ -42,18 +43,15 @@ from ..registry import query
 def orders_target(orders: DataFrame, faulty: bool = True) -> DataFrame:
     """Target-side copy of orders; ``faulty=True`` injects the known faults.
 
-    Single-scan formulation (r18, guide §2.4/§1.2-1): the duplicate-key
-    fault is an ``explode(sequence(1, copies))`` over the perturbed row
-    (copies = 2 for the %1000==21 keys) instead of the original
-    ``perturbed UNION ALL perturbed.filter(...)``, which re-scanned the
-    100 TB source once per union arm — and did so at EVERY reference to
-    the target inside a consumer's plan. Row multiset is identical (the
-    duplicate is the same perturbed row either way; only adjacency
-    differs), and every consumer is order-insensitive: aggregates, joins,
-    full-row DISTINCT, deterministic md5-prefix sampling, and
-    row_number-over-canonical-hash dedups whose ties are value-identical
-    rows. The DuckDB twin (ORDERS_TGT_CTE) keeps the UNION ALL spelling —
-    same multiset."""
+    One scan of ``orders``: the duplicate-key fault is an
+    ``explode(sequence(1, copies))`` over the perturbed row (copies = 2 for
+    the %1000==21 keys), so each reference to the target in a consumer's
+    plan reads the source once. Both copies are the same perturbed row,
+    so the row multiset equals that of the DuckDB twin
+    (:data:`ORDERS_TGT_CTE`, a UNION ALL); only row adjacency differs, and
+    every consumer is order-insensitive (aggregates, joins, DISTINCT,
+    md5-prefix sampling, smallest-hash survivors whose ties are identical
+    rows)."""
     if not faulty:
         return orders
     kept = orders.filter(F.col("o_orderkey") % 1000 != 7)
@@ -195,29 +193,15 @@ def recon_rowcount(spark: SparkSession, sf_dir: str) -> DataFrame:
 # recon_colfp — per-column fingerprints both sides, unpivoted to metric rows
 # ---------------------------------------------------------------------------
 
-def _fingerprint_agg(df: DataFrame) -> DataFrame:
-    """Single-row fingerprint: all metrics algebraic ⇒ one distributed agg
-    with map-side partials; no collect_* (100-TB rule, SURVEY.md §7.3.7)."""
-    return df.agg(
-        F.count("*").cast("double").alias("row_count"),
-        money_sum("o_totalprice", "sum_totalprice"),
-        F.min("o_totalprice").alias("min_totalprice"),
-        F.max("o_totalprice").alias("max_totalprice"),
-        F.countDistinct("o_custkey").cast("double").alias("distinct_custkey"),
-        F.sum(F.when(F.col("o_orderpriority").isNull(), 1).otherwise(0))
-        .cast("double")
-        .alias("null_orderpriority"),
-    )
-
-
-_FP_METRICS = [
-    "row_count",
-    "sum_totalprice",
-    "min_totalprice",
-    "max_totalprice",
-    "distinct_custkey",
-    "null_orderpriority",
-]
+#: ReconPair.fingerprints() metric → recon_colfp's metric name
+_COLFP_METRICS = {
+    "row_count": "row_count",
+    "sum__o_totalprice": "sum_totalprice",
+    "min__o_totalprice": "min_totalprice",
+    "max__o_totalprice": "max_totalprice",
+    "distinct__o_custkey": "distinct_custkey",
+    "nulls__o_orderpriority": "null_orderpriority",
+}
 
 _FP_SIDE_SQL = """
 SELECT CAST(COUNT(*) AS DOUBLE) AS row_count,
@@ -232,10 +216,10 @@ FROM {table}
 
 
 def _fp_unpivot_sql(side_cte: str) -> str:
-    arms = " UNION ALL ".join(
-        f"SELECT '{m}' AS metric, {m} AS val FROM {side_cte}" for m in _FP_METRICS
+    return " UNION ALL ".join(
+        f"SELECT '{m}' AS metric, {m} AS val FROM {side_cte}"
+        for m in _COLFP_METRICS.values()
     )
-    return arms
 
 
 _COLFP_ORACLE = ORDERS_TGT_CTE + f"""
@@ -247,7 +231,8 @@ SELECT su.metric AS metric,
        CAST(ROUND(CAST(su.val AS DECIMAL(28,6)), 4) AS DOUBLE) AS src_val,
        CAST(ROUND(CAST(tu.val AS DECIMAL(28,6)), 4) AS DOUBLE) AS tgt_val,
        CAST(ROUND(CAST(su.val - tu.val AS DECIMAL(28,6)), 4) AS DOUBLE) AS diff,
-       CASE WHEN ABS(su.val - tu.val) < 1e-9 THEN 'MATCH' ELSE 'FP_DIFF' END AS status
+       CASE WHEN su.val IS NOT DISTINCT FROM tu.val OR ABS(su.val - tu.val) < 1e-9
+            THEN 'MATCH' ELSE 'FP_DIFF' END AS status
 FROM su JOIN tu ON su.metric = tu.metric
 """
 
@@ -255,29 +240,14 @@ FROM su JOIN tu ON su.metric = tu.metric
 @query("recon_colfp", oracle=_COLFP_ORACLE)
 def recon_colfp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Column-fingerprint reconciliation: (count, sum, min, max, distinct,
-    nulls) per side, one output row per metric with diff + flag."""
-    orders = load(spark, sf_dir, "orders")
-    tgt = orders_target(orders)
-    s = _fingerprint_agg(orders)
-    t = _fingerprint_agg(tgt)
+    nulls) per side, one output row per metric with diff + flag. Six rows
+    of ``ReconPair.fingerprints()``, renamed; a metric NULL on both sides
+    (sum, min or max of an all-NULL column) is a MATCH."""
+    from .api import orders_pair
 
-    def unpivot(df: DataFrame, val_name: str) -> DataFrame:
-        stack_args = ", ".join(f"'{m}', {m}" for m in _FP_METRICS)
-        return df.selectExpr(
-            f"stack({len(_FP_METRICS)}, {stack_args}) as (metric, {val_name})"
-        )
-
-    su = unpivot(s, "sval")
-    tu = unpivot(t, "tval")
-    j = su.join(tu, "metric")
-    return j.select(
-        "metric",
-        dround("sval", 4).alias("src_val"),
-        dround("tval", 4).alias("tgt_val"),
-        dround(F.col("sval") - F.col("tval"), 4).alias("diff"),
-        F.when(F.abs(F.col("sval") - F.col("tval")) < 1e-9, "MATCH")
-        .otherwise("FP_DIFF")
-        .alias("status"),
+    fp = orders_pair(load(spark, sf_dir, "orders")).fingerprints()
+    return fp.filter(F.col("metric").isin(*_COLFP_METRICS)).replace(
+        _COLFP_METRICS, subset=["metric"]
     )
 
 
@@ -378,29 +348,17 @@ SELECT k AS o_orderkey, col_name, src_val, tgt_val FROM (
 @query("recon_celldiff", oracle=_CELLDIFF_ORACLE)
 def recon_celldiff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """For key-matched rows: one output row per differing column —
-    (key, column, source value, target value). Values canonically serialized
+    (key, column, source value, target value), values as canonical text
     so mixed column types share one report schema."""
+    from .api import ReconPair
+
     orders = load(spark, sf_dir, "orders")
-    tgt = orders_target(orders).distinct()
-    j = (
-        orders.alias("s")
-        .join(tgt.alias("t"), F.col("s.o_orderkey") == F.col("t.o_orderkey"))
-        .select(
-            F.col("s.o_orderkey").alias("k"),
-            F.col("s.o_totalprice").cast("decimal(28,6)").cast("string").alias("s_price"),
-            F.col("t.o_totalprice").cast("decimal(28,6)").cast("string").alias("t_price"),
-            F.col("s.o_orderpriority").alias("s_prio"),
-            F.col("t.o_orderpriority").alias("t_prio"),
-        )
-    )
-    unpivoted = j.selectExpr(
-        "k",
-        "stack(2, 'o_totalprice', s_price, t_price, 'o_orderpriority', s_prio, t_prio)"
-        " as (col_name, src_val, tgt_val)",
-    )
-    return unpivoted.filter(~F.col("src_val").eqNullSafe(F.col("tgt_val"))).select(
-        F.col("k").alias("o_orderkey"), "col_name", "src_val", "tgt_val"
-    )
+    return ReconPair(
+        orders,
+        orders_target(orders),
+        ["o_orderkey"],
+        {"o_totalprice": "double", "o_orderpriority": "string"},
+    ).cell_diff()
 
 
 # ---------------------------------------------------------------------------
@@ -423,16 +381,16 @@ WHERE ABS(s.o_totalprice - t.o_totalprice) > 0.5
 @query("recon_tolerance", oracle=_TOLERANCE_ORACLE)
 def recon_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tolerance compare: numeric equality within eps=0.5; report rows that
-    exceed it with absolute and relative diff."""
-    orders = load(spark, sf_dir, "orders")
-    tgt = orders_target(orders).distinct()
-    j = orders.alias("s").join(
-        tgt.alias("t"), F.col("s.o_orderkey") == F.col("t.o_orderkey")
-    )
-    sp = F.col("s.o_totalprice")
-    tp = F.col("t.o_totalprice")
-    return j.filter(F.abs(sp - tp) > 0.5).select(
-        F.col("s.o_orderkey").alias("o_orderkey"),
+    exceed it with absolute and relative diff. Each source row is compared
+    with its key's target survivor (``ReconPair._per_key``); a NULL price
+    on either side is not a tolerance breach."""
+    from .api import orders_pair
+
+    pair = orders_pair(load(spark, sf_dir, "orders"))
+    s_rows, t_agg = pair._per_key()
+    sp, tp = F.col("o_totalprice"), F.col("_tr").getField("o_totalprice")
+    return s_rows.join(t_agg, pair.keys).filter(F.abs(sp - tp) > 0.5).select(
+        "o_orderkey",
         sp.alias("src_price"),
         tp.alias("tgt_price"),
         dround(F.abs(sp - tp), 4).alias("abs_diff"),

@@ -22,3 +22,37 @@ def test_in_place_rewrite_past_the_64th_entry_changes_signature(tmp_path):
     os.utime(last, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
     assert os.stat(tmp_path).st_mtime_ns == dir_mtime
     assert _path_sig(str(tmp_path)) != before
+
+
+def test_relation_cache_evicts_least_recently_used(monkeypatch):
+    """A hit refreshes an entry and an overflow drops the oldest one, so
+    the tables a run keeps using stay cached."""
+    from collections import OrderedDict
+    from types import SimpleNamespace
+
+    from reconciliation_hive_data_spark import catalog
+
+    built = []
+
+    def fake_load(spark, sf_dir, name):
+        built.append(name)
+        return object()
+
+    monkeypatch.setattr(catalog, "_RELATION_CACHE", OrderedDict())
+    monkeypatch.setattr(catalog, "_RELATION_CACHE_MAX", 2)
+    monkeypatch.setattr(catalog, "_load_uncached", fake_load)
+    spark = SimpleNamespace(
+        sparkContext=SimpleNamespace(applicationId="app"), _jsparkSession=object()
+    )
+
+    def load(name):
+        return catalog.load(spark, "/nonexistent", name)
+
+    orders = load("orders")
+    load("lineitem")
+    assert load("orders") is orders  # hit: orders is now the newest entry
+    load("part")  # overflow evicts lineitem, the least recently used
+    assert load("orders") is orders
+    load("lineitem")
+    assert built == ["orders", "lineitem", "part", "lineitem"]
+    assert len(catalog._RELATION_CACHE) == 2

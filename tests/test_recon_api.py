@@ -8,13 +8,19 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
-from reconciliation_hive_data_spark.canonical import dround, money_sum
+from reconciliation_hive_data_spark.canonical import (
+    canonical_row_hash,
+    canonical_value,
+    dround,
+    money_sum,
+)
 from reconciliation_hive_data_spark.catalog import load
 from reconciliation_hive_data_spark.plans import api
 from reconciliation_hive_data_spark.plans.api import ReconPair
 from reconciliation_hive_data_spark.plans.recon import orders_target
 
 from .conftest import SF_CORRECT
+from .test_round10_properties import _oracle_parity, _write_orders
 
 
 @pytest.fixture(scope="module")
@@ -301,6 +307,124 @@ def test_fingerprints_match_count_distinct_reference(spark, case):
         return sorted(df.collect(), key=lambda r: [(v is None, str(v)) for v in r])
 
     assert rows(got) == rows(want)
+
+
+def _cell_diff_reference(pair: ReconPair):
+    """``ReconPair.cell_diff()`` in its previous spelling: the target
+    survivor elected by a ``row_number`` window over the canonical row
+    hash and joined back on the keys, with cells rendered by
+    ``canonical_value``."""
+    from pyspark.sql.window import Window
+
+    key = pair.keys
+    w = Window.partitionBy(*key).orderBy(canonical_row_hash(pair._hash_cols()))
+    t = (
+        pair.target.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
+        .alias("t")
+    )
+    j = pair.source.alias("s").join(t, [F.col(f"s.{k}") == F.col(f"t.{k}") for k in key])
+    arms = []
+    for col, kind in pair.compare_cols.items():
+        sc, tc = F.col(f"s.{col}"), F.col(f"t.{col}")
+        arms.append(
+            F.when(
+                pair._differs(kind, sc, tc),
+                F.struct(
+                    F.lit(col).alias("col_name"),
+                    canonical_value(sc, kind).alias("src_val"),
+                    canonical_value(tc, kind).alias("tgt_val"),
+                ),
+            )
+        )
+    diffs = F.array(*arms) if arms else F.array().cast(
+        "array<struct<col_name:string,src_val:string,tgt_val:string>>"
+    )
+    exploded = j.select(
+        *[F.col(f"s.{k}").alias(k) for k in key],
+        F.explode(F.filter(diffs, lambda x: x.isNotNull())).alias("d"),
+    )
+    return exploded.select(
+        *key,
+        F.col("d.col_name").alias("col_name"),
+        F.col("d.src_val").alias("src_val"),
+        F.col("d.tgt_val").alias("tgt_val"),
+    )
+
+
+def _hostile_pair(spark, tolerance):
+    """NULL keys on both sides, a duplicate source row, and duplicate
+    target keys whose copies differ, so the survivor election decides the
+    reported values."""
+    schema = "k long, d double, s string, t timestamp"
+    t0, t1 = dt.datetime(2020, 1, 1), dt.datetime(2020, 1, 1, 0, 0, 1)
+    src = spark.createDataFrame(
+        [(1, 1.0, "a", t0), (2, 2.0, None, t0), (None, 3.0, "c", t0),
+         (None, 4.0, "d", None), (3, None, "e", t1), (4, 5.0, "f", t0),
+         (4, 5.0, "f", t0)],
+        schema,
+    )
+    tgt = spark.createDataFrame(
+        [(1, 1.4, "a", t0), (1, 9.0, "b", t1), (1, 1.4, "a", t0),
+         (2, 2.0, "x", t0), (None, 3.0, "c", t0), (3, 1.0, "e", None),
+         (4, 6.0, None, t1), (4, 5.2, "f", t0), (5, 1.0, "z", t0)],
+        schema,
+    )
+    return ReconPair(src, tgt, ["k"], {"d": "double", "s": "string", "t": "ts"}, tolerance)
+
+
+def _composite_key_pair(spark):
+    schema = "k1 long, k2 string, v double, w string"
+    src = spark.createDataFrame(
+        [(1, "a", 1.0, "x"), (1, "b", 2.0, "y"), (2, "a", 3.0, None), (2, None, 4.0, "z")],
+        schema,
+    )
+    tgt = spark.createDataFrame(
+        [(1, "a", 1.5, "x"), (1, "b", 2.0, "q"), (1, "b", 7.0, "y"), (2, "a", 3.0, "w"),
+         (2, None, 4.0, "z")],
+        schema,
+    )
+    return ReconPair(src, tgt, ["k1", "k2"], {"v": "double", "w": "string"})
+
+
+_CELL_PAIRS = {
+    **_FP_PAIRS,
+    "hostile_tol_0.5": lambda spark: _hostile_pair(spark, 0.5),
+    "hostile_tol_0": lambda spark: _hostile_pair(spark, 0.0),
+    "composite_key": _composite_key_pair,
+}
+
+
+@pytest.mark.parametrize("case", list(_CELL_PAIRS))
+def test_cell_diff_matches_window_reference(spark, case):
+    """cell_diff() reads the survivor from the per-key aggregate that
+    summary() uses; it reports the same rows, schema and nullability as
+    the row_number-window election it replaced."""
+    pair = _CELL_PAIRS[case](spark)
+    got, want = pair.cell_diff(), _cell_diff_reference(pair)
+    assert got.schema == want.schema
+
+    def rows(df):
+        return sorted(df.collect(), key=lambda r: [(v is None, str(v)) for v in r])
+
+    assert rows(got) == rows(want)
+
+
+def test_colfp_metric_null_on_both_sides_matches(spark, tmp_path):
+    """With every o_totalprice NULL, sum, min and max are NULL on both
+    sides, which recon_colfp reports as MATCH, as does its oracle."""
+    from reconciliation_hive_data_spark.plans.recon import recon_colfp
+
+    d = str(tmp_path)
+    _write_orders(spark, d, [(k, k % 5, "O", None, k % 30, "1-URGENT") for k in range(1, 60)])
+    got = {r.metric: r.status for r in recon_colfp(spark, d).collect()}
+    assert {m: got[m] for m in ("sum_totalprice", "min_totalprice", "max_totalprice")} == {
+        "sum_totalprice": "MATCH",
+        "min_totalprice": "MATCH",
+        "max_totalprice": "MATCH",
+    }
+    _oracle_parity(spark, d, ("recon_colfp",))
 
 
 def test_summary_repeats_without_codegen_or_expand(spark, sf_dir, tmp_path):
