@@ -501,8 +501,8 @@ def _summary_oracle() -> str:
         ORDERS_TGT_CTE
         + f"""
 , tgt_dedup AS (
-  -- deterministic survivor: smallest canonical row hash, mirroring
-  -- ReconPair.cell_diff's row_number-over-hash dedup exactly
+  -- deterministic survivor: the row with the smallest canonical row
+  -- hash, the min_by(struct(cols), _h) election of ReconPair._per_key
   SELECT * FROM (
     SELECT *, row_number() OVER (PARTITION BY o_orderkey ORDER BY {hash_sql}) rn
     FROM orders_tgt

@@ -1,6 +1,5 @@
-"""Reconciliation at warehouse scale, round 2: the three check shapes a
-100 TB deployment actually schedules, beyond the per-load composites in
-plans/recon.py.
+"""Reconciliation at warehouse scale: the check shapes a 100 TB deployment
+schedules beyond the per-load composites in plans/recon.py.
 
 - ``recon_snapshot_cdc`` — snapshot-to-snapshot change capture: classify
   every key between table versions v1 and v2 as INSERT / UPDATE / DELETE
@@ -23,12 +22,25 @@ plans/recon.py.
   run catching the rest; the sample predicate is a narrow filter applied
   BEFORE the join shuffle on both sides. It runs as
   ``ReconPair.sample_audit`` on the standard pair.
+- ``recon_footer_stats`` / ``recon_partition_complete`` — metadata and
+  landing checks: parquet footer statistics against a data scan, and
+  hourly partition completeness.
+- ``recon_bucket_hash`` → ``recon_bucket_drill`` → ``recon_remediate`` →
+  ``recon_remediate_apply`` — the Merkle hierarchy: per-bucket digests,
+  the differing keys inside the bad buckets, the write-ready fix-up list,
+  and its application with a re-verify. Every both-sides compare in it is
+  one union-tagged aggregate (:func:`_bh_compare`) at bucket or key grain.
+- ``recon_schema_evolve`` / ``recon_partition_evolve`` /
+  ``recon_layout_compact`` / ``recon_compact_incremental`` — migration
+  audits: schema vintages, partition layouts and compaction rewrites
+  checked against the data they must preserve.
 
 100 TB notes: CDC joins key-on-key (sort-merge, AQE-sizable) and compares
 only named columns; drift aggregates are two-phase map-side-combinable
 counts into a 10-row frame (the window over it is driver-trivial); the
 sample audit's cost scales with the sample fraction because the filter
-prunes before the exchange — asserted by a plan test.
+prunes before the exchange — asserted by a plan test; the Merkle tiers
+exchange metadata-sized digests and drill only inside damaged buckets.
 """
 
 from __future__ import annotations
@@ -535,7 +547,7 @@ def recon_partition_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# recon_bucket_hash — Merkle-style hierarchical reconciliation (round 8)
+# recon_bucket_hash — Merkle-style hierarchical reconciliation
 # ---------------------------------------------------------------------------
 
 #: digest-tier fan-out — the Merkle granularity knob. 4096 leaves keep the
@@ -558,184 +570,123 @@ def _bh_bucket() -> F.Column:
     )
 
 
-def _bh_words(df: DataFrame) -> DataFrame:
-    """Narrow per-row projection: (key, md5-derived bucket, two 32-bit hash
-    words from the canonical row hash). Everything downstream aggregates or
-    joins THESE four columns — the wide row never crosses a shuffle."""
-    return df.select(
-        F.col("o_orderkey").alias("k"),
-        _bh_bucket().alias("bucket"),
-        *_bh_hash_words(),
-    )
-
-
-def _bh_hash_words() -> list[F.Column]:
-    """The canonical row hash's first two 32-bit words, ``w1`` and ``w2``."""
+def _bh_row_words(side: int) -> list[F.Column]:
+    """One row's compare columns: side tag ``_s`` (1 source, 0 target),
+    weight ``n = 1`` and the canonical row hash's first two 32-bit words
+    ``w1``/``w2``."""
     h = canonical_row_hash(_ORDER_HASH_COLS)
     return [
-        F.conv(F.substring(h, start, 8), 16, 10).cast("bigint").alias(name)
-        for start, name in ((1, "w1"), (9, "w2"))
+        F.lit(side).alias("_s"),
+        F.lit(1).cast("bigint").alias("n"),
+        *(
+            F.conv(F.substring(h, start, 8), 16, 10).cast("bigint").alias(name)
+            for start, name in ((1, "w1"), (9, "w2"))
+        ),
     ]
 
 
-def _bh_digest(words: DataFrame, tag: str) -> DataFrame:
-    """Order-independent per-bucket digest: exact DECIMAL(38,0) sums of the
-    hash words, folded mod 2^32 (sum-mod commutes, so the digest is
-    partition- and order-invariant; decimal sums cannot overflow below
-    ~1e28 rows per bucket). Fully map-side-combinable: the exchange carries
-    at most ``_BH_BUCKETS`` rows per side."""
-
-    def word_digest(col: str) -> F.Column:
-        return (
-            (F.sum(F.col(col).cast("decimal(38,0)")) % F.lit(_BH_MOD))
-            .cast("bigint")
-        )
-
-    return words.groupBy("bucket").agg(
-        F.count("*").alias(f"{tag}_cnt"),
-        word_digest("w1").alias(f"{tag}_d1"),
-        word_digest("w2").alias(f"{tag}_d2"),
-    )
+def _bh_words(df: DataFrame, side: int) -> DataFrame:
+    """Narrow per-row projection ``(bucket, _s, n, w1, w2)``: everything
+    downstream aggregates THESE columns — the wide row never crosses a
+    shuffle."""
+    return df.select(_bh_bucket().alias("bucket"), *_bh_row_words(side))
 
 
-def _bh_same_digest() -> F.Column:
-    """Null-safe per-bucket digest equality (count + both words)."""
+def _bh_compare(tagged: DataFrame, *grain: str | F.Column) -> DataFrame:
+    """The one both-sides compare of the Merkle recon: aggregate a
+    union-tagged ``(grain…, _s, n, w1, w2)`` frame into each side's weighted
+    count and word digests (``src_cnt``/``src_d1``/``src_d2``, ``tgt_…``)
+    per grain, plus ``_agree``, their null-safe equality.
+
+    A word digest is the exact DECIMAL(38,0) sum of the words folded mod
+    2^32, so it is partition- and order-invariant (decimal sums cannot
+    overflow below ~1e28 rows per group). A side absent from a group reads
+    NULL, as a full-outer join of per-side aggregates would give: SUM
+    skips the other side's NULL ``when`` arm. The aggregate is
+    map-side-combinable, and the side tag rides the same exchange."""
+
+    def side(s: int, tag: str) -> list[F.Column]:
+        on = F.col("_s") == s
+
+        def digest(w: str) -> F.Column:
+            total = F.sum(F.when(on, F.col(w)).cast("decimal(38,0)"))
+            return (total % F.lit(_BH_MOD)).cast("bigint")
+
+        return [
+            F.sum(F.when(on, F.col("n"))).alias(f"{tag}_cnt"),
+            digest("w1").alias(f"{tag}_d1"),
+            digest("w2").alias(f"{tag}_d2"),
+        ]
+
+    same = [
+        F.col(f"src_{m}").eqNullSafe(F.col(f"tgt_{m}")) for m in ("cnt", "d1", "d2")
+    ]
     return (
-        F.col("src_cnt").eqNullSafe(F.col("tgt_cnt"))
-        & F.col("src_d1").eqNullSafe(F.col("tgt_d1"))
-        & F.col("src_d2").eqNullSafe(F.col("tgt_d2"))
+        tagged.groupBy(*grain)
+        .agg(*side(1, "src"), *side(0, "tgt"))
+        .withColumn("_agree", same[0] & same[1] & same[2])
     )
 
 
-def _bh_bad(sd: DataFrame, td: DataFrame) -> DataFrame:
-    """Digest-tier disagreement list, localCheckpoint-MATERIALIZED (r18,
-    guide §2.4/§3.3): ``bad`` fans out to 2-3 physical-plan sites in every
-    consumer (the two per-side broadcast prunes inside _bh_key_diff, plus
-    the report's own join back), and without materialization each site
-    re-inlines the whole two-scan digest subtree — recon_bucket_hash's
-    physical plan carried 12 parquet scans where the algorithm needs 4
-    (r18 plan audit). The frame is bucket-bounded (≤ _BH_BUCKETS rows) at
-    ANY data size, so the checkpoint is metadata-sized and the digest tier
-    runs exactly once.
-
-    r19 note: the plain src-vs-tgt digest tier now goes through
-    :func:`_bh_digest_both` (one union-tagged aggregate instead of two
-    aggregates + this merge join); this join form remains for the
-    apply→re-verify path, where the source digest is an already
-    materialized frame that must be reused, not recomputed."""
-    return sd.join(td, "bucket", "full_outer").filter(~_bh_same_digest()).localCheckpoint()
+def _bh_bucket_digests(src_words: DataFrame, tgt_words: DataFrame) -> DataFrame:
+    """Both sides' per-bucket digests: :func:`_bh_compare` at bucket grain.
+    NULL buckets (NULL keys) stay one row per side, as an equi-join never
+    matches NULL = NULL; the ``_nullside`` grouping column keeps them
+    apart."""
+    nullside = F.when(F.col("bucket").isNull(), F.col("_s")).alias("_nullside")
+    tagged = src_words.unionByName(tgt_words)
+    return _bh_compare(tagged, "bucket", nullside).drop("_nullside")
 
 
-def _bh_side_cnt(pred: F.Column) -> F.Column:
-    """Row count of one side of a union-tagged group; NULL when that side
-    has no rows, as a full-outer join of per-side counts would give."""
-    c = F.sum(F.when(pred, 1).otherwise(0))
-    return F.when(c > 0, c)
-
-
-def _bh_side_word(pred: F.Column, col: str) -> F.Column:
-    """One side's hash-word digest of a union-tagged group (NULL when the
-    side has no rows: SUM skips the other side's NULL arm)."""
-    return (
-        (F.sum(F.when(pred, F.col(col)).cast("decimal(38,0)")) % F.lit(_BH_MOD))
-        .cast("bigint")
+def _bh_source_words(digests: DataFrame) -> DataFrame:
+    """The source side of :func:`_bh_bucket_digests` as ``_bh_words`` rows:
+    ``n`` = the bucket's count, words = its digests. A digest row sums mod
+    2^32 exactly like the rows it summarizes, so re-digesting these rows
+    against fresh target words gives the same compare as re-reading the
+    source."""
+    return digests.filter(F.col("src_cnt").isNotNull()).select(
+        "bucket",
+        F.lit(1).alias("_s"),
+        F.col("src_cnt").alias("n"),
+        F.col("src_d1").alias("w1"),
+        F.col("src_d2").alias("w2"),
     )
 
 
-def _bh_digest_both(src: DataFrame, tgt: DataFrame) -> DataFrame:
-    """Both sides' per-bucket digests from ONE union-tagged aggregate
-    (r19, guide §2.4): row-for-row identical to
-
-        _bh_digest(_bh_words(src), "src")
-            .join(_bh_digest(_bh_words(tgt), "tgt"), "bucket", "full_outer")
-
-    but with a single exchange (the tag column rides the same
-    map-side-combined groupBy) instead of two per-side exchanges plus a
-    merge join. Sides absent from a bucket keep the full-outer NULL
-    semantics: counts become NULL via the >0 guard, word sums are NULL
-    because SUM skips the other side's all-NULL when() arm. NULL buckets
-    (NULL keys) keep the join's two-row behavior — an equi-join never
-    matches NULL = NULL, so each side's NULL-bucket digest must stay its
-    own output row, which the _nullside grouping column preserves."""
-    tagged = (
-        _bh_words(src)
-        .withColumn("_s", F.lit(1))
-        .unionByName(_bh_words(tgt).withColumn("_s", F.lit(0)))
-    )
-    is_src = F.col("_s") == 1
-    return (
-        tagged.groupBy(
-            "bucket",
-            F.when(F.col("bucket").isNull(), F.col("_s")).alias("_nullside"),
-        )
-        .agg(
-            _bh_side_cnt(is_src).alias("src_cnt"),
-            _bh_side_word(is_src, "w1").alias("src_d1"),
-            _bh_side_word(is_src, "w2").alias("src_d2"),
-            _bh_side_cnt(~is_src).alias("tgt_cnt"),
-            _bh_side_word(~is_src, "w1").alias("tgt_d1"),
-            _bh_side_word(~is_src, "w2").alias("tgt_d2"),
-        )
-        .drop("_nullside")
-    )
-
-
-def _bh_bad_both(src: DataFrame, tgt: DataFrame) -> DataFrame:
-    """Digest-tier disagreement list from the fused both-sides aggregate,
-    localCheckpoint-materialized exactly like :func:`_bh_bad` (same
-    bucket-bounded size guarantee, same fan-out rationale)."""
-    return _bh_digest_both(src, tgt).filter(~_bh_same_digest()).localCheckpoint()
+def _bh_bad(src: DataFrame, tgt: DataFrame) -> DataFrame:
+    """Digest-tier disagreement list, localCheckpoint-materialized:
+    ``bad`` fans out to 2-3 physical-plan sites in every consumer (the two
+    per-side broadcast prunes inside :func:`_bh_key_diff`, plus the
+    report's own join back), and unmaterialized each site would re-inline
+    the whole two-scan digest subtree. The frame is bucket-bounded
+    (≤ ``_BH_BUCKETS`` + one NULL-bucket row per side) at ANY data size, so
+    the checkpoint is metadata-sized and the digest tier runs exactly
+    once."""
+    digests = _bh_bucket_digests(_bh_words(src, 1), _bh_words(tgt, 0))
+    return digests.filter(~F.col("_agree")).localCheckpoint()
 
 
 def _bh_key_diff(src: DataFrame, tgt: DataFrame, bad: DataFrame) -> DataFrame:
-    """Drill tier shared by recon_bucket_hash / recon_bucket_drill:
-    broadcast the (≤ _BH_BUCKETS-row, damage-sized) bad-bucket list so each
-    side is pruned BEFORE the per-key exchange — at 100 TB the key-level
-    shuffle touches only the damaged buckets' rows. The prune joins on the
-    CHEAP key-only bucket, then re-derives the row hash for survivors
-    alone, so tier-2 CPU (not just shuffle) is bounded by the damage, not
-    the table. Per-key sums fold BOTH hash words so the drill resolves at
-    the same 64-bit strength as the digest tier. Returns one row per
-    differing (bucket, k) with both sides' copy counts and word sums."""
+    """Drill tier shared by recon_bucket_hash / recon_bucket_drill /
+    remediation: broadcast the (≤ _BH_BUCKETS-row, damage-sized) bad-bucket
+    list so each side is pruned BEFORE the per-key exchange — at 100 TB the
+    key-level shuffle touches only the damaged buckets' rows. The prune
+    joins on the CHEAP key-only bucket, then derives the row hash for
+    survivors alone, so tier-2 CPU (not just shuffle) is bounded by the
+    damage, not the table. Returns :func:`_bh_compare` at ``(bucket, k)``
+    grain — both hash words, so the drill resolves at the digest tier's
+    64-bit strength — for the differing keys only. NULL keys never reach
+    it: their NULL bucket drops from the inner prune join."""
     bad_buckets = F.broadcast(bad.select("bucket"))
 
-    def pruned_words(side: DataFrame, tag_val: int) -> DataFrame:
-        pruned = (
-            side.withColumn("bucket", _bh_bucket()).join(bad_buckets, "bucket")
-        )
+    def pruned_words(side: DataFrame, tag: int) -> DataFrame:
+        pruned = side.withColumn("bucket", _bh_bucket()).join(bad_buckets, "bucket")
         return pruned.select(
-            "bucket",
-            F.col("o_orderkey").alias("k"),
-            *_bh_hash_words(),
-            F.lit(tag_val).alias("_s"),
+            "bucket", F.col("o_orderkey").alias("k"), *_bh_row_words(tag)
         )
 
-    # One union-tagged (bucket, k) aggregate replaces the two per-side
-    # aggregates + full-outer merge (r19, guide §2.4 — the _bh_digest_both
-    # pattern at key grain). NULL buckets/keys never reach this tier (the
-    # inner prune join drops them), so no _nullside split is needed here;
-    # a side absent from a key keeps the full-outer NULLs via the >0 guard
-    # and SUM-over-all-NULL arms.
     tagged = pruned_words(src, 1).unionByName(pruned_words(tgt, 0))
-    is_src = F.col("_s") == 1
-    return (
-        tagged.groupBy("bucket", "k")
-        .agg(
-            _bh_side_cnt(is_src).alias("s_c"),
-            _bh_side_word(is_src, "w1").alias("s_kw1"),
-            _bh_side_word(is_src, "w2").alias("s_kw2"),
-            _bh_side_cnt(~is_src).alias("t_c"),
-            _bh_side_word(~is_src, "w1").alias("t_kw1"),
-            _bh_side_word(~is_src, "w2").alias("t_kw2"),
-        )
-        .filter(
-            ~(
-                F.col("s_c").eqNullSafe(F.col("t_c"))
-                & F.col("s_kw1").eqNullSafe(F.col("t_kw1"))
-                & F.col("s_kw2").eqNullSafe(F.col("t_kw2"))
-            )
-        )
-    )
+    return _bh_compare(tagged, "bucket", "k").filter(~F.col("_agree"))
 
 
 def bucket_hash_report(src: DataFrame, tgt: DataFrame) -> DataFrame:
@@ -745,7 +696,7 @@ def bucket_hash_report(src: DataFrame, tgt: DataFrame) -> DataFrame:
     Returns one row per differing bucket with both sides' counts, digest
     words, and the number of differing keys inside it; identical tables
     produce zero rows."""
-    bad = _bh_bad_both(src, tgt)
+    bad = _bh_bad(src, tgt)
     key_diff = _bh_key_diff(src, tgt, bad)
     bad_keys = key_diff.groupBy("bucket").agg(F.count("*").alias("n_bad_keys"))
 
@@ -778,10 +729,9 @@ _BH_DIGEST_SQL = """
   FROM {words} GROUP BY bucket
 """.format
 
-# Shared CTE chain (through the per-key sk/tk tables) for the two
-# bucket-recon oracles. recon_bucket_hash's oracle text concatenates to the
-# EXACT pre-split string (byte-for-byte — oracle-snapshot stability, the
-# _CHUNK_CTES precedent).
+# Shared CTE chain for the four bucket-recon oracles: per-side words and
+# bucket digests, the disagreeing buckets, the per-key sums inside them and
+# the differing keys (``drill``).
 _BH_ORACLE_CTES = ORDERS_TGT_CTE + f""",
 sw AS ({_BH_WORDS_SQL(table='orders', h=canonical_row_hash_sql(_ORDER_HASH_COLS), nb=_BH_BUCKETS)}),
 tw AS ({_BH_WORDS_SQL(table='orders_tgt', h=canonical_row_hash_sql(_ORDER_HASH_COLS), nb=_BH_BUCKETS)}),
@@ -808,16 +758,30 @@ tk AS (
          CAST(SUM(CAST(w1 AS DECIMAL(38,0))) % 4294967296 AS BIGINT) AS kw1,
          CAST(SUM(CAST(w2 AS DECIMAL(38,0))) % 4294967296 AS BIGINT) AS kw2
   FROM tw WHERE bucket IN (SELECT bucket FROM bad) GROUP BY bucket, k
-)"""
-
-_BUCKET_HASH_ORACLE = _BH_ORACLE_CTES + """,
-kc AS (
-  SELECT COALESCE(sk.bucket, tk.bucket) AS bucket, COUNT(*) AS n_bad_keys
+),
+drill AS (
+  SELECT COALESCE(sk.bucket, tk.bucket) AS bucket,
+         COALESCE(sk.k, tk.k) AS k,
+         sk.c AS s_c, tk.c AS t_c
   FROM sk FULL OUTER JOIN tk ON sk.bucket = tk.bucket AND sk.k = tk.k
   WHERE sk.c IS DISTINCT FROM tk.c OR sk.kw1 IS DISTINCT FROM tk.kw1
      OR sk.kw2 IS DISTINCT FROM tk.kw2
-  GROUP BY 1
-)
+)"""
+
+# The remediation action of each differing key, shared by the two
+# remediation oracles.
+_BH_FAULTS_CTE = """,
+faults AS (
+  SELECT bucket, k, s_c, t_c,
+         CASE WHEN s_c IS NULL THEN 'delete'
+              WHEN t_c IS NULL THEN 'insert'
+              WHEN s_c <> t_c THEN 'set_copies'
+              ELSE 'update' END AS action
+  FROM drill
+)"""
+
+_BUCKET_HASH_ORACLE = _BH_ORACLE_CTES + """,
+kc AS (SELECT bucket, COUNT(*) AS n_bad_keys FROM drill GROUP BY 1)
 SELECT CAST(bad.bucket AS BIGINT) AS bucket,
        CAST(COALESCE(src_cnt, 0) AS BIGINT) AS src_cnt,
        CAST(COALESCE(tgt_cnt, 0) AS BIGINT) AS tgt_cnt,
@@ -829,17 +793,16 @@ FROM bad LEFT JOIN kc ON bad.bucket = kc.bucket
 
 @query("recon_bucket_hash", oracle=_BUCKET_HASH_ORACLE)
 def recon_bucket_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Merkle-style hierarchical reconciliation (SURVEY §7.5.2): the
-    network-efficient 100 TB recon shape. Tier 1 reduces each side to
-    ``_BH_BUCKETS``
+    """Merkle-style hierarchical reconciliation: the network-efficient
+    100 TB recon shape. Tier 1 reduces each side to ``_BH_BUCKETS``
     order-independent bucket digests — md5-derived 32-bit words of the
     canonical row hash, summed exactly in DECIMAL(38,0) and folded mod
     2^32, so the digest is partition-order-invariant and the exchange
-    carries a metadata-sized bucket table regardless of data size. Tier 2 drills key-level
-    hash compares ONLY inside the differing buckets, pruned by a broadcast
-    of the damage-sized bad-bucket list before any key shuffle. A clean
-    pair therefore costs two aggregate scans + a metadata-sized digest
-    join — recon_rowhash
+    carries a metadata-sized bucket table regardless of data size. Tier 2
+    drills key-level hash compares ONLY inside the differing buckets,
+    pruned by a broadcast of the damage-sized bad-bucket list before any
+    key shuffle. A clean pair therefore costs one scan per side into one
+    union-tagged, metadata-sized digest aggregate — recon_rowhash
     fidelity at recon_rowcount price — and a damaged pair localizes its
     blast radius to the listed buckets. Buckets come from md5(key), not
     the key itself, so the digest tier stays uniform under any key
@@ -855,25 +818,23 @@ def recon_bucket_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _BUCKET_DRILL_ORACLE = _BH_ORACLE_CTES + """
-SELECT CAST(COALESCE(sk.bucket, tk.bucket) AS BIGINT) AS bucket,
-       CAST(COALESCE(sk.k, tk.k) AS BIGINT) AS o_orderkey,
-       CAST(COALESCE(sk.c, 0) AS BIGINT) AS src_copies,
-       CAST(COALESCE(tk.c, 0) AS BIGINT) AS tgt_copies,
-       CASE WHEN sk.c IS NULL THEN 'missing_in_source'
-            WHEN tk.c IS NULL THEN 'missing_in_target'
-            WHEN sk.c <> tk.c THEN 'copy_count'
+SELECT CAST(bucket AS BIGINT) AS bucket,
+       CAST(k AS BIGINT) AS o_orderkey,
+       CAST(COALESCE(s_c, 0) AS BIGINT) AS src_copies,
+       CAST(COALESCE(t_c, 0) AS BIGINT) AS tgt_copies,
+       CASE WHEN s_c IS NULL THEN 'missing_in_source'
+            WHEN t_c IS NULL THEN 'missing_in_target'
+            WHEN s_c <> t_c THEN 'copy_count'
             ELSE 'drift' END AS fault
-FROM sk FULL OUTER JOIN tk ON sk.bucket = tk.bucket AND sk.k = tk.k
-WHERE sk.c IS DISTINCT FROM tk.c OR sk.kw1 IS DISTINCT FROM tk.kw1
-   OR sk.kw2 IS DISTINCT FROM tk.kw2
+FROM drill
 """
 
 
 @query("recon_bucket_drill", oracle=_BUCKET_DRILL_ORACLE)
 def recon_bucket_drill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The drill half of the Merkle hierarchy recon_bucket_hash opens
-    (SURVEY §7.6.1): where the digest tier reports WHICH buckets disagree
-    and how many keys inside each, this lists the actual per-key faults —
+    """The drill half of the Merkle hierarchy recon_bucket_hash opens:
+    where the digest tier reports WHICH buckets disagree and how many
+    keys inside each, this lists the actual per-key faults —
     one row per differing (bucket, key) with both sides' copy counts and a
     fault class: ``missing_in_source`` / ``missing_in_target`` (key on one
     side only), ``copy_count`` (both sides, different multiplicities — the
@@ -892,17 +853,16 @@ def recon_bucket_drill(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_round9_properties.py)."""
     src = load(spark, sf_dir, "orders")
     tgt = orders_target(src)
-    bad = _bh_bad_both(src, tgt)
-    kd = _bh_key_diff(src, tgt, bad)
+    kd = _bh_key_diff(src, tgt, _bh_bad(src, tgt))
     zero = F.lit(0).cast("bigint")
     return kd.select(
         F.col("bucket").cast("bigint").alias("bucket"),
         F.col("k").alias("o_orderkey"),
-        F.coalesce("s_c", zero).alias("src_copies"),
-        F.coalesce("t_c", zero).alias("tgt_copies"),
-        F.when(F.col("s_c").isNull(), "missing_in_source")
-        .when(F.col("t_c").isNull(), "missing_in_target")
-        .when(F.col("s_c") != F.col("t_c"), "copy_count")
+        F.coalesce("src_cnt", zero).alias("src_copies"),
+        F.coalesce("tgt_cnt", zero).alias("tgt_copies"),
+        F.when(F.col("src_cnt").isNull(), "missing_in_source")
+        .when(F.col("tgt_cnt").isNull(), "missing_in_target")
+        .when(F.col("src_cnt") != F.col("tgt_cnt"), "copy_count")
         .otherwise("drift")
         .alias("fault"),
     )
@@ -910,7 +870,6 @@ def recon_bucket_drill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # recon_remediate — write-ready fix-up plan from the drill fault list
-# (round 16, SURVEY §7.12.1)
 # ---------------------------------------------------------------------------
 
 #: canonical-unit payload serialization for the remediation write list —
@@ -925,19 +884,7 @@ _REMEDIATE_PAYLOAD_SQL = f"""struct_pack(
            p_orderdate := {ts_str_sql('o_orderdate')},
            p_orderpriority := o_orderpriority)"""
 
-_REMEDIATE_ORACLE = _BH_ORACLE_CTES + f""",
-faults AS (
-  SELECT COALESCE(sk.bucket, tk.bucket) AS bucket,
-         COALESCE(sk.k, tk.k) AS k,
-         sk.c AS s_c, tk.c AS t_c,
-         CASE WHEN sk.c IS NULL THEN 'delete'
-              WHEN tk.c IS NULL THEN 'insert'
-              WHEN sk.c <> tk.c THEN 'set_copies'
-              ELSE 'update' END AS action
-  FROM sk FULL OUTER JOIN tk ON sk.bucket = tk.bucket AND sk.k = tk.k
-  WHERE sk.c IS DISTINCT FROM tk.c OR sk.kw1 IS DISTINCT FROM tk.kw1
-     OR sk.kw2 IS DISTINCT FROM tk.kw2
-),
+_REMEDIATE_ORACLE = _BH_ORACLE_CTES + _BH_FAULTS_CTE + f""",
 pay AS (
   SELECT o_orderkey AS pk,
          arg_min({_REMEDIATE_PAYLOAD_SQL},
@@ -962,10 +909,10 @@ FROM faults f LEFT JOIN pay p ON f.k = p.pk
 
 @query("recon_remediate", oracle=_REMEDIATE_ORACLE)
 def recon_remediate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The remediation tier below recon_bucket_drill (SURVEY §7.12.1):
-    where drill reports WHAT disagrees (per-key copy counts + a fault
-    class), this emits the WRITE-READY action list the fix-up job
-    executes — one row per faulted key:
+    """The remediation tier below recon_bucket_drill: where drill
+    reports WHAT disagrees (per-key copy counts + a fault class), this
+    emits the WRITE-READY action list the fix-up job executes — one row
+    per faulted key:
 
       ``action``      — 'insert' (key absent from target), 'delete' (key
                         absent from source: target-only garbage),
@@ -989,15 +936,15 @@ def recon_remediate(spark: SparkSession, sf_dir: str) -> DataFrame:
     values: payloads that tie on canonical text serialize identically in
     canonical units, so either engine's arbitrary tie pick is invisible.
     The struct (not per-column arg_min) form is load-bearing: DuckDB's
-    scalar ``arg_min`` SKIPS rows whose value argument is NULL (probed
-    r16), which would resurrect a non-null payload field from a losing
-    copy; ``struct_pack`` is never NULL as a whole, so NULL fields ride
-    through faithfully on both engines.
+    scalar ``arg_min`` SKIPS rows whose value argument is NULL, which
+    would resurrect a non-null payload field from a losing copy;
+    ``struct_pack`` is never NULL as a whole, so NULL fields ride through
+    faithfully on both engines.
 
     Scale shape: faults inherit _bh_key_diff's damage-bounded drill (the
     bad-bucket broadcast prunes both sides before any key-level exchange),
     and the payload fetch joins the source against the damage-sized
-    write-key list with NO explicit broadcast hint (ADVICE r16): under the
+    write-key list with NO explicit broadcast hint: under the
     autoBroadcastJoinThreshold the optimizer (or AQE, from runtime sizes)
     broadcasts it and the 100 TB side never shuffles — the exact-membership
     degenerate of a Bloom-filter prune; if the fault list ever outgrows the
@@ -1027,29 +974,27 @@ def remediation_plan(
     fault list → write-ready per-key action rows with deterministically
     elected canonical-unit source payloads.
 
-    ``bad`` lets remediation_apply_report pass an already-materialized
-    digest-tier disagreement list (derived from the shared both-sides
-    digest checkpoint) so the apply→re-verify pipeline runs the digest
-    tier once instead of twice (r18 sd-sharing, restructured r19 around
-    :func:`_bh_digest_both`)."""
+    ``bad`` lets remediation_apply_report pass the disagreement list it
+    derives from its own materialized both-sides digest, so the
+    apply→re-verify pipeline digests the source once."""
     if bad is None:
-        bad = _bh_bad_both(src, tgt)
+        bad = _bh_bad(src, tgt)
     faults = (
         _bh_key_diff(src, tgt, bad)
         .select(
             "bucket",
             "k",
-            "s_c",
-            "t_c",
-            F.when(F.col("s_c").isNull(), "delete")
-            .when(F.col("t_c").isNull(), "insert")
-            .when(F.col("s_c") != F.col("t_c"), "set_copies")
+            "src_cnt",
+            "tgt_cnt",
+            F.when(F.col("src_cnt").isNull(), "delete")
+            .when(F.col("tgt_cnt").isNull(), "insert")
+            .when(F.col("src_cnt") != F.col("tgt_cnt"), "set_copies")
             .otherwise("update")
             .alias("action"),
         )
         .persist()
     )
-    # No explicit broadcast HINT here (ADVICE r16): a hint is honored
+    # No explicit broadcast HINT here: a hint is honored
     # unconditionally regardless of autoBroadcastJoinThreshold, so a heavily
     # damaged pair would force-broadcast an arbitrarily large key list and
     # risk driver OOM. Left to the optimizer, the damage-sized list
@@ -1081,8 +1026,8 @@ def remediation_plan(
             F.col("bucket").cast("bigint").alias("bucket"),
             F.col("k").cast("bigint").alias("o_orderkey"),
             "action",
-            F.coalesce("s_c", zero).alias("src_copies"),
-            F.coalesce("t_c", zero).alias("tgt_copies"),
+            F.coalesce("src_cnt", zero).alias("src_copies"),
+            F.coalesce("tgt_cnt", zero).alias("tgt_copies"),
             F.col("p.p_custkey").alias("p_custkey"),
             F.col("p.p_orderstatus").alias("p_orderstatus"),
             F.col("p.p_totalprice").alias("p_totalprice"),
@@ -1097,22 +1042,9 @@ def remediation_plan(
 
 # ---------------------------------------------------------------------------
 # recon_remediate_apply — apply the fix-up list, re-verify convergence
-# (round 18, SURVEY §7.13.1)
 # ---------------------------------------------------------------------------
 
-_REMEDIATE_APPLY_ORACLE = _BH_ORACLE_CTES + f""",
-faults AS (
-  SELECT COALESCE(sk.bucket, tk.bucket) AS bucket,
-         COALESCE(sk.k, tk.k) AS k,
-         sk.c AS s_c, tk.c AS t_c,
-         CASE WHEN sk.c IS NULL THEN 'delete'
-              WHEN tk.c IS NULL THEN 'insert'
-              WHEN sk.c <> tk.c THEN 'set_copies'
-              ELSE 'update' END AS action
-  FROM sk FULL OUTER JOIN tk ON sk.bucket = tk.bucket AND sk.k = tk.k
-  WHERE sk.c IS DISTINCT FROM tk.c OR sk.kw1 IS DISTINCT FROM tk.kw1
-     OR sk.kw2 IS DISTINCT FROM tk.kw2
-),
+_REMEDIATE_APPLY_ORACLE = _BH_ORACLE_CTES + _BH_FAULTS_CTE + f""",
 -- convergence prediction, derived INDEPENDENTLY of any simulated apply:
 -- a non-delete faulted key converges iff all its source copies share one
 -- canonical serialization (apply writes s_c copies of the single elected
@@ -1166,10 +1098,9 @@ def remediation_apply_frames(
       elected canonical payload via ``explode(sequence(1, src_copies))``.
       The ``src_copies >= 1`` guard is LOAD-BEARING even though a groupBy
       count is always >= 1: Spark's ``sequence(1, 0)`` DESCENDS (emits
-      [1, 0] — the shingles3 abort class, probed r17) instead of dropping
-      the row like DuckDB's ``range``, so any future zero-copy action arm
-      would silently double-insert without it (probe pinned in
-      tests/test_round18_remediate_apply.py).
+      [1, 0]) instead of dropping the row like DuckDB's ``range``, so any
+      future zero-copy action arm would silently double-insert without it
+      (pinned in tests/test_round18_remediate_apply.py).
 
     The re-inserted rows are the CANONICAL projection of the elected
     source copy (decimal-6 doubles, second-precision timestamps parsed
@@ -1181,8 +1112,8 @@ def remediation_apply_frames(
     source and surface as a spurious residual.
 
     Neither the anti-join list nor the payload frame carries a broadcast
-    HINT (ADVICE r16 precedent): both are damage-sized, so AQE broadcasts
-    them under the threshold and degrades gracefully past it."""
+    HINT (as in :func:`remediation_plan`): both are damage-sized, so AQE
+    broadcasts them under the threshold and degrades gracefully past it."""
     plan = remediation_plan(src, tgt, bad=bad)  # localCheckpointed once
     cols = [name for name, _ in _ORDER_HASH_COLS]
     fault_keys = plan.select(F.col("o_orderkey").alias("fk"))
@@ -1214,21 +1145,19 @@ def remediation_apply_report(src: DataFrame, tgt: DataFrame) -> DataFrame:
     """The reusable core of recon_remediate_apply (docstring there):
     apply the remediation plan, re-run the digest recon src vs post-apply
     target, and report per-action applied counts + residual convergence."""
-    # ONE materialized digest action serves the whole pipeline (r19,
-    # guide §2.4/§5 — fusing r18's two separate checkpoints): the fused
-    # both-sides digest (union-tagged single aggregate) is checkpointed
-    # once, then the fault-detection disagreement list AND the re-verify's
-    # source digest are metadata-sized derivations of it — no second
-    # digest action, no re-scan. Bucket-bounded (≤ _BH_BUCKETS + NULL-side
-    # rows) at any data size.
-    both = _bh_digest_both(src, tgt).localCheckpoint()
-    bad = both.filter(~_bh_same_digest())
-    sd = both.filter(F.col("src_cnt").isNotNull()).select(
-        "bucket", "src_cnt", "src_d1", "src_d2"
-    )
+    # ONE materialized digest action serves the whole pipeline: the
+    # both-sides bucket digest is checkpointed once (bucket-bounded at any
+    # data size), and both the fault-detection disagreement list and the
+    # re-verify's source side derive from it, so the source is digested
+    # once.
+    both = _bh_bucket_digests(_bh_words(src, 1), _bh_words(tgt, 0)).localCheckpoint()
+    bad = both.filter(~F.col("_agree"))
     plan, tgt_after = remediation_apply_frames(src, tgt, bad=bad)
-    td = _bh_digest(_bh_words(tgt_after), "tgt")
-    bad_after = _bh_bad(sd, td)
+    bad_after = (
+        _bh_bucket_digests(_bh_source_words(both), _bh_words(tgt_after, 0))
+        .filter(~F.col("_agree"))
+        .localCheckpoint()
+    )
     resid = _bh_key_diff(src, tgt_after, bad_after).select("bucket", "k")
     zero = F.lit(0).cast("bigint")
     per_action = plan.groupBy("action").agg(
@@ -1285,10 +1214,10 @@ def remediation_apply_report(src: DataFrame, tgt: DataFrame) -> DataFrame:
 
 @query("recon_remediate_apply", oracle=_REMEDIATE_APPLY_ORACLE)
 def recon_remediate_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The convergence tier completing detect → plan → apply → verify
-    (SURVEY §7.13.1): execute recon_remediate's write-ready action list
-    against the target, then RE-RUN the digest reconciliation between the
-    source and the post-apply target, reporting one row per action class:
+    """The convergence tier completing detect → plan → apply → verify:
+    execute recon_remediate's write-ready action list against the target,
+    then RE-RUN the digest reconciliation between the source and the
+    post-apply target, reporting one row per action class:
 
       ``n_keys``         — faulted keys carrying this action;
       ``rows_removed``   — target rows anti-joined out (the key's full
@@ -1320,8 +1249,9 @@ def recon_remediate_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the plan inherits the damage-bounded drill; the apply is
     an unhinted anti-join against the damage-sized key list (AQE
     broadcast) plus a damage-sized explode — the 100 TB side never
-    shuffles; the re-verify is the recon's own two digest scans (the
-    price of verification) plus a drill confined to still-bad buckets.
+    shuffles; the re-verify digests the post-apply target against the
+    checkpointed source digest (the price of verification) plus a drill
+    confined to still-bad buckets.
     The residual word-sum compare shares the recon's 64-bit fold model:
     a multi-payload source whose copies' hash words sum to the elected
     payload's exact multiple mod 2^32 would read as converged — the same

@@ -43,23 +43,3 @@ def test_orders_target_single_scan_plan(spark, sf_dir):
     orders = load(spark, sf_dir, "orders")
     plan = orders_target(orders)._jdf.queryExecution().optimizedPlan().toString()
     assert plan.count("Relation") == 1
-
-
-def test_bh_bad_is_materialized_and_bucket_bounded(spark, sf_dir):
-    """_bh_bad returns a checkpointed (scan-free) frame so consumers fan
-    out against materialized rows, never a re-inlined digest subtree."""
-    from reconciliation_hive_data_spark.plans.recon_scale import (
-        _BH_BUCKETS,
-        _bh_bad,
-        _bh_digest,
-        _bh_words,
-    )
-
-    src = load(spark, sf_dir, "orders")
-    tgt = orders_target(src)
-    sd = _bh_digest(_bh_words(src), "src")
-    td = _bh_digest(_bh_words(tgt), "tgt")
-    bad = _bh_bad(sd, td)
-    plan = bad._jdf.queryExecution().optimizedPlan().toString()
-    assert "LogicalRDD" in plan and "parquet" not in plan
-    assert bad.count() <= _BH_BUCKETS

@@ -9,16 +9,17 @@ import datetime
 
 from pyspark.sql import functions as F
 
+from reconciliation_hive_data_spark.canonical import canonical_row_hash
 from reconciliation_hive_data_spark.catalog import load
-from reconciliation_hive_data_spark.plans.recon import orders_target
+from reconciliation_hive_data_spark.plans.recon import _ORDER_HASH_COLS, orders_target
 from reconciliation_hive_data_spark.plans.recon_scale import (
     _BH_BUCKETS,
-    _bh_bad_both,
-    _bh_digest,
-    _bh_digest_both,
+    _bh_bad,
+    _bh_bucket_digests,
     _bh_key_diff,
-    _bh_same_digest,
+    _bh_source_words,
     _bh_words,
+    bucket_hash_report,
 )
 
 _ORDERS_COLS = [
@@ -50,12 +51,51 @@ def _row(k, price=10.0):
     )
 
 
+# ---------------------------------------------------------------------------
+# Merkle recon: the union-tagged compare against per-side aggregates joined
+# full-outer, spelled out here without the module's helpers.
+# ---------------------------------------------------------------------------
+
+
+def _ref_words(df):
+    """(bucket, k, w1, w2): md5(key) bucket and the canonical row hash's
+    first two 32-bit words."""
+    h = canonical_row_hash(_ORDER_HASH_COLS)
+    md5_key = F.md5(F.col("o_orderkey").cast("string"))
+    return df.select(
+        F.pmod(
+            F.conv(F.substring(md5_key, 1, 4), 16, 10).cast("bigint"),
+            F.lit(_BH_BUCKETS),
+        ).alias("bucket"),
+        F.col("o_orderkey").alias("k"),
+        F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint").alias("w1"),
+        F.conv(F.substring(h, 9, 8), 16, 10).cast("bigint").alias("w2"),
+    )
+
+
+def _ref_side(words, grain, tag):
+    """One side's count and decimal mod-2^32 word sums per grain."""
+    return words.groupBy(*grain).agg(
+        F.count("*").alias(f"{tag}_cnt"),
+        *(
+            (F.sum(F.col(w).cast("decimal(38,0)")) % F.lit(4294967296))
+            .cast("bigint")
+            .alias(f"{tag}_d{i}")
+            for i, w in ((1, "w1"), (2, "w2"))
+        ),
+    )
+
+
 def _digest_join_spelling(src, tgt):
-    """The pre-r19 digest tier: two per-side aggregates + full-outer merge,
-    kept as the independent expectation for the union-tagged rewrite."""
-    sd = _bh_digest(_bh_words(src), "src")
-    td = _bh_digest(_bh_words(tgt), "tgt")
-    return sd.join(td, "bucket", "full_outer")
+    """Per-side bucket digests joined full-outer: the independent
+    expectation for the union-tagged digest."""
+    return _ref_side(_ref_words(src), ["bucket"], "src").join(
+        _ref_side(_ref_words(tgt), ["bucket"], "tgt"), "bucket", "full_outer"
+    )
+
+
+def _digests(src, tgt):
+    return _bh_bucket_digests(_bh_words(src, 1), _bh_words(tgt, 0)).drop("_agree")
 
 
 def _sorted_rows(df):
@@ -68,7 +108,7 @@ def _sorted_rows(df):
 def test_digest_both_matches_join_spelling_on_fixture(spark, sf_dir):
     src = load(spark, sf_dir, "orders")
     tgt = orders_target(src)
-    got = _sorted_rows(_bh_digest_both(src, tgt))
+    got = _sorted_rows(_digests(src, tgt))
     want = _sorted_rows(_digest_join_spelling(src, tgt))
     assert got == want and len(got) > 0
 
@@ -79,7 +119,7 @@ def test_digest_both_matches_join_spelling_with_null_keys(spark):
     # own row — the union-tagged aggregate reproduces that via _nullside.
     src = _frame(spark, [_row(1), _row(2), _row(None), _row(None, 99.0)])
     tgt = _frame(spark, [_row(1), _row(3), _row(None, 42.0)])
-    got = _sorted_rows(_bh_digest_both(src, tgt))
+    got = _sorted_rows(_digests(src, tgt))
     want = _sorted_rows(_digest_join_spelling(src, tgt))
     assert got == want
     # two distinct NULL-bucket rows, one per side
@@ -91,77 +131,103 @@ def test_digest_both_matches_join_spelling_with_null_keys(spark):
     ]
 
 
+def test_source_digest_rows_reverify_like_source_rows(spark):
+    """The re-verify digests the source's bucket digest rows (n = count,
+    words = digests) against target words; that must equal digesting the
+    source rows themselves, NULL-bucket rows and multi-row buckets
+    included."""
+    src = _frame(
+        spark,
+        [_row(1), _row(2), _row(2, 21.0), _row(2, 22.0), _row(3)]
+        + [_row(None), _row(None, 99.0)],
+    )
+    tgt = _frame(spark, [_row(1), _row(2), _row(4), _row(None, 42.0)])
+    src_rows = _bh_source_words(
+        _bh_bucket_digests(_bh_words(src, 1), _bh_words(tgt, 0))
+    )
+    got = _sorted_rows(
+        _bh_bucket_digests(src_rows, _bh_words(tgt, 0)).drop("_agree")
+    )
+    want = _sorted_rows(_digest_join_spelling(src, tgt))
+    assert got == want
+    # the duplicated key's bucket carries three source rows in one word row
+    assert max(r[1] or 0 for r in got) == 3
+    assert len([r for r in got if r[0] is None]) == 2
+
+
 def test_bad_both_is_materialized_and_bucket_bounded(spark, sf_dir):
-    """_bh_bad_both returns a checkpointed (scan-free) frame so consumers
-    fan out against materialized rows, never a re-inlined digest subtree."""
+    """_bh_bad returns a checkpointed (scan-free) frame so consumers fan
+    out against materialized rows, never a re-inlined digest subtree."""
     src = load(spark, sf_dir, "orders")
     tgt = orders_target(src)
-    bad = _bh_bad_both(src, tgt)
+    bad = _bh_bad(src, tgt)
     plan = bad._jdf.queryExecution().optimizedPlan().toString()
     assert "LogicalRDD" in plan and "parquet" not in plan
     assert bad.count() <= _BH_BUCKETS + 2  # + one NULL-bucket row per side
 
 
 def test_key_diff_matches_two_aggregate_spelling(spark, sf_dir):
-    """The union-tagged (bucket, k) drill equals the pre-r19 per-side
-    aggregates + full-outer merge, row for row."""
+    """The union-tagged (bucket, k) drill equals per-side aggregates over
+    the bad buckets joined full-outer, row for row."""
     src = load(spark, sf_dir, "orders")
     tgt = orders_target(src)
-    bad = _bh_bad_both(src, tgt)
+    bad = _bh_bad(src, tgt)
 
     def keyed(side, tag):
-        pruned = side.withColumn(
-            "bucket",
-            F.pmod(
-                F.conv(
-                    F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 4),
-                    16,
-                    10,
-                ).cast("bigint"),
-                F.lit(_BH_BUCKETS),
-            ),
-        ).join(F.broadcast(bad.select("bucket")), "bucket")
-        from reconciliation_hive_data_spark.canonical import canonical_row_hash
-        from reconciliation_hive_data_spark.plans.recon import _ORDER_HASH_COLS
-
-        h = canonical_row_hash(_ORDER_HASH_COLS)
-        words = pruned.select(
-            "bucket",
-            F.col("o_orderkey").alias("k"),
-            F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint").alias("w1"),
-            F.conv(F.substring(h, 9, 8), 16, 10).cast("bigint").alias("w2"),
-        )
-        return words.groupBy("bucket", "k").agg(
-            F.count("*").alias(f"{tag}_c"),
-            (F.sum(F.col("w1").cast("decimal(38,0)")) % F.lit(4294967296))
-            .cast("bigint")
-            .alias(f"{tag}_kw1"),
-            (F.sum(F.col("w2").cast("decimal(38,0)")) % F.lit(4294967296))
-            .cast("bigint")
-            .alias(f"{tag}_kw2"),
-        )
+        words = _ref_words(side).join(F.broadcast(bad.select("bucket")), "bucket")
+        return _ref_side(words, ["bucket", "k"], tag)
 
     want_df = (
-        keyed(src, "s")
-        .join(keyed(tgt, "t"), ["bucket", "k"], "full_outer")
+        keyed(src, "src")
+        .join(keyed(tgt, "tgt"), ["bucket", "k"], "full_outer")
         .filter(
             ~(
-                F.col("s_c").eqNullSafe(F.col("t_c"))
-                & F.col("s_kw1").eqNullSafe(F.col("t_kw1"))
-                & F.col("s_kw2").eqNullSafe(F.col("t_kw2"))
+                F.col("src_cnt").eqNullSafe(F.col("tgt_cnt"))
+                & F.col("src_d1").eqNullSafe(F.col("tgt_d1"))
+                & F.col("src_d2").eqNullSafe(F.col("tgt_d2"))
             )
         )
     )
-    got = _sorted_rows(_bh_key_diff(src, tgt, bad))
+    got = _sorted_rows(_bh_key_diff(src, tgt, bad).drop("_agree"))
     want = _sorted_rows(want_df)
     assert got == want and len(got) > 0
 
 
 def test_same_digest_filter_on_clean_pair_is_empty(spark):
     src = _frame(spark, [_row(1), _row(2), _row(3)])
-    assert (
-        _bh_digest_both(src, src).filter(~_bh_same_digest()).count() == 0
-    )
+    assert _bh_bad(src, src).count() == 0
+
+
+def test_bucket_hash_report_repeats_without_codegen(spark, sf_dir, tmp_path):
+    """Two reads of the same files plan the same generated code: once the
+    first report has run, the second compiles no class, runs at most 8
+    jobs and returns the same rows."""
+    orders = load(spark, sf_dir, "orders")
+    orders.write.parquet(str(tmp_path / "src"))
+    orders_target(orders).write.parquet(str(tmp_path / "tgt"))
+
+    def read_report():
+        return bucket_hash_report(
+            spark.read.parquet(str(tmp_path / "src")),
+            spark.read.parquet(str(tmp_path / "tgt")),
+        )
+
+    first = _sorted_rows(read_report())
+    sc = spark.sparkContext
+    compiles = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    src = spark.read.parquet(str(tmp_path / "src"))
+    tgt = spark.read.parquet(str(tmp_path / "tgt"))
+    before = compiles.METRIC_COMPILATION_TIME().getCount()
+    group = "test_bucket_hash_report_repeats_without_codegen"
+    sc.setJobGroup(group, group)
+    try:
+        second = _sorted_rows(bucket_hash_report(src, tgt))
+    finally:
+        sc._jsc.clearJobGroup()
+    assert compiles.METRIC_COMPILATION_TIME().getCount() - before == 0
+    assert second == first and len(first) > 0
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 8, jobs
 
 
 # ---------------------------------------------------------------------------
