@@ -56,11 +56,11 @@ WITH embeddings_dup AS (
 
 
 def documents_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duplicate-injected documents fixture, single-scan (r18, guide §2.4):
-    the %50==0 echo rows come from an ``explode`` over a per-row offset
-    array instead of the original ``UNION ALL`` of a second filtered scan —
-    every consumer plan reads the corpus ONCE (the union re-scanned it per
-    reference; at 100 TB that is a second full pass for 2% extra rows).
+    """Duplicate-injected documents fixture, single-scan: the %50==0 echo
+    rows come from an ``explode`` over a per-row offset array instead of a
+    ``UNION ALL`` of a second filtered scan — every consumer plan reads the
+    corpus ONCE (a union re-scans it per reference; at 100 TB that is a
+    second full pass for 2% extra rows).
     Multiset identical — only adjacency differs — and every consumer is
     order-insensitive (aggregates, equi-joins, the md5 permutations).
     The oracle-side DOCS_DUP_CTE keeps its UNION ALL spelling."""
@@ -84,7 +84,7 @@ def documents_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def embeddings_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-injected embeddings fixture, single-scan (see
-    documents_dup — same r18 explode-over-offsets rewrite, same multiset)."""
+    documents_dup — same explode-over-offsets construction, same multiset)."""
     e = load(spark, sf_dir, "embeddings")
     offs = (
         F.when(F.col("vec_id") % 100 == 0, F.array(F.lit(0), F.lit(1000000)))
@@ -165,6 +165,74 @@ def shingles3(df: DataFrame) -> DataFrame:
     )
 
 
+def minhash_signatures(toks: DataFrame) -> DataFrame:
+    """(doc_id, mh1..mh8, n): the 8 md5-derived min-hashes of each doc's
+    shingle set plus its shingle count, in ONE groupBy(doc_id). Each
+    permutation is a different min-aggregate over the same shingle rows,
+    so there is no ×8 explode and no (doc_id, i) shuffle; the count (the
+    Jaccard and containment denominators) rides along."""
+    return toks.groupBy("doc_id").agg(
+        *[
+            F.min(
+                F.substring(F.md5(F.concat_ws(":", F.lit(str(i)), F.col("tok"))), 1, 8)
+            ).alias(f"mh{i}")
+            for i in range(1, 9)
+        ],
+        F.count("*").alias("n"),
+    )
+
+
+def band_signatures(sigs: DataFrame) -> DataFrame:
+    """(doc_id, n, band, sig): 4 LSH bands × 2 rows, each band's signature
+    the '|'-joined pair of its min-hashes — built array-side from the mh
+    columns and exploded, a narrow map."""
+    band_arr = F.array(
+        *[
+            F.struct(
+                F.lit(b).cast("bigint").alias("band"),
+                F.concat_ws("|", f"mh{2 * b + 1}", f"mh{2 * b + 2}").alias("sig"),
+            )
+            for b in range(4)
+        ]
+    )
+    return sigs.select("doc_id", "n", F.explode(band_arr).alias("bs")).select(
+        "doc_id", "n", F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig")
+    )
+
+
+def lsh_candidates(bands: DataFrame) -> DataFrame:
+    """(doc_a, na, doc_b, nb): distinct pairs with doc_a < doc_b that share
+    at least one full band. The equi-join on (band, sig) bounds the
+    quadratic term: cost tracks duplicate density, not n²."""
+    a = bands.select(
+        F.col("doc_id").alias("doc_a"), F.col("n").alias("na"), "band", "sig"
+    )
+    b = bands.select(
+        F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"), "band", "sig"
+    )
+    return (
+        a.join(b, ["band", "sig"])
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .select("doc_a", "na", "doc_b", "nb")
+        .distinct()
+    )
+
+
+def shingle_overlap(pairs: DataFrame, toks: DataFrame, *carry: str) -> DataFrame:
+    """``pairs`` (doc_a, na, doc_b, nb, *carry) plus ``ninter``, the exact
+    size of the two docs' shingle-set intersection. ``toks`` is read on both
+    sides behind different shuffle keys, so callers persist it (or read it
+    from an index) when it also fed the signatures."""
+    ta = toks.select(F.col("doc_id").alias("doc_a"), "tok")
+    tb = toks.select(F.col("doc_id").alias("doc_b"), "tok")
+    return (
+        pairs.join(ta, "doc_a")
+        .join(tb, ["doc_b", "tok"])
+        .groupBy("doc_a", "doc_b", "na", "nb", *carry)
+        .agg(F.count("*").alias("ninter"))
+    )
+
+
 # ---------------------------------------------------------------------------
 # x_dedup_exact — hash-groupBy exact dedup
 # ---------------------------------------------------------------------------
@@ -193,11 +261,13 @@ def x_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # x_dedup_near — MinHash + LSH banding (md5-derived, cross-engine exact)
 # ---------------------------------------------------------------------------
 
-#: shared CTE chain: 3-shingles → 8 md5 min-hashes → band signatures →
-#: candidate pairs → shingle counts + exact intersections. Consumed by
-#: x_dedup_near's thresholded final select and x_minhash_jaccard_est's
-#: calibration select; concatenation reproduces the pre-split _NEAR_ORACLE
-#: byte-for-byte (oracle-snapshot stability).
+#: shared CTE chain, the DuckDB twin of shingles3 → minhash_signatures →
+#: band_signatures → lsh_candidates → shingle_overlap: 3-shingles → 8 md5
+#: min-hashes → band signatures → candidate pairs → shingle counts + exact
+#: intersections. Each oracle of the family (x_dedup_near,
+#: x_dedup_containment, x_minhash_jaccard_est) adds only its own final
+#: select, so every query built from those functions is checked against
+#: one derivation.
 _NEAR_CTES = DOCS_DUP_CTE + """
 , raw AS (
   SELECT doc_id,
@@ -264,60 +334,14 @@ def x_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     The shingle table is consumed THREE times (the signature aggregate and
     both sides of the intersection verify), each behind a different shuffle
     key — exchange reuse cannot unify them, so without an explicit persist
-    the scan + shingle explode runs three times (driver r4 bench: 9.1 s vs
-    3.7 s local). It is persisted for the duration of the query and
-    released after the (tiny) result is materialized. At 100 TB this is
-    the persisted-shingle-index pattern x_dedup_incremental already uses:
-    write the shingle index once, run every downstream pass against it."""
-    d = documents_dup(spark, sf_dir)
-    toks = shingles3(d).persist()
-    # ALL 8 min-hashes + the shingle count in ONE groupBy(doc_id): each
-    # permutation is just a different min-aggregate over the same shingle
-    # rows, so there is no need to explode ×8 and shuffle (doc_id, i) pairs
-    # — one map-side-combining shuffle replaces the explode + two per-doc
-    # aggregations of the naive formulation, and the per-doc shingle count
-    # (needed for the Jaccard denominator) rides along for free.
-    base = toks.groupBy("doc_id").agg(
-        *[
-            F.min(
-                F.substring(F.md5(F.concat_ws(":", F.lit(str(i)), F.col("tok"))), 1, 8)
-            ).alias(f"mh{i}")
-            for i in range(1, 9)
-        ],
-        F.count("*").alias("n"),
-    )
-    # band signatures built array-side from the 8 mh columns (4 bands × 2
-    # rows), then exploded to (doc_id, band, sig, n) — a narrow map
-    band_arr = F.array(
-        *[
-            F.struct(
-                F.lit(b).cast("bigint").alias("band"),
-                F.concat_ws("|", f"mh{2 * b + 1}", f"mh{2 * b + 2}").alias("sig"),
-            )
-            for b in range(4)
-        ]
-    )
-    sigs = base.select("doc_id", "n", F.explode(band_arr).alias("bs")).select(
-        "doc_id", "n", F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig")
-    )
-    a = sigs.select(
-        F.col("doc_id").alias("doc_a"), F.col("n").alias("na"), "band", "sig"
-    )
-    b = sigs.select(
-        F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"), "band", "sig"
-    )
-    cands = (
-        a.join(b, ["band", "sig"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "na", "doc_b", "nb")
-        .distinct()
-    )
-    ta = toks.select(F.col("doc_id").alias("doc_a"), "tok")
-    tb = toks.select(F.col("doc_id").alias("doc_b"), "tok")
-    inter = (
-        cands.join(ta, "doc_a").join(tb, ["doc_b", "tok"]).groupBy(
-            "doc_a", "doc_b", "na", "nb"
-        ).agg(F.count("*").alias("ninter"))
+    the scan + shingle explode runs three times. It is persisted for the
+    duration of the query and released after the (tiny) result is
+    materialized. At 100 TB this is the persisted-shingle-index pattern
+    x_dedup_near_indexed uses: write the shingle and signature index once,
+    run every downstream pass against it."""
+    toks = shingles3(documents_dup(spark, sf_dir)).persist()
+    inter = shingle_overlap(
+        lsh_candidates(band_signatures(minhash_signatures(toks))), toks
     )
     j = F.col("ninter").cast("double") / (F.col("na") + F.col("nb") - F.col("ninter"))
     out = inter.filter(j >= 0.5).select(
@@ -1515,45 +1539,7 @@ def x_multimodal_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
 # x_dedup_containment — asymmetric shingle containment (quote/subset dup)
 # ---------------------------------------------------------------------------
 
-_CONTAIN_ORACLE = DOCS_DUP_CTE + """
-, toks AS (
-  SELECT DISTINCT t0.doc_id,
-         t0.tok || ' ' || t1.tok || ' ' || t2.tok AS tok
-  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok,
-               generate_subscripts(string_split(text, ' '), 1) AS pos
-        FROM documents_dup) t0
-  JOIN (SELECT doc_id, unnest(string_split(text, ' ')) AS tok,
-               generate_subscripts(string_split(text, ' '), 1) AS pos
-        FROM documents_dup) t1
-    ON t1.doc_id = t0.doc_id AND t1.pos = t0.pos + 1
-  JOIN (SELECT doc_id, unnest(string_split(text, ' ')) AS tok,
-               generate_subscripts(string_split(text, ' '), 1) AS pos
-        FROM documents_dup) t2
-    ON t2.doc_id = t0.doc_id AND t2.pos = t0.pos + 2
-),
-tokn AS (SELECT doc_id, COUNT(*) AS n FROM toks GROUP BY doc_id),
-hashes AS (
-  SELECT t.doc_id, i.i,
-         substr(md5(CAST(i.i AS VARCHAR) || ':' || t.tok), 1, 8) AS h
-  FROM toks t CROSS JOIN (SELECT unnest(range(1, 9)) AS i) i
-),
-minh AS (SELECT doc_id, i, MIN(h) AS mh FROM hashes GROUP BY doc_id, i),
-sigs AS (
-  SELECT doc_id, (i - 1) // 2 AS band, string_agg(mh, '|' ORDER BY i) AS sig
-  FROM minh GROUP BY doc_id, (i - 1) // 2
-),
-cands AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM sigs a JOIN sigs b ON a.band = b.band AND a.sig = b.sig
-             AND a.doc_id < b.doc_id
-),
-inter AS (
-  SELECT c.doc_a, c.doc_b, COUNT(*) AS ninter
-  FROM cands c
-  JOIN toks ta ON ta.doc_id = c.doc_a
-  JOIN toks tb ON tb.doc_id = c.doc_b AND tb.tok = ta.tok
-  GROUP BY c.doc_a, c.doc_b
-)
+_CONTAIN_ORACLE = _NEAR_CTES + """
 SELECT i.doc_a, i.doc_b,
        CAST(i.ninter AS DOUBLE) / LEAST(na.n, nb.n) AS containment
 FROM inter i
@@ -1569,60 +1555,22 @@ def x_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     3-word shingle sets. Jaccard misses subset duplication — a short doc
     fully quoted inside a long one scores |A|/|B| (small) on Jaccard but
     ~1.0 on containment; this is the gate that catches quote/extract
-    duplication in training corpora. Candidates come from the SAME
-    MinHash band join as x_dedup_near (one LSH index serves both
-    verifiers at scale); only the verification statistic differs. The
+    duplication in training corpora. Candidates and intersections come
+    from the same minhash_signatures → band_signatures → lsh_candidates →
+    shingle_overlap pipeline as x_dedup_near (one LSH index serves both
+    verifiers); only the verification statistic differs. The
     containment ratio is emitted RAW (int/int double division is
     bit-identical cross-engine; engine-native ROUND on an arbitrary real
     is the midpoint class canonical.py §2 forbids). The shingle table
     persists for its three consumers and is released after the pair
     result materializes."""
-    d = documents_dup(spark, sf_dir)
-    toks = shingles3(d).persist()
-    base = toks.groupBy("doc_id").agg(
-        *[
-            F.min(
-                F.substring(F.md5(F.concat_ws(":", F.lit(str(i)), F.col("tok"))), 1, 8)
-            ).alias(f"mh{i}")
-            for i in range(1, 9)
-        ],
-        F.count("*").alias("n"),
+    toks = shingles3(documents_dup(spark, sf_dir)).persist()
+    inter = shingle_overlap(
+        lsh_candidates(band_signatures(minhash_signatures(toks))), toks
     )
-    band_arr = F.array(
-        *[
-            F.struct(
-                F.lit(b).cast("bigint").alias("band"),
-                F.concat_ws("|", f"mh{2 * b + 1}", f"mh{2 * b + 2}").alias("sig"),
-            )
-            for b in range(4)
-        ]
-    )
-    sigs = base.select("doc_id", "n", F.explode(band_arr).alias("bs")).select(
-        "doc_id", "n", F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig")
-    )
-    a = sigs.select(
-        F.col("doc_id").alias("doc_a"), F.col("n").alias("na"), "band", "sig"
-    )
-    b = sigs.select(
-        F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"), "band", "sig"
-    )
-    cands = (
-        a.join(b, ["band", "sig"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "na", "doc_b", "nb")
-        .distinct()
-    )
-    ta = toks.select(F.col("doc_id").alias("doc_a"), "tok")
-    tb = toks.select(F.col("doc_id").alias("doc_b"), "tok")
-    inter = (
-        cands.join(ta, "doc_a")
-        .join(tb, ["doc_b", "tok"])
-        .groupBy("doc_a", "doc_b", "na", "nb")
-        .agg(F.count("*").alias("ninter"))
-    )
-    # Plain `/` adjudicated safe (r13 division audit): na/nb are
-    # groupBy-count outputs — a group exists only with >= 1 shingle row,
-    # so least(na, nb) >= 1; the ANSI zero-denominator abort is unreachable.
+    # Plain `/` cannot divide by zero: na/nb are groupBy-count outputs — a
+    # group exists only with >= 1 shingle row, so least(na, nb) >= 1 and the
+    # ANSI zero-denominator abort is unreachable.
     cont = F.col("ninter").cast("double") / F.least("na", "nb")
     out = inter.filter(cont >= 0.9).select(
         "doc_a", "doc_b", cont.alias("containment")
@@ -1633,7 +1581,7 @@ def x_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# x_minhash_jaccard_est — signature-estimated vs exact Jaccard (round 7)
+# x_minhash_jaccard_est — signature-estimated vs exact Jaccard
 # ---------------------------------------------------------------------------
 
 _JACC_EST_ORACLE = _NEAR_CTES + """
@@ -1683,45 +1631,13 @@ def x_minhash_jaccard_est(spark: SparkSession, sf_dir: str) -> DataFrame:
     before the verify joins with the identical plan); the fixture corpus
     is small enough to calibrate every pair, which is also what the oracle
     must reproduce."""
-    d = documents_dup(spark, sf_dir)
-    toks = shingles3(d).persist()
+    toks = shingles3(documents_dup(spark, sf_dir)).persist()
     # base has THREE consumers here (band signatures + both per-side
     # signature attaches) — persisted so the 8-permutation aggregate over
-    # the shingle table runs once, not three times (r18, guide §2.4; the
-    # doc-count-sized frame is cache-cheap at any scale).
-    base = toks.groupBy("doc_id").agg(
-        *[
-            F.min(
-                F.substring(F.md5(F.concat_ws(":", F.lit(str(i)), F.col("tok"))), 1, 8)
-            ).alias(f"mh{i}")
-            for i in range(1, 9)
-        ],
-        F.count("*").alias("n"),
-    ).persist()
-    band_arr = F.array(
-        *[
-            F.struct(
-                F.lit(b).cast("bigint").alias("band"),
-                F.concat_ws("|", f"mh{2 * b + 1}", f"mh{2 * b + 2}").alias("sig"),
-            )
-            for b in range(4)
-        ]
-    )
-    sigs = base.select("doc_id", "n", F.explode(band_arr).alias("bs")).select(
-        "doc_id", "n", F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig")
-    )
-    a = sigs.select(
-        F.col("doc_id").alias("doc_a"), F.col("n").alias("na"), "band", "sig"
-    )
-    b = sigs.select(
-        F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"), "band", "sig"
-    )
-    cands = (
-        a.join(b, ["band", "sig"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "na", "doc_b", "nb")
-        .distinct()
-    )
+    # the shingle table runs once, not three times (the doc-count-sized
+    # frame is cache-cheap at any scale).
+    base = minhash_signatures(toks).persist()
+    cands = lsh_candidates(band_signatures(base))
     # attach both signatures (doc-count-sized table, 8 short strings/row)
     ma = base.select(
         F.col("doc_id").alias("doc_a"),
@@ -1740,14 +1656,7 @@ def x_minhash_jaccard_est(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(mb, "doc_b")
         .select("doc_a", "doc_b", "na", "nb", n_match.alias("n_match"))
     )
-    ta = toks.select(F.col("doc_id").alias("doc_a"), "tok")
-    tb = toks.select(F.col("doc_id").alias("doc_b"), "tok")
-    inter = (
-        est.join(ta, "doc_a")
-        .join(tb, ["doc_b", "tok"])
-        .groupBy("doc_a", "doc_b", "na", "nb", "n_match")
-        .agg(F.count("*").alias("ninter"))
-    )
+    inter = shingle_overlap(est, toks, "n_match")
     exact = F.col("ninter").cast("double") / (
         F.col("na") + F.col("nb") - F.col("ninter")
     )

@@ -43,7 +43,15 @@ from pyspark.sql.window import Window
 
 from ..catalog import load
 from ..registry import query
-from .llm import DOCS_DUP_CTE, documents_dup
+from .llm import (
+    DOCS_DUP_CTE,
+    band_signatures,
+    documents_dup,
+    lsh_candidates,
+    minhash_signatures,
+    shingle_overlap,
+    shingles3,
+)
 
 # ---------------------------------------------------------------------------
 # x_dedup_clusters — transitive duplicate-cluster resolution
@@ -1049,62 +1057,24 @@ def x_dedup_near_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from ..artifacts import ensure_artifact
-    from .llm import documents_dup, shingles3
 
     def build(tmp: str) -> None:
         tok_tmp = os.path.join(tmp, "tokens")
         shingles3(documents_dup(spark, sf_dir)).write.mode("overwrite").parquet(tok_tmp)
         toks_idx = spark.read.parquet(tok_tmp)  # reuse the just-written index
-        base = toks_idx.groupBy("doc_id").agg(
-            *[
-                F.min(
-                    F.substring(
-                        F.md5(F.concat_ws(":", F.lit(str(i)), F.col("tok"))), 1, 8
-                    )
-                ).alias(f"mh{i}")
-                for i in range(1, 9)
-            ],
-            F.count("*").alias("n"),
-        )
-        band_arr = F.array(
-            *[
-                F.struct(
-                    F.lit(b).cast("bigint").alias("band"),
-                    F.concat_ws("|", f"mh{2 * b + 1}", f"mh{2 * b + 2}").alias("sig"),
-                )
-                for b in range(4)
-            ]
-        )
-        (
-            base.select("doc_id", "n", F.explode(band_arr).alias("bs"))
-            .select(
-                "doc_id", "n", F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig")
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(tmp, "sigs"))
+        band_signatures(minhash_signatures(toks_idx)).write.mode("overwrite").parquet(
+            os.path.join(tmp, "sigs")
         )
 
+    # every helper the build delegates to is part of the index's version: an
+    # edit to any of them must rebuild the index persisted under the warehouse
     loc, _ = ensure_artifact(
-        spark, sf_dir, "neardup_idx", ["documents.parquet"], build
+        spark, sf_dir, "neardup_idx", ["documents.parquet"], build,
+        code=[documents_dup, shingles3, minhash_signatures, band_signatures],
     )
     toks = spark.read.parquet(os.path.join(loc, "tokens"))
     sigs = spark.read.parquet(os.path.join(loc, "sigs"))
-    a = sigs.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"), "band", "sig")
-    b = sigs.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"), "band", "sig")
-    cands = (
-        a.join(b, ["band", "sig"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "na", "doc_b", "nb")
-        .distinct()
-    )
-    ta = toks.select(F.col("doc_id").alias("doc_a"), "tok")
-    tb = toks.select(F.col("doc_id").alias("doc_b"), "tok")
-    inter = (
-        cands.join(ta, "doc_a")
-        .join(tb, ["doc_b", "tok"])
-        .groupBy("doc_a", "doc_b", "na", "nb")
-        .agg(F.count("*").alias("ninter"))
-    )
+    inter = shingle_overlap(lsh_candidates(sigs), toks)
     j = F.col("ninter").cast("double") / (F.col("na") + F.col("nb") - F.col("ninter"))
     return inter.filter(j >= 0.5).select(
         "doc_a", "doc_b", F.round(j, 6).alias("jaccard")

@@ -296,7 +296,7 @@ def s_stream_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermarks + time-range conditions (the range condition here already
     lets Spark evict views older than the 6 h horizon once a watermark is
     present); the finite fixture replay needs none for correctness."""
-    from ..streaming.stream_ops import _events_stream, _run_append_to_memory
+    from ..streaming.stream_ops import _events_stream, _run_to_memory
 
     ev_p = _events_stream(spark, sf_dir)
     ev_v = _events_stream(spark, sf_dir)
@@ -322,7 +322,7 @@ def s_stream_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         ts_str("p_ts", "purchase_ts"),
         ts_str("v_ts", "view_ts"),
     )
-    return _run_append_to_memory(j, "s_stream_stream")
+    return _run_to_memory(j, "s_stream_stream", "append")
 
 
 # ---------------------------------------------------------------------------

@@ -99,8 +99,11 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw
 
 
-def _run_to_memory(stream_df: DataFrame, name: str) -> DataFrame:
-    """Run an availableNow stream into a memory sink, return the sink."""
+def _run_to_memory(
+    stream_df: DataFrame, name: str, mode: str = "complete"
+) -> DataFrame:
+    """Run an availableNow stream into a memory sink in output ``mode``
+    (complete, append or update), return the sink."""
     global _counter
     _counter += 1
     table = f"{name}_{_counter}"
@@ -108,39 +111,7 @@ def _run_to_memory(stream_df: DataFrame, name: str) -> DataFrame:
         q = (
             stream_df.writeStream.format("memory")
             .queryName(table)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return stream_df.sparkSession.table(table)
-
-
-def _run_append_to_memory(stream_df: DataFrame, name: str) -> DataFrame:
-    global _counter
-    _counter += 1
-    table = f"{name}_{_counter}"
-    with _stream_conf(stream_df.sparkSession):
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(table)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return stream_df.sparkSession.table(table)
-
-
-def _run_update_to_memory(stream_df: DataFrame, name: str) -> DataFrame:
-    global _counter
-    _counter += 1
-    table = f"{name}_{_counter}"
-    with _stream_conf(stream_df.sparkSession):
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(table)
-            .outputMode("update")
+            .outputMode(mode)
             .trigger(availableNow=True)
             .start()
         )
@@ -323,7 +294,7 @@ def s_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
         )
     )
-    return _run_append_to_memory(agg, "s_watermark")
+    return _run_to_memory(agg, "s_watermark", "append")
 
 
 # ---------------------------------------------------------------------------
@@ -446,7 +417,7 @@ def s_stateful_custom(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    sunk = _run_update_to_memory(out, "s_stateful_custom")
+    sunk = _run_to_memory(out, "s_stateful_custom", "update")
     # update-mode emits one row per (user, batch); keep each user's final row
     from pyspark.sql.window import Window
 
@@ -584,7 +555,7 @@ def s_stateful_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="Update",
         timeMode="None",
     )
-    sunk = _run_update_to_memory(out, "s_stateful_v2")
+    sunk = _run_to_memory(out, "s_stateful_v2", "update")
     # update-mode emits one row per (key, batch); keep each key's final row
     from pyspark.sql.window import Window
 

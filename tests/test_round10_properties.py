@@ -712,6 +712,36 @@ def test_text_family_matches_oracle_on_edge_documents(spark, tmp_path):
     _oracle_parity(spark, d, _DOCS_QUERIES)
 
 
+def test_near_dup_family_on_edge_documents(spark, tmp_path):
+    """The MinHash-LSH family on the edge corpus in the default run: the
+    three oracle-backed queries match DuckDB, and the indexed form equals
+    x_dedup_near row for row (docs below shingle width get no signature in
+    either)."""
+    import glob
+    import os
+    import shutil
+
+    from reconciliation_hive_data_spark.artifacts import artifact_location
+    from reconciliation_hive_data_spark.plans.llm import x_dedup_near
+    from reconciliation_hive_data_spark.plans.pipeline_ops import x_dedup_near_indexed
+
+    d = str(tmp_path)
+    _write_documents(spark, d, _EDGE_DOCS)
+    _oracle_parity(
+        spark, d, ("x_dedup_near", "x_dedup_containment", "x_minhash_jaccard_est")
+    )
+    try:
+        indexed = sorted(x_dedup_near_indexed(spark, d).collect())
+    finally:  # the index of a temp corpus must not outlive it in the warehouse
+        for p in glob.glob(artifact_location(spark, d, "neardup_idx") + "*"):
+            if os.path.isdir(p):
+                shutil.rmtree(p)
+            else:
+                os.remove(p)
+    assert indexed == sorted(x_dedup_near(spark, d).collect())
+    assert indexed  # docs 3 and 4 are exact duplicates
+
+
 _DOC_TEXT = st.lists(
     st.sampled_from(["alpha", "beta", "gamma", "delta", "eps"]),
     min_size=0,

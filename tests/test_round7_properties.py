@@ -18,7 +18,11 @@ from reconciliation_hive_data_spark.plans.corpus_ops import (
     x_chunk_docs,
     x_chunk_pack,
 )
-from reconciliation_hive_data_spark.plans.llm import x_dedup_near, x_minhash_jaccard_est
+from reconciliation_hive_data_spark.plans.llm import (
+    x_dedup_containment,
+    x_dedup_near,
+    x_minhash_jaccard_est,
+)
 from reconciliation_hive_data_spark.plans.recon import recon_null_profile
 from reconciliation_hive_data_spark.plans.sketches import join_bloomprune
 from reconciliation_hive_data_spark.sources.files import sink_compact
@@ -80,9 +84,10 @@ def test_bloomprune_equals_plain_semijoin(spark, sf_dir):
 
 def test_jaccard_est_bounds_and_neardup_consistency(spark, sf_dir):
     """Estimator invariants: every candidate pair shares >= 1 full band
-    (n_match >= 2), both jaccards live in [0, 1], est is k/8 exactly, and
+    (n_match >= 2), both jaccards live in [0, 1], est is k/8 exactly,
     filtering the calibration at >= 0.5 reproduces x_dedup_near's pair set
-    (same pipeline, independently re-run)."""
+    (same pipeline, independently re-run), and x_dedup_containment's pairs
+    are calibration candidates (same LSH candidates, another verifier)."""
     rows = x_minhash_jaccard_est(spark, sf_dir).collect()
     assert rows
     for r in rows:
@@ -93,6 +98,11 @@ def test_jaccard_est_bounds_and_neardup_consistency(spark, sf_dir):
     est_pairs = {(r.doc_a, r.doc_b) for r in rows if r.jaccard >= 0.5}
     near_pairs = {(r.doc_a, r.doc_b) for r in x_dedup_near(spark, sf_dir).collect()}
     assert est_pairs == near_pairs
+    cand_pairs = {(r.doc_a, r.doc_b) for r in rows}
+    cont_pairs = {
+        (r.doc_a, r.doc_b) for r in x_dedup_containment(spark, sf_dir).collect()
+    }
+    assert cont_pairs <= cand_pairs
 
 
 def test_chunk_pack_conserves_tokens_and_respects_cap(spark, sf_dir):
