@@ -10,6 +10,8 @@ punctuation/values). So the printed line is a bounded summary — totals,
 per-family subtotals, the slowest queries — guaranteed under 1900 chars,
 while the COMPLETE per-query medians (and raw per-pass samples) go to
 BENCH_FULL.json at the repo root, which rides along in version control.
+BENCH_FULL also splits each query's median into "build" (``fn()``: plan
+construction plus any eager jobs it runs) and "exec" (the noop write).
 
 Each query is materialized via a cheap full-evaluation action
 (``df.write.format("noop")``) so timing covers the whole plan without
@@ -46,7 +48,6 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     registry.load_all_modules()
 
-    timings: dict[str, float] = {}
     # warm the JVM + parquet footers once so per-query numbers measure the
     # query, not session startup
     registry.get("recon_order_totals").fn(spark, sf_dir).write.format("noop").mode(
@@ -69,6 +70,8 @@ def main() -> None:
     )
     t_start = time.perf_counter()
     samples: dict[str, list[float]] = {name: [] for name in names}
+    build_samples: dict[str, list[float]] = {name: [] for name in names}
+    exec_samples: dict[str, list[float]] = {name: [] for name in names}
     failed: set[str] = set()
     n_passes = 0
     for rep in range(reps):
@@ -85,15 +88,26 @@ def main() -> None:
                 continue
             t0 = time.perf_counter()
             try:
-                spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                samples[name].append(time.perf_counter() - t0)
+                df = spec.fn(spark, sf_dir)
+                t1 = time.perf_counter()
+                df.write.format("noop").mode("overwrite").save()
+                t2 = time.perf_counter()
+                samples[name].append(t2 - t0)
+                build_samples[name].append(t1 - t0)
+                exec_samples[name].append(t2 - t1)
             except Exception as exc:  # a failing query must not kill the bench
                 failed.add(name)
                 print(f"bench error in {name}: {exc}", file=sys.stderr)
-    for name, vals in samples.items():
-        timings[name] = (
-            round(statistics.median(vals), 3) if vals and name not in failed else -1.0
-        )
+
+    def medians(by_name: dict[str, list[float]]) -> dict[str, float]:
+        return {
+            name: round(statistics.median(vals), 3)
+            if vals and name not in failed
+            else -1.0
+            for name, vals in by_name.items()
+        }
+
+    timings = medians(samples)
 
     total = round(sum(t for t in timings.values() if t >= 0), 3)
 
@@ -108,6 +122,8 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         "queries": timings,
+        "build": medians(build_samples),
+        "exec": medians(exec_samples),
         "sf": sf,
         "n": n_passes,
         "cpus": eff_cpus,

@@ -26,6 +26,9 @@ carries:
   this host. Multi-host deployments would swap the flock for catalog-level
   commit semantics (Iceberg/Delta optimistic commit), which is why the
   locking is isolated here rather than inlined at call sites.
+- **Orphans** — an artifact outlives its source when the source directory
+  is deleted (a test corpus under a temp dir, a dropped dataset); nothing
+  can re-attach to it, so :func:`prune_orphans` removes it.
 """
 
 from __future__ import annotations
@@ -33,6 +36,7 @@ from __future__ import annotations
 import atexit
 import fcntl
 import functools
+import glob
 import hashlib
 import inspect
 import json
@@ -156,3 +160,31 @@ def ensure_artifact(
             return loc, True
         finally:
             fcntl.flock(lk, fcntl.LOCK_UN)
+
+
+def prune_orphans(root: str) -> list[str]:
+    """Remove every ``rhds_*`` artifact under warehouse ``root`` whose
+    recorded ``sf_dir`` no longer exists: its directory, ``.meta.json`` and
+    ``.lock``. Each is removed under its exclusive flock, as
+    :func:`ensure_artifact` publishes it. Artifacts without a readable
+    ``.meta.json`` are left alone. Returns the removed locations."""
+    removed = []
+    for meta in sorted(glob.glob(os.path.join(root, "rhds_*.meta.json"))):
+        loc = meta.removesuffix(".meta.json")
+        with open(loc + ".lock", "w") as lk:
+            fcntl.flock(lk, fcntl.LOCK_EX)
+            try:
+                try:
+                    with open(meta) as fh:
+                        sf_dir = json.load(fh).get("sf_dir")
+                except (OSError, json.JSONDecodeError):
+                    continue
+                if not sf_dir or os.path.exists(sf_dir):
+                    continue
+                shutil.rmtree(loc, ignore_errors=True)
+                os.remove(meta)
+                os.remove(loc + ".lock")
+                removed.append(loc)
+            finally:
+                fcntl.flock(lk, fcntl.LOCK_UN)
+    return removed

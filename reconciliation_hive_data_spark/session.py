@@ -21,6 +21,32 @@ builder is for our own tests and bench runs. Conf choices (SURVEY.md §4/§6):
   cell_diff and the bucket hash report on a 10k-row pair) needs 97
   classes. At 100 entries that working set evicts itself, and every pass
   recompiled about 80 classes; at 1000 a steady pass compiles none.
+- DataFrame call-site capture off
+  (``spark.python.sql.dataFrameDebugging.enabled``). PySpark 4 turns it
+  on by default, and every ``functions.*``, ``Column`` and ``DataFrame``
+  call then runs through ``pyspark.errors.utils._with_origin``: an active
+  session lookup, a JVM class lookup, a ``spark.conf.get`` of the stack
+  depth and a ``PySparkCurrentOrigin`` set and clear, each a py4j round
+  trip, plus a Python stack walk and a failed ``import IPython`` that
+  scans ``sys.path``. Building the plans of the benchmark's
+  ``recon_dirty`` pair sends this many py4j commands per call (object
+  releases not counted), with the capture on and off:
+
+  ==============================  ======  =====
+  call                            on      off
+  ==============================  ======  =====
+  ``ReconPair.summary()``         7,258   1,968
+  ``bucket_hash_report``          3,173   1,213
+  ``ReconPair.cell_diff()``       1,363     483
+  ==============================  ======  =====
+
+  What it costs: a runtime error's DataFrame query context no longer names
+  the PySpark ``file:line`` that built the failing expression; the error
+  class and message are unchanged. PySpark reads the setting once, at the
+  first decorated call in the process (``is_debugging_enabled()`` caches
+  it), so ``get_spark`` sets it before the session starts: a
+  ``spark.conf.set`` on a running session comes too late. A session built elsewhere, such as one passed
+  to ``__spark_entry__``, keeps PySpark's default.
 """
 
 from __future__ import annotations
@@ -72,6 +98,7 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.sql.codegen.useIdInClassName", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

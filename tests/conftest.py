@@ -7,6 +7,10 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from reconciliation_hive_data_spark.artifacts import (  # noqa: E402
+    prune_orphans,
+    warehouse_root,
+)
 from reconciliation_hive_data_spark.session import get_spark  # noqa: E402
 
 SF_SMOKE = "/root/testdata/sf0.001"
@@ -34,6 +38,8 @@ def pytest_collection_modifyitems(config, items):
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("rhds-tests", shuffle_partitions=8)
+    # Artifacts built on an earlier session's temp corpora outlive them.
+    prune_orphans(warehouse_root(s))
     yield s
 
 

@@ -158,3 +158,28 @@ def test_fingerprint_covers_directory_sources(tmp_path):
     (d / "part-1.parquet").write_bytes(b"b")  # new file, same old files
     fp2 = artifacts.source_fingerprint([str(d)])
     assert fp1 != fp2
+
+
+def test_prune_orphans_removes_only_artifacts_of_deleted_sources(env, tmp_path):
+    spark, src = env
+    gone = tmp_path / "gone"
+    gone.mkdir()
+    (gone / "events.parquet").write_bytes(b"v1-payload")
+    calls: list[str] = []
+    kept, _ = artifacts.ensure_artifact(
+        spark, src, "t", ["events.parquet"], _build_counter(calls)
+    )
+    orphan, _ = artifacts.ensure_artifact(
+        spark, str(gone), "t", ["events.parquet"], _build_counter(calls)
+    )
+    (gone / "events.parquet").unlink()
+    gone.rmdir()
+
+    assert artifacts.prune_orphans(artifacts.warehouse_root(spark)) == [orphan]
+    for suffix in ("", ".meta.json", ".lock"):
+        assert not os.path.exists(orphan + suffix)
+        assert os.path.exists(kept + suffix)
+    _, rebuilt = artifacts.ensure_artifact(
+        spark, src, "t", ["events.parquet"], _build_counter(calls)
+    )
+    assert not rebuilt

@@ -6,6 +6,9 @@ from __future__ import annotations
 import datetime as dt
 
 import pytest
+from py4j.clientserver import ClientServerConnection
+from py4j.protocol import MEMORY_COMMAND_NAME
+from pyspark.errors.utils import is_debugging_enabled
 from pyspark.sql import functions as F
 
 from reconciliation_hive_data_spark.canonical import (
@@ -15,7 +18,7 @@ from reconciliation_hive_data_spark.canonical import (
     money_sum,
 )
 from reconciliation_hive_data_spark.catalog import load
-from reconciliation_hive_data_spark.plans import api
+from reconciliation_hive_data_spark.plans import api, recon_scale
 from reconciliation_hive_data_spark.plans.api import ReconPair
 from reconciliation_hive_data_spark.plans.recon import orders_target
 
@@ -459,3 +462,41 @@ def test_summary_repeats_without_codegen_or_expand(spark, sf_dir, tmp_path):
     assert 0 < len(jobs) <= 8, jobs
     plan = pair.fingerprints()._jdf.queryExecution().executedPlan().toString()
     assert "Expand" not in plan
+
+
+def test_plans_build_without_call_site_capture(spark, orders_pair, monkeypatch):
+    """The session turns PySpark's DataFrame call-site capture off
+    (``session.get_spark``), so building a recon plan makes no per-call
+    origin round trips. The budgets are the py4j commands sent while
+    building each plan on a warm second call (object releases, which
+    finalizers send at unpredictable times, not counted), about 10 % above
+    what the call sends; with the capture on it sends 2.6-3.7 times as
+    many (summary 7,258, cell_diff 1,363, bucket_hash_report 3,173)."""
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert is_debugging_enabled() is False
+
+    sent = []
+    send = ClientServerConnection.send_command
+
+    def counting(self, command):
+        if not command.startswith(MEMORY_COMMAND_NAME):
+            sent.append(command)
+        return send(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    src, tgt = orders_pair.source, orders_pair.target
+    builds = {
+        "summary": (orders_pair.summary, 2170),
+        "cell_diff": (orders_pair.cell_diff, 530),
+        "bucket_hash_report": (
+            lambda: recon_scale.bucket_hash_report(src, tgt),
+            1335,
+        ),
+    }
+    got = {}
+    for name, (build, _) in builds.items():
+        build()
+        sent.clear()
+        build()
+        got[name] = len(sent)
+    assert all(got[n] <= budget for n, (_, budget) in builds.items()), got
