@@ -37,8 +37,10 @@ the shapes that hold at 100 TB (SURVEY.md §7.3.7).
 
 from __future__ import annotations
 
+from collections.abc import Callable, Sequence
 from dataclasses import dataclass
 from functools import reduce
+from operator import add, and_, or_
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -61,6 +63,51 @@ _KINDS = ("int", "double", "string", "ts")
 _KIND_TYPE = {"int": "bigint", "double": "double", "string": "string", "ts": "timestamp"}
 #: kinds that also get sum/min/max fingerprints
 _NUMERIC = ("int", "double")
+
+
+def compare_sides(
+    src: DataFrame,
+    tgt: DataFrame,
+    grain: Sequence[str],
+    **aggs: tuple[Callable[[Column], Column], Column],
+) -> DataFrame:
+    """The one two-sided compare of a check at a grain. Each metric
+    ``m=(fold, value)`` gives ``src_m``, ``fold`` over the source rows'
+    ``value`` in each group, and ``tgt_m`` over the target's; ``_agree``
+    is the null-safe equality of every pair. Columns: ``grain``, the
+    ``src_`` metrics, the ``tgt_`` metrics, ``_agree``.
+
+    Each side is projected to ``(grain…, _s, values…)``, tagged ``_s`` 1
+    (source) or 0 (target), and the union is grouped once by ``grain``,
+    so the compare plans one shuffle and no join, and the fold combines
+    map-side. A side with no rows in a group hands its fold only NULLs:
+    a SUM reads NULL there, as the per-side aggregates of a full-outer
+    join would. A NULL grain stays one row per side, as an equi-join
+    never matches NULL = NULL: the ``_nullside`` grouping column, the
+    side tag where any grain column is NULL, keeps them apart. An empty
+    ``grain`` gives one row, even when both sides are empty."""
+    grain = list(grain)
+    vals = [v.alias(m) for m, (_, v) in aggs.items()]
+    tagged = src.select(*grain, F.lit(1).alias("_s"), *vals).unionByName(
+        tgt.select(*grain, F.lit(0).alias("_s"), *vals)
+    )
+    nullside = []
+    if grain:
+        any_null = reduce(or_, [F.col(g).isNull() for g in grain])
+        nullside = [F.when(any_null, F.col("_s")).alias("_nullside")]
+    on = {"src": F.col("_s") == 1, "tgt": F.col("_s") == 0}
+    folds = [
+        fold(F.when(on[tag], F.col(m))).alias(f"{tag}_{m}")
+        for tag in on
+        for m, (fold, _) in aggs.items()
+    ]
+    same = reduce(and_, [F.col(f"src_{m}").eqNullSafe(F.col(f"tgt_{m}")) for m in aggs])
+    return (
+        tagged.groupBy(*grain, *nullside)
+        .agg(*folds)
+        .withColumn("_agree", same)
+        .drop("_nullside")
+    )
 
 
 @dataclass
@@ -130,41 +177,31 @@ class ReconPair:
     # -- checks -----------------------------------------------------------
 
     def row_counts(self, grain: str | None = None) -> DataFrame:
-        """Per-grain (or global) row counts with diff + flag."""
+        """Per-grain (or global) row counts with diff + flag, from one
+        :func:`compare_sides`; a grain absent from one side counts 0
+        there."""
         gcols = [grain] if grain else []
-
-        def side(df: DataFrame, name: str) -> DataFrame:
-            g = df.groupBy(*gcols) if gcols else df.groupBy()
-            return g.agg(F.count("*").alias(name))
-
-        s, t = side(self.source, "src_cnt"), side(self.target, "tgt_cnt")
-        j = s.join(t, gcols, "full_outer") if gcols else s.crossJoin(t)
+        c = compare_sides(self.source, self.target, gcols, cnt=(F.sum, F.lit(1)))
         src, tgt = F.coalesce("src_cnt", F.lit(0)), F.coalesce("tgt_cnt", F.lit(0))
-        return j.select(
+        return c.select(
             *gcols,
             src.alias("src_cnt"),
             tgt.alias("tgt_cnt"),
             (src - tgt).alias("diff"),
-            F.when(src == tgt, "MATCH").otherwise("COUNT_DIFF").alias("status"),
+            F.when(F.col("_agree"), "MATCH").otherwise("COUNT_DIFF").alias("status"),
         )
 
     def key_diff(self) -> DataFrame:
-        """Keys present on exactly one side: one sort-merge full-outer join
-        over the two distinct key sets. Rows are classified by a per-side
-        presence marker, not by key NULL-ness, so a NULL key (which never
-        joins) still reports on its own side."""
+        """Keys present on exactly one side: a :func:`compare_sides` of the
+        row count per key, kept where one side's count is absent. A NULL
+        key stays one row per side, so it reports on its own side."""
         key = self._key()
-        s = self.source.select(*key).distinct().withColumn("_s", F.lit(1))
-        t = self.target.select(*key).distinct().withColumn("_t", F.lit(1))
-        return (
-            s.join(t, key, "full_outer")
-            .filter(F.col("_s").isNull() | F.col("_t").isNull())
-            .select(
-                *key,
-                F.when(F.col("_t").isNull(), "MISSING_IN_TARGET")
-                .otherwise("MISSING_IN_SOURCE")
-                .alias("side"),
-            )
+        c = compare_sides(self.source, self.target, key, n=(F.sum, F.lit(1)))
+        return c.filter(F.col("src_n").isNull() | F.col("tgt_n").isNull()).select(
+            *key,
+            F.when(F.col("tgt_n").isNull(), "MISSING_IN_TARGET")
+            .otherwise("MISSING_IN_SOURCE")
+            .alias("side"),
         )
 
     def duplicate_keys(self) -> DataFrame:
@@ -320,9 +357,10 @@ class ReconPair:
     def drift(self, value_col: str, width: float, top_bucket: int = 9) -> DataFrame:
         """Distribution drift source↔target as per-bucket PSI contributions
         (Σpsi > 0.2 = shifted, by the usual monitoring convention). The
-        cheap no-key-join tier: two aggregate scans however many rows
-        changed. Delegates to :func:`plans.recon_scale.psi_frame`, whose
-        sensitivity is pinned by a synthetic known-drift test."""
+        cheap no-key-join tier: one :func:`compare_sides` count per bucket
+        however many rows changed. Delegates to
+        :func:`plans.recon_scale.psi_frame`, whose sensitivity is pinned by
+        a synthetic known-drift test."""
         from .recon_scale import psi_frame
 
         if value_col not in self.compare_cols:
@@ -381,8 +419,6 @@ class ReconPair:
         Each count equals the row count of the standalone method's frame
         (``row_counts()`` and ``fingerprints()`` counted where status is not
         MATCH)."""
-        from operator import add, or_
-
         key = self._key()
 
         # --- per-key tier: checks 2-5 from one exchange pair + join ----

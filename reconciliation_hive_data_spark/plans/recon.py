@@ -7,8 +7,10 @@ Python; here each check IS a single declarative DataFrame expression, so the
 comparison itself runs distributed and the report is itself a DataFrame
 (DuckDB-oracle-checkable). At 100 TB every check below stays algebraic:
 counts/sums/min/max/distinct fingerprints are partially aggregatable
-(map-side combine), key diffs are one sort-merge join on the join key, and
-partition drill-down bounds recompute blast radius to one partition. The
+(map-side combine), every per-grain compare of the two sides (row counts,
+key diff, partition drill-down, null profile) is one union-tagged aggregate
+(:func:`plans.api.compare_sides`: one shuffle, no join), and partition
+drill-down bounds recompute blast radius to one partition. The
 row-level checks (row counts, column fingerprints, key diff, duplicate keys,
 row hash, cell diff, tolerance) are calls on :class:`plans.api.ReconPair`
 over the standard pair (:func:`plans.api.orders_pair`); each query keeps
@@ -23,10 +25,14 @@ metamorphic tests in tests/test_recon_properties.py assert.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from functools import reduce
+from operator import and_
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..canonical import (
+    MONEY_SCALE,
     canonical_row_hash_sql,
     dround,
     money_sum,
@@ -268,8 +274,9 @@ FROM (SELECT DISTINCT o_orderkey FROM orders_tgt
 
 @query("recon_keys_missing", oracle=_KEYS_MISSING_ORACLE)
 def recon_keys_missing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Keys present on one side only, from one sort-merge full-outer join.
-    Broadcast would be wrong at 100 TB: both sides are fact-sized."""
+    """Keys present on one side only, from one union-tagged per-key count
+    of both sides (``ReconPair.key_diff``): one shuffle on the key, and no
+    join, so neither fact-sized side is ever broadcast."""
     from .api import orders_pair
 
     return orders_pair(load(spark, sf_dir, "orders")).key_diff()
@@ -425,22 +432,22 @@ def recon_partition_drill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partition drill-down: fingerprints per load-month to localize a bad
     load. The 100-TB play: a mismatched month re-runs one partition's
     recon, not the whole table."""
+    from .api import compare_sides
+
     orders = load(spark, sf_dir, "orders")
-    tgt = orders_target(orders)
-
-    def side(df: DataFrame, cnt: str, sm: str) -> DataFrame:
-        return df.groupBy(
-            F.date_trunc("month", F.col("o_orderdate")).alias("pmonth")
-        ).agg(F.count("*").alias(cnt), money_sum("o_totalprice", sm))
-
-    s = side(orders, "src_cnt", "src_sum")
-    t = side(tgt, "tgt_cnt", "tgt_sum")
-    j = s.join(t, "pmonth", "full_outer")
+    month = F.date_trunc("month", F.col("o_orderdate")).alias("pmonth")
+    c = compare_sides(
+        orders.select(month, "o_totalprice"),
+        orders_target(orders).select(month, "o_totalprice"),
+        ["pmonth"],
+        cnt=(F.sum, F.lit(1)),
+        sum=(F.sum, F.col("o_totalprice").cast(f"decimal(18,{MONEY_SCALE})")),
+    )
     scnt = F.coalesce("src_cnt", F.lit(0))
     tcnt = F.coalesce("tgt_cnt", F.lit(0))
-    ssum = F.coalesce("src_sum", F.lit(0.0))
-    tsum = F.coalesce("tgt_sum", F.lit(0.0))
-    return j.select(
+    ssum = F.coalesce(F.col("src_sum").cast("double"), F.lit(0.0))
+    tsum = F.coalesce(F.col("tgt_sum").cast("double"), F.lit(0.0))
+    return c.select(
         F.date_format("pmonth", "yyyy-MM").alias("pmonth"),
         scnt.alias("src_cnt"),
         tcnt.alias("tgt_cnt"),
@@ -563,7 +570,7 @@ def recon_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# recon_null_profile — per-column null / NaN / blank drift (round 7)
+# recon_null_profile — per-column null / NaN / blank drift
 # ---------------------------------------------------------------------------
 
 #: (column, class) pairs profiled — blank applies to strings, NaN to doubles
@@ -651,12 +658,15 @@ def recon_null_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     NaN poisons sums — and a profile that lumps them hides exactly the
     drift class this check exists to name.
 
-    Scale shape: ONE full-scan aggregate per side computing all 3×|cols|
-    counters as algebraic conditional sums (map-side combining, no
-    shuffle of data rows — the exchange carries a single partial-agg row
-    per task), then a columns-count-sized unpivot and join. Cost is one
-    pass over each table regardless of column count; output is
+    Scale shape: ONE full-scan aggregate of both sides, a
+    :func:`plans.api.compare_sides` with no grain, computes every counter
+    as an algebraic conditional sum (map-side combining, no shuffle of
+    data rows — the exchange carries a single partial-agg row per task);
+    one ``inline`` then unpivots it to a row per column. Cost is one pass
+    over each table regardless of column count; output is
     metadata-sized, like recon_schema."""
+    from .api import compare_sides
+
     orders = load(spark, sf_dir, "orders")
     tgt = (
         orders.withColumn(
@@ -675,56 +685,30 @@ def recon_null_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.col("o_orderpriority")),
         )
     )
+    metrics = {}
+    for c, klass in _NULLPROF_COLS:
+        col = F.col(c)
+        metrics[f"null_{c}"] = (F.sum, F.when(col.isNull(), 1).otherwise(0))
+        if klass == "string":
+            metrics[f"blank_{c}"] = (F.sum, F.when(col == "", 1).otherwise(0))
+        if klass == "double":
+            metrics[f"nan_{c}"] = (F.sum, F.when(F.isnan(col), 1).otherwise(0))
+    prof = compare_sides(orders, tgt, [], **metrics)
 
-    def profile(df: DataFrame) -> DataFrame:
-        aggs, fields = [], []
-        for c, klass in _NULLPROF_COLS:
-            col = F.col(c)
-            aggs.append(
-                F.sum(F.when(col.isNull(), 1).otherwise(0))
-                .cast("bigint")
-                .alias(f"null_{c}")
-            )
-            aggs.append(
-                (
-                    F.sum(F.when(col == "", 1).otherwise(0)).cast("bigint")
-                    if klass == "string"
-                    else F.lit(0).cast("bigint")
-                ).alias(f"blank_{c}")
-            )
-            aggs.append(
-                (
-                    F.sum(F.when(F.isnan(col), 1).otherwise(0)).cast("bigint")
-                    if klass == "double"
-                    else F.lit(0).cast("bigint")
-                ).alias(f"nan_{c}")
-            )
-            fields.append(
-                F.struct(
-                    F.lit(c).alias("col_name"),
-                    F.col(f"null_{c}").alias("n_null"),
-                    F.col(f"blank_{c}").alias("n_blank"),
-                    F.col(f"nan_{c}").alias("n_nan"),
-                )
-            )
-        return df.agg(*aggs).select(F.inline(F.array(*fields)))
+    kinds = ("null", "blank", "nan")
 
-    s = profile(orders).alias("s")
-    t = profile(tgt).alias("t")
-    return s.join(t, F.col("s.col_name") == F.col("t.col_name")).select(
-        F.col("s.col_name").alias("col_name"),
-        F.col("s.n_null").alias("src_null"),
-        F.col("t.n_null").alias("tgt_null"),
-        F.col("s.n_blank").alias("src_blank"),
-        F.col("t.n_blank").alias("tgt_blank"),
-        F.col("s.n_nan").alias("src_nan"),
-        F.col("t.n_nan").alias("tgt_nan"),
-        F.when(
-            (F.col("s.n_null") == F.col("t.n_null"))
-            & (F.col("s.n_blank") == F.col("t.n_blank"))
-            & (F.col("s.n_nan") == F.col("t.n_nan")),
-            "MATCH",
+    def row(c: str) -> Column:
+        def n(side: str, kind: str) -> Column:
+            m = f"{kind}_{c}"
+            v = F.col(f"{side}_{m}") if m in metrics else F.lit(0).cast("bigint")
+            return v.alias(f"{side}_{kind}")
+
+        return F.struct(
+            F.lit(c).alias("col_name"), *[n(s, k) for k in kinds for s in ("src", "tgt")]
         )
-        .otherwise("DRIFT")
-        .alias("status"),
+
+    rows = [row(c) for c, _ in _NULLPROF_COLS]
+    same = reduce(and_, [F.col(f"src_{k}") == F.col(f"tgt_{k}") for k in kinds])
+    return prof.select(F.inline(F.array(*rows))).withColumn(
+        "status", F.when(same, "MATCH").otherwise("DRIFT")
     )

@@ -29,15 +29,16 @@ schedules beyond the per-load composites in plans/recon.py.
   ``recon_remediate_apply`` — the Merkle hierarchy: per-bucket digests,
   the differing keys inside the bad buckets, the write-ready fix-up list,
   and its application with a re-verify. Every both-sides compare in it is
-  one union-tagged aggregate (:func:`_bh_compare`) at bucket or key grain.
+  one union-tagged aggregate (:func:`plans.api.compare_sides`) at bucket
+  or key grain.
 - ``recon_schema_evolve`` / ``recon_partition_evolve`` /
   ``recon_layout_compact`` / ``recon_compact_incremental`` — migration
   audits: schema vintages, partition layouts and compaction rewrites
   checked against the data they must preserve.
 
 100 TB notes: CDC joins key-on-key (sort-merge, AQE-sizable) and compares
-only named columns; drift aggregates are two-phase map-side-combinable
-counts into a 10-row frame (the window over it is driver-trivial); the
+only named columns; drift is one map-side-combinable count of both sides
+into a 10-row frame (the window over it is driver-trivial); the
 sample audit's cost scales with the sample fraction because the filter
 prunes before the exchange — asserted by a plan test; the Merkle tiers
 exchange metadata-sized digests and drill only inside damaged buckets.
@@ -61,6 +62,7 @@ from ..canonical import (
 )
 from ..catalog import load
 from ..registry import query
+from .api import compare_sides
 from .recon import _ORDER_HASH_COLS, ORDERS_TGT_CTE, orders_target
 
 # ---------------------------------------------------------------------------
@@ -99,8 +101,8 @@ _CDC_COLS = (
 
 
 def _orders_v2(orders: DataFrame) -> DataFrame:
-    """v2 snapshot fixture, single-scan (r18, guide §2.4 — the
-    orders_target class): %7 keys deleted (empty offset array), %21 keys
+    """v2 snapshot fixture in one scan of ``orders``, like
+    :func:`orders_target`: %7 keys deleted (empty offset array), %21 keys
     additionally INSERTED at key+10M, the rest evolve in place. The %13 /
     %34 perturbations are disjoint from %21 (mod 1000), so applying them
     before the offset explode leaves the inserted copy raw — exactly the
@@ -241,18 +243,15 @@ def psi_frame(
     alerting convention)."""
     bucket = F.least(F.floor(F.col(value_col) / width), F.lit(top_bucket)).cast(
         "int"
-    )
+    ).alias("bucket")
     n_buckets = top_bucket + 1
-    src_b = src.select(bucket.alias("bucket")).groupBy("bucket").count()
-    tgt_b = tgt.select(bucket.alias("bucket")).groupBy("bucket").count()
-    j = (
-        src_b.alias("s")
-        .join(tgt_b.alias("t"), F.col("s.bucket") == F.col("t.bucket"), "full_outer")
-        .select(
-            F.coalesce("s.bucket", "t.bucket").alias("bucket"),
-            F.coalesce("s.count", F.lit(0)).alias("n_src"),
-            F.coalesce("t.count", F.lit(0)).alias("n_tgt"),
-        )
+    c = compare_sides(
+        src.select(bucket), tgt.select(bucket), ["bucket"], n=(F.sum, F.lit(1))
+    )
+    j = c.select(
+        "bucket",
+        F.coalesce("src_n", F.lit(0)).alias("n_src"),
+        F.coalesce("tgt_n", F.lit(0)).alias("n_tgt"),
     )
     everything = Window.partitionBy()
     p_src = (F.col("n_src") + 1) / (F.sum("n_src").over(everything) + n_buckets)
@@ -270,13 +269,14 @@ def psi_frame(
 @query("recon_agg_drift", oracle=_DRIFT_ORACLE)
 def recon_agg_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution drift source↔target as per-bucket PSI contributions
-    (sum > 0.2 = "shifted" by the usual monitoring convention). Two exact
-    two-phase counts into a 10-row frame; the Laplace-smoothed (+1)
-    fractions avoid ln(0) when a bucket empties. The empty-partition
-    window over 10 rows is driver-trivial; everything below it is
-    map-side-combinable. Drift checks are the cheap hourly tier: no key
-    join, no row hashing — cost is two aggregate scans regardless of how
-    many rows changed. Core math lives in ``psi_frame``, whose sensitivity
+    (sum > 0.2 = "shifted" by the usual monitoring convention). One exact
+    union-tagged count of both sides (:func:`plans.api.compare_sides`)
+    into a 10-row frame; the Laplace-smoothed (+1) fractions avoid ln(0)
+    when a bucket empties. The empty-partition window over 10 rows is
+    driver-trivial; everything below it is map-side-combinable. Drift
+    checks are the cheap hourly tier: no key join, no row hashing — cost
+    is one aggregate over both scans regardless of how many rows
+    changed. Core math lives in ``psi_frame``, whose sensitivity
     is pinned by a synthetic known-drift test."""
     src = load(spark, sf_dir, "orders")
     return psi_frame(src, orders_target(src), "o_totalprice", 50000, 9)
@@ -397,8 +397,8 @@ def recon_footer_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                             # emit None — the table rollup's min/max skip
                             # nulls, and a column null in EVERY row group
                             # rolls up to null, matching the scan side's
-                            # null min/max. float(st.min) here crashed on
-                            # exactly that shape (caught by the r10 fuzz).
+                            # null min/max; float(st.min) would raise on
+                            # exactly that shape.
                             st = c.statistics
                             has_nc = st is not None and st.has_null_count
                             has_mm = st is not None and st.has_min_max
@@ -449,7 +449,7 @@ def recon_footer_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.min("rg_min"), 6).alias("footer_min"),
         F.round(F.max("rg_max"), 6).alias("footer_max"),
         # any-semantics via int max — boolean MIN/MAX ordering is an
-        # engine-dependent corner (ADVICE r11); the cast makes the intent
+        # engine-dependent corner; the cast makes the intent
         # portable to engines without boolean ordering
         (F.max(F.col("rg_unknown").cast("int")) == 1).alias("footer_unknown"),
     )
@@ -468,7 +468,7 @@ def recon_footer_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # has no min/max (footer null-rollup == scan null). Unknown stats force
     # INCONSISTENT via the explicit per-row-group flag: the null-skipping
     # SUM/MIN/MAX rollups alone would let a stats-less non-empty group hide
-    # behind its stats-bearing neighbours (ADVICE r10).
+    # behind its stats-bearing neighbours.
     consistent = (
         F.col("footer_rows").eqNullSafe(F.col("scan_rows"))
         & F.col("footer_nulls").eqNullSafe(F.col("scan_nulls"))
@@ -570,13 +570,11 @@ def _bh_bucket() -> F.Column:
     )
 
 
-def _bh_row_words(side: int) -> list[F.Column]:
-    """One row's compare columns: side tag ``_s`` (1 source, 0 target),
-    weight ``n = 1`` and the canonical row hash's first two 32-bit words
-    ``w1``/``w2``."""
+def _bh_row_words() -> list[F.Column]:
+    """One row's compare values: weight ``n = 1`` and the canonical row
+    hash's first two 32-bit words ``w1``/``w2``."""
     h = canonical_row_hash(_ORDER_HASH_COLS)
     return [
-        F.lit(side).alias("_s"),
         F.lit(1).cast("bigint").alias("n"),
         *(
             F.conv(F.substring(h, start, 8), 16, 10).cast("bigint").alias(name)
@@ -585,57 +583,36 @@ def _bh_row_words(side: int) -> list[F.Column]:
     ]
 
 
-def _bh_words(df: DataFrame, side: int) -> DataFrame:
-    """Narrow per-row projection ``(bucket, _s, n, w1, w2)``: everything
+def _bh_words(df: DataFrame) -> DataFrame:
+    """Narrow per-row projection ``(bucket, n, w1, w2)``: everything
     downstream aggregates THESE columns — the wide row never crosses a
     shuffle."""
-    return df.select(_bh_bucket().alias("bucket"), *_bh_row_words(side))
+    return df.select(_bh_bucket().alias("bucket"), *_bh_row_words())
 
 
-def _bh_compare(tagged: DataFrame, *grain: str | F.Column) -> DataFrame:
-    """The one both-sides compare of the Merkle recon: aggregate a
-    union-tagged ``(grain…, _s, n, w1, w2)`` frame into each side's weighted
-    count and word digests (``src_cnt``/``src_d1``/``src_d2``, ``tgt_…``)
-    per grain, plus ``_agree``, their null-safe equality.
-
-    A word digest is the exact DECIMAL(38,0) sum of the words folded mod
+def _bh_digest(w: F.Column) -> F.Column:
+    """A word digest: the exact DECIMAL(38,0) sum of the words folded mod
     2^32, so it is partition- and order-invariant (decimal sums cannot
-    overflow below ~1e28 rows per group). A side absent from a group reads
-    NULL, as a full-outer join of per-side aggregates would give: SUM
-    skips the other side's NULL ``when`` arm. The aggregate is
-    map-side-combinable, and the side tag rides the same exchange."""
+    overflow below ~1e28 rows per group)."""
+    return (F.sum(w.cast("decimal(38,0)")) % F.lit(_BH_MOD)).cast("bigint")
 
-    def side(s: int, tag: str) -> list[F.Column]:
-        on = F.col("_s") == s
 
-        def digest(w: str) -> F.Column:
-            total = F.sum(F.when(on, F.col(w)).cast("decimal(38,0)"))
-            return (total % F.lit(_BH_MOD)).cast("bigint")
-
-        return [
-            F.sum(F.when(on, F.col("n"))).alias(f"{tag}_cnt"),
-            digest("w1").alias(f"{tag}_d1"),
-            digest("w2").alias(f"{tag}_d2"),
-        ]
-
-    same = [
-        F.col(f"src_{m}").eqNullSafe(F.col(f"tgt_{m}")) for m in ("cnt", "d1", "d2")
-    ]
-    return (
-        tagged.groupBy(*grain)
-        .agg(*side(1, "src"), *side(0, "tgt"))
-        .withColumn("_agree", same[0] & same[1] & same[2])
+def _bh_bucket_digests(
+    src_words: DataFrame, tgt_words: DataFrame, grain: tuple[str, ...] = ("bucket",)
+) -> DataFrame:
+    """Both sides' weighted counts ``SUM(n)`` and word digests per
+    ``grain`` (``src_cnt``/``src_d1``/``src_d2``, ``tgt_…``, ``_agree``):
+    :func:`plans.api.compare_sides` over two ``_bh_words``-shaped frames.
+    A side absent from a group reads NULL; NULL buckets (NULL keys) stay
+    one row per side."""
+    return compare_sides(
+        src_words,
+        tgt_words,
+        grain,
+        cnt=(F.sum, F.col("n")),
+        d1=(_bh_digest, F.col("w1")),
+        d2=(_bh_digest, F.col("w2")),
     )
-
-
-def _bh_bucket_digests(src_words: DataFrame, tgt_words: DataFrame) -> DataFrame:
-    """Both sides' per-bucket digests: :func:`_bh_compare` at bucket grain.
-    NULL buckets (NULL keys) stay one row per side, as an equi-join never
-    matches NULL = NULL; the ``_nullside`` grouping column keeps them
-    apart."""
-    nullside = F.when(F.col("bucket").isNull(), F.col("_s")).alias("_nullside")
-    tagged = src_words.unionByName(tgt_words)
-    return _bh_compare(tagged, "bucket", nullside).drop("_nullside")
 
 
 def _bh_source_words(digests: DataFrame) -> DataFrame:
@@ -646,7 +623,6 @@ def _bh_source_words(digests: DataFrame) -> DataFrame:
     source."""
     return digests.filter(F.col("src_cnt").isNotNull()).select(
         "bucket",
-        F.lit(1).alias("_s"),
         F.col("src_cnt").alias("n"),
         F.col("src_d1").alias("w1"),
         F.col("src_d2").alias("w2"),
@@ -662,7 +638,7 @@ def _bh_bad(src: DataFrame, tgt: DataFrame) -> DataFrame:
     (≤ ``_BH_BUCKETS`` + one NULL-bucket row per side) at ANY data size, so
     the checkpoint is metadata-sized and the digest tier runs exactly
     once."""
-    digests = _bh_bucket_digests(_bh_words(src, 1), _bh_words(tgt, 0))
+    digests = _bh_bucket_digests(_bh_words(src), _bh_words(tgt))
     return digests.filter(~F.col("_agree")).localCheckpoint()
 
 
@@ -673,20 +649,18 @@ def _bh_key_diff(src: DataFrame, tgt: DataFrame, bad: DataFrame) -> DataFrame:
     key-level shuffle touches only the damaged buckets' rows. The prune
     joins on the CHEAP key-only bucket, then derives the row hash for
     survivors alone, so tier-2 CPU (not just shuffle) is bounded by the
-    damage, not the table. Returns :func:`_bh_compare` at ``(bucket, k)``
-    grain — both hash words, so the drill resolves at the digest tier's
-    64-bit strength — for the differing keys only. NULL keys never reach
-    it: their NULL bucket drops from the inner prune join."""
+    damage, not the table. Returns :func:`_bh_bucket_digests` at
+    ``(bucket, k)`` grain — both hash words, so the drill resolves at the
+    digest tier's 64-bit strength — for the differing keys only. NULL keys
+    never reach it: their NULL bucket drops from the inner prune join."""
     bad_buckets = F.broadcast(bad.select("bucket"))
 
-    def pruned_words(side: DataFrame, tag: int) -> DataFrame:
+    def pruned_words(side: DataFrame) -> DataFrame:
         pruned = side.withColumn("bucket", _bh_bucket()).join(bad_buckets, "bucket")
-        return pruned.select(
-            "bucket", F.col("o_orderkey").alias("k"), *_bh_row_words(tag)
-        )
+        return pruned.select("bucket", F.col("o_orderkey").alias("k"), *_bh_row_words())
 
-    tagged = pruned_words(src, 1).unionByName(pruned_words(tgt, 0))
-    return _bh_compare(tagged, "bucket", "k").filter(~F.col("_agree"))
+    digests = _bh_bucket_digests(pruned_words(src), pruned_words(tgt), ("bucket", "k"))
+    return digests.filter(~F.col("_agree"))
 
 
 def bucket_hash_report(src: DataFrame, tgt: DataFrame) -> DataFrame:
@@ -1150,11 +1124,11 @@ def remediation_apply_report(src: DataFrame, tgt: DataFrame) -> DataFrame:
     # data size), and both the fault-detection disagreement list and the
     # re-verify's source side derive from it, so the source is digested
     # once.
-    both = _bh_bucket_digests(_bh_words(src, 1), _bh_words(tgt, 0)).localCheckpoint()
+    both = _bh_bucket_digests(_bh_words(src), _bh_words(tgt)).localCheckpoint()
     bad = both.filter(~F.col("_agree"))
     plan, tgt_after = remediation_apply_frames(src, tgt, bad=bad)
     bad_after = (
-        _bh_bucket_digests(_bh_source_words(both), _bh_words(tgt_after, 0))
+        _bh_bucket_digests(_bh_source_words(both), _bh_words(tgt_after))
         .filter(~F.col("_agree"))
         .localCheckpoint()
     )
@@ -1261,7 +1235,7 @@ def recon_remediate_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# recon_schema_evolve — schema-evolution reconciliation (round 15, §7.6.2)
+# recon_schema_evolve — schema-evolution reconciliation (§7.6.2)
 # ---------------------------------------------------------------------------
 
 #: The audited catalog: the union schema across vintages, with each column's
@@ -1337,7 +1311,7 @@ def recon_schema_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     no data IO — the file-level truth a migration audit must verify, and
     at 100 TB the same role is played by the table format's per-snapshot
     schema ids). The deterministic key split (pmod; the complement keeps
-    NULL keys with the odd keys — r14 s_checkpoint_resume precedent) lets
+    NULL keys with the odd keys, as s_checkpoint_resume does) lets
     the oracle re-derive every count from the source table alone.
 
     Scale shape: ONE data-sized exchange — the groupBy(vintage) whose
@@ -1436,7 +1410,7 @@ def recon_schema_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# recon_partition_evolve — partition-layout migration audit (round 15, §7.6.5)
+# recon_partition_evolve — partition-layout migration audit (§7.6.5)
 # ---------------------------------------------------------------------------
 
 _PE_ORACLE = """
@@ -1515,8 +1489,8 @@ def recon_partition_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     projections — the wide row never crosses a shuffle.
 
     The vintage split is the family's deterministic pmod key split (NULL
-    keys ride with the odd keys into v2 — complement-keeps-NULL, the r14
-    s_checkpoint_resume class), so the oracle re-derives every count from
+    keys ride with the odd keys into v2 — complement-keeps-NULL, as in
+    s_checkpoint_resume), so the oracle re-derives every count from
     the source table alone; a real migration cuts over on a date instead,
     and the audit is split-agnostic. Scale shape: ONE data-sized exchange
     (the groupBy(month × vintage-partials) count, map-side combinable);
@@ -1536,8 +1510,8 @@ def recon_partition_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     src.filter(even).select(*_PE_DATA_COLS).write.mode("overwrite").parquet(
         f"{root}/v1"
     )
-    # repartition by the partition key before the partitioned write (r19,
-    # guide §6 — the write.distribution-mode=hash shape): pins the layout
+    # repartition by the partition key before the partitioned write (the
+    # write.distribution-mode=hash shape): pins the layout
     # at one file per month REGARDLESS of scan width (without it, file
     # count = scan splits × months touched — the small-files anti-pattern
     # once the session's scan-parallelism floor splits the source), and
@@ -1629,8 +1603,7 @@ def recon_partition_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# recon_layout_compact — layout-migration file-locality audit (round 15,
-# §7.6.6)
+# recon_layout_compact — layout-migration file-locality audit (§7.6.6)
 # ---------------------------------------------------------------------------
 
 _LC_SHARDS = 4
@@ -1758,7 +1731,7 @@ def recon_layout_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # recon_compact_incremental — successive-compaction incrementality audit
-# (round 17, §7.12 candidate 3)
+# (§7.12 candidate 3)
 # ---------------------------------------------------------------------------
 
 _CI_ORACLE = """
@@ -1827,7 +1800,7 @@ def recon_compact_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus a new-month batch of the ``pmod(key,50)==0`` rows landing in
     max-month + 1); run-2 applies the delta via per-write DYNAMIC
     partition overwrite (``.option("partitionOverwriteMode", "dynamic")``
-    — per-write, no session-conf dependency; probed r16: only the
+    — per-write, no session-conf dependency: only the
     partitions present in the written data are replaced, and an empty
     delta is a safe no-op). The audit inventories data files per month
     BEFORE and AFTER run-2 via ``input_file_name()`` and emits
@@ -1904,7 +1877,7 @@ def recon_compact_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()
     )
 
-    # nm guard (ADVICE r17): a max month of 9999-12 is IN the documented
+    # nm guard: a max month of 9999-12 is IN the documented
     # 1000-9999 year convention, but max+1 lands in year 10000, where
     # Spark date_format 'yyyy' emits '+10000' and DuckDB strftime '%Y'
     # emits '10000' — clamp the NEW-month branch off instead (nm NULL →
@@ -1967,7 +1940,7 @@ def recon_compact_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(kept == 0, "RECOMPACTED")
         .otherwise("STABLE")
         .alias("verdict"),
-        # months-sized; materialize NOW (ADVICE r17): the result reads the
+        # months-sized; materialize NOW: the result reads the
         # sink lazily, and a subsequent invocation against the same sf_dir
         # rmtrees/rewrites that sink — an unevaluated report would
         # otherwise see the later run's files

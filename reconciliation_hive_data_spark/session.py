@@ -60,23 +60,17 @@ from .artifacts import process_tmp_root
 
 def get_spark(
     app_name: str = "reconciliation-hive-data-spark",
-    shuffle_partitions: int | None = None,
+    shuffle_partitions: int = 32,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", "32"))
-    # Scan-parallelism floor, derived from the session width: a single
-    # small parquet file is one split, so every projection after the scan,
-    # CPU-bound interpreted folds included, would run on one core (and a
-    # broadcast join keeps that partitioning). The floor splits small
-    # inputs across the session's cores; at production scale splits far
-    # outnumber cores and the floor does nothing. Env override, defaults
-    # to the session width.
-    scan_min = os.environ.get(
-        "SPARK_SCAN_MIN_PARTITIONS",
-        cpus if cpus != "*" else str(os.cpu_count() or 1),
-    )
+    # Scan-parallelism floor, the session width: a single small parquet
+    # file is one split, so every projection after the scan, CPU-bound
+    # interpreted folds included, would run on one core (and a broadcast
+    # join keeps that partitioning). The floor splits small inputs across
+    # the session's cores; at production scale splits far outnumber cores
+    # and the floor does nothing.
+    scan_min = cpus if cpus != "*" else str(os.cpu_count() or 1)
     # The floor only splits a file when the per-file open cost does not
     # dominate it: maxSplitBytes = min(maxPartitionBytes, max(
     # openCostInBytes, (totalBytes + nFiles * openCost) / minPartitionNum)),

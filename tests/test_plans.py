@@ -552,16 +552,16 @@ def test_bloomprune_broadcasts_filter_and_builds_it_once(spark, sf_dir):
 
 
 def test_null_profile_is_one_pass_per_side(spark, sf_dir):
-    """recon_null_profile: all 3×|cols| counters per side must come from a
-    single two-phase aggregate over one scan — two parquet scans total,
-    and the columns-sized join broadcasts."""
+    """recon_null_profile: every counter of both sides must come from one
+    two-phase aggregate over the union of one scan per side — two parquet
+    scans total, one partial and one final aggregate, and no join."""
     from reconciliation_hive_data_spark.plans.recon import recon_null_profile
 
     p = plan(recon_null_profile(spark, sf_dir))
     tree = p.split("\n\n")[0]
     assert tree.count("Scan parquet") == 2
-    assert "BroadcastHashJoin" in tree
-    assert "SortMergeJoin" not in tree
+    assert tree.count("HashAggregate") == 2
+    assert "Join" not in tree
 
 
 def test_skew_salted_join_stays_on_shuffle_path(spark, sf_dir):

@@ -213,11 +213,11 @@ def test_sessionize_boundary_gap_matches_oracle(spark, tmp_path):
 def _write_orders(spark, d: str, rows) -> None:
     """rows: (key, cust, status, price, day, prio) → {d}/orders.parquet.
     o_orderdate materializes as a whole-second timestamp (day offsets from
-    a fixed epoch); Spark writes INT96 here, exercising the loader's
-    vintage routing on every example."""
+    a fixed epoch; NULL for a NULL day); Spark writes INT96 here,
+    exercising the loader's vintage routing on every example."""
     spark.createDataFrame(
         [
-            (k, c, s, p, 1_500_000_000 + day * 86_400, prio)
+            (k, c, s, p, None if day is None else 1_500_000_000 + day * 86_400, prio)
             for k, c, s, p, day, prio in rows
         ],
         "o_orderkey bigint, o_custkey bigint, o_orderstatus string,"

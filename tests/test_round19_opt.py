@@ -95,7 +95,7 @@ def _digest_join_spelling(src, tgt):
 
 
 def _digests(src, tgt):
-    return _bh_bucket_digests(_bh_words(src, 1), _bh_words(tgt, 0)).drop("_agree")
+    return _bh_bucket_digests(_bh_words(src), _bh_words(tgt)).drop("_agree")
 
 
 def _sorted_rows(df):
@@ -143,10 +143,10 @@ def test_source_digest_rows_reverify_like_source_rows(spark):
     )
     tgt = _frame(spark, [_row(1), _row(2), _row(4), _row(None, 42.0)])
     src_rows = _bh_source_words(
-        _bh_bucket_digests(_bh_words(src, 1), _bh_words(tgt, 0))
+        _bh_bucket_digests(_bh_words(src), _bh_words(tgt))
     )
     got = _sorted_rows(
-        _bh_bucket_digests(src_rows, _bh_words(tgt, 0)).drop("_agree")
+        _bh_bucket_digests(src_rows, _bh_words(tgt)).drop("_agree")
     )
     want = _sorted_rows(_digest_join_spelling(src, tgt))
     assert got == want
