@@ -11,7 +11,10 @@ per-family subtotals, the slowest queries — guaranteed under 1900 chars,
 while the COMPLETE per-query medians (and raw per-pass samples) go to
 BENCH_FULL.json at the repo root, which rides along in version control.
 BENCH_FULL also splits each query's median into "build" (``fn()``: plan
-construction plus any eager jobs it runs) and "exec" (the noop write).
+construction plus any eager jobs it runs) and "exec" (the noop write), and
+records the median "jobs" and "tasks" that build and write ran together
+(one job group per query and pass, read from Spark's status tracker; a
+skipped stage's tasks do not count).
 
 Each query is materialized via a cheap full-evaluation action
 (``df.write.format("noop")``) so timing covers the whole plan without
@@ -39,6 +42,23 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from reconciliation_hive_data_spark import registry  # noqa: E402
 from reconciliation_hive_data_spark.session import get_spark  # noqa: E402
+
+
+def group_counts(sc, group: str) -> tuple[int, int]:
+    """(jobs, tasks) that ran under job group ``group``. Waits for the
+    listener bus to drain first, so the last job's stages are complete in
+    the status tracker; the tasks are those of completed stage attempts,
+    which leaves out skipped stages."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    tasks = 0
+    for job in jobs:
+        info = tracker.getJobInfo(job)
+        for stage in info.stageIds if info else ():
+            st = tracker.getStageInfo(stage)
+            tasks += st.numCompletedTasks if st else 0
+    return len(jobs), tasks
 
 
 def main() -> None:
@@ -72,6 +92,9 @@ def main() -> None:
     samples: dict[str, list[float]] = {name: [] for name in names}
     build_samples: dict[str, list[float]] = {name: [] for name in names}
     exec_samples: dict[str, list[float]] = {name: [] for name in names}
+    job_samples: dict[str, list[float]] = {name: [] for name in names}
+    task_samples: dict[str, list[float]] = {name: [] for name in names}
+    sc = spark.sparkContext
     failed: set[str] = set()
     n_passes = 0
     for rep in range(reps):
@@ -86,6 +109,8 @@ def main() -> None:
             spec = registry.get(name)
             if name in failed:
                 continue
+            group = f"bench:{name}:{rep}"
+            sc.setJobGroup(group, group)
             t0 = time.perf_counter()
             try:
                 df = spec.fn(spark, sf_dir)
@@ -98,6 +123,12 @@ def main() -> None:
             except Exception as exc:  # a failing query must not kill the bench
                 failed.add(name)
                 print(f"bench error in {name}: {exc}", file=sys.stderr)
+            finally:
+                sc._jsc.clearJobGroup()
+            if name not in failed:
+                jobs, tasks = group_counts(sc, group)
+                job_samples[name].append(jobs)
+                task_samples[name].append(tasks)
 
     def medians(by_name: dict[str, list[float]]) -> dict[str, float]:
         return {
@@ -124,6 +155,8 @@ def main() -> None:
         "queries": timings,
         "build": medians(build_samples),
         "exec": medians(exec_samples),
+        "jobs": medians(job_samples),
+        "tasks": medians(task_samples),
         "sf": sf,
         "n": n_passes,
         "cpus": eff_cpus,

@@ -18,6 +18,7 @@ import os
 from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType, StructType
 
 TABLES = (
     "region",
@@ -186,6 +187,40 @@ def _load_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 spark.conf.set(key, prev)
         return df.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
     return spark.read.parquet(table_path(sf_dir, name))
+
+
+def local_frame(
+    spark: SparkSession, rows: list[tuple], schema: str | StructType
+) -> DataFrame:
+    """A frame over driver-side ``rows``: the engine's one way to turn a
+    report, a spec table or a file list built on the driver into a
+    DataFrame. ``schema`` is a DDL string (``"k string, n bigint"``, every
+    column nullable, as ``spark.createDataFrame`` reads it) or a
+    ``StructType``, whose nullability is kept.
+
+    The rows go to the JVM as one ``pyarrow.Table``. Spark reads the Arrow
+    batches into a ``LocalRelation``, so the plan is a ``LocalTableScan``
+    and its rows are already in the JVM: no task starts a Python worker.
+    ``spark.createDataFrame(list, schema)`` instead plans ``Scan
+    ExistingRDD`` over ``sc.parallelize`` plus PySpark's identity ``map``,
+    a PythonRDD, so every scan of it runs ``defaultParallelism``
+    Python-worker tasks, even for 0 rows: a 23-row report plus a noop
+    write took a median 0.59 s that way and 0.10 s through Arrow (4
+    cores). PySpark takes the Arrow path for any
+    ``pyarrow.Table`` whatever ``spark.sql.execution.arrow.pyspark.enabled``
+    reads, so a session built elsewhere gets it too. A naive ``datetime``
+    in a timestamp column is read in the session time zone."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

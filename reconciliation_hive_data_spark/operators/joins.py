@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..canonical import money_sum, money_sum_sql, ts_str
-from ..catalog import load
+from ..catalog import load, local_frame
 from ..registry import query
 
 # ---------------------------------------------------------------------------
@@ -158,7 +158,8 @@ def join_theta(spark: SparkSession, sf_dir: str) -> DataFrame:
     table is a broadcast nested-loop side — tiny by construction, which is
     the only shape where a BNL join is acceptable at scale."""
     e = load(spark, sf_dir, "events")
-    bands = spark.createDataFrame(
+    bands = local_frame(
+        spark,
         [
             ("p00_050", 0.0, 50.0),
             ("p050_100", 50.0, 100.0),

@@ -31,7 +31,7 @@ from collections import Counter
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load
+from ..catalog import load, local_frame
 from ..registry import query
 from .llm import dot, duck_dot
 
@@ -735,8 +735,8 @@ def _bpe_words(docs: DataFrame) -> DataFrame:
     """Corpus → word-frequency table: the ONLY corpus-sized stage.
 
     Tokens are extracted from the RAW text as [a-zA-Z]+ runs and
-    lowercased AFTER extraction — never ``lower(text)`` first (r15 soak
-    find): Unicode case mapping is library-defined per engine, e.g.
+    lowercased AFTER extraction — never ``lower(text)`` first, because
+    Unicode case mapping is library-defined per engine, e.g.
     'İ' (U+0130) lowercases to 'i' + COMBINING DOT in the JVM but to
     plain ASCII 'i' in DuckDB's utf8proc, so pre-lowering forks the
     token set ('i','stanbul' vs 'istanbul') and with it every pair
@@ -797,14 +797,15 @@ def x_bpe_round(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((_bpe_expand(s1, merges), _bpe_expand(s2, merges), cnt) for s1, s2, cnt in post),
         key=lambda p: (-p[2], p[0], p[1]),
     )[:20]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(pair, s1, s2, cnt, rn) for rn, (s1, s2, cnt) in enumerate(top, 1)],
         "merged_pair string, s1 string, s2 string, cnt bigint, rn bigint",
     )
 
 
 # ---------------------------------------------------------------------------
-# x_bpe_rounds_n — N=3 unrolled BPE merge rounds (round 15, §7.6.4)
+# x_bpe_rounds_n — N=3 unrolled BPE merge rounds (SURVEY §7.6.4)
 # ---------------------------------------------------------------------------
 
 #: per-round merged-symbol markers — chr(1..3); the [a-z]-closed token
@@ -999,7 +1000,8 @@ def x_bpe_rounds_n(spark: SparkSession, sf_dir: str) -> DataFrame:
         for k, m in enumerate(merges, 1)
         if m is not None
     ] + [("pair", rn, *p) for rn, p in enumerate(post[:20], 1)]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (kind, rn, _bpe_expand(s1, merges), _bpe_expand(s2, merges), cnt)
             for kind, rn, s1, s2, cnt in rows
@@ -1009,7 +1011,7 @@ def x_bpe_rounds_n(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# x_bpe_apply — tokenize the corpus with the learned merges (round 15, §7.6.7)
+# x_bpe_apply — tokenize the corpus with the learned merges (SURVEY §7.6.7)
 # ---------------------------------------------------------------------------
 
 _BPE_APPLY_ORACLE = f"""
@@ -1104,7 +1106,8 @@ def x_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         tokens[token] += r.cnt
         total_chars += len(token) * r.cnt
     top = sorted(tokens.items(), key=lambda t: (-t[1], t[0]))[:20]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [("token", rn, tok, cnt) for rn, (tok, cnt) in enumerate(top, 1)]
         + [
             ("stat", 0, "total_tokens", sum(tokens.values())),
@@ -1115,7 +1118,7 @@ def x_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# x_bpe_pack — sequence packing on POST-BPE token counts (round 17, §7.12.2)
+# x_bpe_pack — sequence packing on POST-BPE token counts (SURVEY §7.12.2)
 # ---------------------------------------------------------------------------
 
 _BPE_PACK_CAP = 2048
@@ -1251,13 +1254,13 @@ def x_bpe_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     loop (``_bpe_learn``'s merges re-applied as a literal replace chain;
     the oracle reuses the shared rounds-CTE prefix, so the two engines
     cannot drift on the merges — the x_bpe_apply precedent). The per-doc
-    tokenizer is ``_bpe_words``' exact extract-then-lower form (the r15
-    'İ' lesson: lower() of a pure [a-zA-Z]+ token is engine-invariant;
-    pre-lowering is not). Docs with ZERO extractable words (or NULL text)
-    survive via the left join + COALESCE 0 — they consume no capacity but
-    still appear in packing on both engines, and a 0-token doc whose
-    running total sits exactly ON a cap boundary lands in the NEXT
-    sequence (floor(cum/cap); r16 DuckDB probe pin, cum=4 cap=4 → seq 1).
+    tokenizer is ``_bpe_words``' exact extract-then-lower form (lower()
+    of a pure [a-zA-Z]+ token is engine-invariant; pre-lowering is not,
+    see the 'İ' case there). Docs with ZERO extractable words (or NULL
+    text) survive via the left join + COALESCE 0 — they consume no
+    capacity but still appear in packing on both engines, and a 0-token
+    doc whose running total sits exactly ON a cap boundary lands in the
+    NEXT sequence (floor(cum/cap): cum=4 cap=4 → seq 1).
 
     Scale shape: the learn loop is x_bpe_rounds_n's (one corpus scan into
     the persisted zipf-small word table, one driver-collected pair
@@ -1267,9 +1270,9 @@ def x_bpe_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     replace-chain lengths — a projection, no join against the vocabulary
     — and x_pack_sequences' one exchange on the (lang, md5-mod-16 shard)
     composite window key — the 5-language skew funnel stays defeated, no
-    global sort. Determinism precondition (r16 window-ordering audit, same
-    as x_pack_sequences): doc_id is the table's unique non-null key, so
-    the ROWS-frame cumsum ordering is total. Core lives in :func:`bpe_pack_plan` — tests drive
+    global sort. Determinism precondition (the same as x_pack_sequences'):
+    doc_id is the table's unique non-null key, so the ROWS-frame cumsum
+    ordering is total. Core lives in :func:`bpe_pack_plan` — tests drive
     it with synthetic corpora for the independent-expectation pins
     (pure-Python BPE + packing replica, boundary zoo)."""
     return bpe_pack_plan(load(spark, sf_dir, "documents"))

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load
+from ..catalog import load, local_frame
 from ..registry import query
 from .llm import (
     DOCS_DUP_CTE,
@@ -214,8 +214,8 @@ def x_sim_brp_mllib(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (MLlib's fit itself raises on an empty dataset — empty_sweep ledger)
     probe_row = e.filter(F.col("vec_id") == 0).select("vec").head()
     if probe_row is None:
-        return spark.createDataFrame(
-            [], e.select("vec_id", "label").schema
+        return local_frame(
+            spark, [], e.select("vec_id", "label").schema
         ).withColumn("euclid_dist", F.lit(None).cast("double"))
     probe = probe_row[0]
     lsh = BucketedRandomProjectionLSH(

@@ -38,7 +38,7 @@ from ..canonical import (
     money_sum,
     money_sum_sql,
 )
-from ..catalog import load
+from ..catalog import load, local_frame
 from ..registry import query
 
 # ---------------------------------------------------------------------------
@@ -552,7 +552,7 @@ def recon_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def cols(df: DataFrame) -> DataFrame:
         rows = [(f.name, _type_class(f.dataType.simpleString())) for f in df.schema.fields]
-        return spark.createDataFrame(rows, "col_name string, type_class string")
+        return local_frame(spark, rows, "col_name string, type_class string")
 
     s = cols(orders).alias("s")
     t = cols(tgt).alias("t")

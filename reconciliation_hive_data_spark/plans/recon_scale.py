@@ -60,7 +60,7 @@ from ..canonical import (
     ts_str,
     ts_str_sql,
 )
-from ..catalog import load
+from ..catalog import load, local_frame
 from ..registry import query
 from .api import compare_sides
 from .recon import _ORDER_HASH_COLS, ORDERS_TGT_CTE, orders_target
@@ -372,7 +372,7 @@ def recon_footer_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         p.removeprefix("file:")
         for p in spark.read.parquet(li_path).inputFiles()
     ]
-    fdf = spark.createDataFrame([(p,) for p in files], "path string").repartition(
+    fdf = local_frame(spark, [(p,) for p in files], "path string").repartition(
         min(len(files), 32)
     )
     want = _FOOTER_COLS
@@ -1353,7 +1353,8 @@ def recon_schema_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         merged = spark.read.option("mergeSchema", "true").parquet(root)
     except AnalysisException:  # zero files in BOTH vintages (empty source)
-        merged = spark.createDataFrame(
+        merged = local_frame(
+            spark,
             [],
             ", ".join(f"{c} {t}" for c, t in _SE_CATALOG)
             + ", vintage string",
@@ -1374,8 +1375,8 @@ def recon_schema_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"stack({len(catalog_cols)}, {stack}) AS (col_name, n_nonnull)"
         ),
     )
-    presence = spark.createDataFrame(
-        present, "col_name string, vintage string"
+    presence = local_frame(
+        spark, present, "col_name string, vintage string"
     ).withColumn("present", F.lit(1))
     owned = F.col("present") == 1
     zero = F.lit(0).cast("bigint")
@@ -1392,9 +1393,7 @@ def recon_schema_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    spec = spark.createDataFrame(
-        [(c,) for c in catalog_cols], "col_name string"
-    )
+    spec = local_frame(spark, [(c,) for c in catalog_cols], "col_name string")
     return spec.join(F.broadcast(grouped), "col_name", "left").select(
         "col_name",
         F.coalesce("g_rows", zero).cast("bigint").alias("n_rows"),
@@ -1527,7 +1526,7 @@ def recon_partition_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
         try:
             df = spark.read.parquet(path)
         except AnalysisException:  # fileless vintage (empty side)
-            return spark.createDataFrame([], schema)
+            return local_frame(spark, [], schema)
         if with_month and "o_month" not in df.columns:
             # an all-NULL-key v2 writes ONLY the default partition dir;
             # discovery then sees no partition column at all
@@ -1685,7 +1684,7 @@ def recon_layout_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         try:
             df = spark.read.parquet(path)
         except AnalysisException:  # fileless layout (empty source)
-            return spark.createDataFrame([], "m string, n bigint, f bigint")
+            return local_frame(spark, [], "m string, n bigint, f bigint")
         return (
             df.select(
                 month_col(df).alias("m"),
@@ -1858,7 +1857,7 @@ def recon_compact_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         try:
             df = spark.read.parquet(path)
         except AnalysisException:  # fileless table (empty source)
-            return spark.createDataFrame([], "m string, fname string")
+            return local_frame(spark, [], "m string, fname string")
         mcol = (
             F.col("o_month").cast("string")
             if "o_month" in df.columns
